@@ -38,6 +38,22 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$|project/'; then
     exit 1
   fi
   echo "[precommit_guard] compile green." >&2
+  # One session builder, one engine install: sessions are built only by
+  # graft.GraftSession, and gate bodies never install or register
+  # engine parts (Registry hands each gate its own installed session).
+  # Refuse staged lines that regrow either.
+  regrow=$(git diff --cached -U0 -- src | awk '
+    /^\+\+\+ / { f = substr($0, 7); next }
+    !/^\+/ { next }
+    /SparkSession\.builder/ && f !~ /\/GraftSession\.scala$/ { print f ": " substr($0, 2) }
+    /(install|register)\(/ && f ~ /^src\/main\/scala\/graft\/queries\// { print f ": " substr($0, 2) }')
+  if [ -n "$regrow" ]; then
+    echo "[precommit_guard] REFUSING COMMIT: build sessions with" >&2
+    echo "[precommit_guard] GraftSession.local and keep install/register" >&2
+    echo "[precommit_guard] calls out of gate bodies:" >&2
+    echo "$regrow" >&2
+    exit 1
+  fi
   # GATES.md census: regenerate from the registry so the committed
   # census can never lag it. A diff means the registry changed without
   # the census — regenerate, auto-stage when GATES.md itself is part

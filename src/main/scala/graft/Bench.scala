@@ -88,24 +88,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The app-status store collects per-task metrics even with the UI
-      // disabled (defaults: 1000 jobs/stages, 100k tasks, 1000 SQL
-      // executions). Over a 200-gate run that is hundreds of MB of
-      // retained listener state — heap grows, GC time grows, and late
-      // gates read slower than early ones (r18's position-correlated
-      // drift: terciles 1.01x/1.10x/1.17x). Cap retention to what a
-      // post-mortem actually needs.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.sql.ui.retainedExecutions", "25")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     // SPARK_GRAFT_CONF="k=v;k=v": extra runtime confs for bisects (e.g.
     // the planner-rule kill-switches spark.graft.zonemap.prune.enabled /
     // countmeta / minmaxmeta) without editing the bench. Driver-unset.

@@ -14,7 +14,10 @@ final case class QDef(
     headline: Boolean = false)
 
 object Registry {
-  def all: Seq[QDef] =
+  /** Every gate, each running on its own session
+    * ([[GraftSession.isolated]]) so its plan and result do not depend
+    * on which gates ran before it. */
+  def all: Seq[QDef] = (
     queries.TimeSeriesQueries.defs ++
       queries.RelationalQueries.defs ++
       queries.CepQueries.defs ++
@@ -28,6 +31,7 @@ object Registry {
       queries.BucketQueries.defs ++
       queries.SketchQueries.defs ++
       queries.SurfaceQueries.defs
+  ).map(q => q.copy(fn = (spark, dir) => q.fn(GraftSession.isolated(spark), dir)))
 
   def byName(name: String): QDef = all.find(_.name == name).get
 }

@@ -11,15 +11,15 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** events.parquet's `ts` physical type has varied across driver-generated
-    * datasets: TIMESTAMP(NANOS) (read as long via the legacy conf, truncated
-    * to micros — DuckDB's TIMESTAMP_NS → TIMESTAMP truncation), or plain
+    * datasets: TIMESTAMP(NANOS) (read as long via the legacy nanosAsLong
+    * conf the installed engine sets — graft.plans.GraftExtensions.Confs —
+    * truncated to micros — DuckDB's TIMESTAMP_NS → TIMESTAMP truncation), or plain
     * TIMESTAMP(MICROS) without UTC adjustment (read as TIMESTAMP_NTZ).
     * Normalize every variant to session-TZ TimestampType (session TZ is
     * pinned to UTC by every entrypoint, so the NTZ cast is value-preserving
     * and matches DuckDB reading the same file).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = apply(spark, dir, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

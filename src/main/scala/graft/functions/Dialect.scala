@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Row, SparkSession}
+import org.apache.spark.sql.{Encoder, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
+import org.apache.spark.sql.internal.SQLConf
 
 import java.sql.Timestamp
 import scala.math.Ordering.Implicits._
@@ -33,9 +35,9 @@ import scala.math.Ordering.Implicits._
   * one array row); the window form remains the scale path (SURVEY
   * §2.3 T3 design note).
   *
-  * AGO resolves against an explicit frozen clock when given — queries
-  * in the correctness gate must be deterministic; production use passes
-  * now = None for the wall clock.
+  * AGO resolves against the frozen clock in the session conf
+  * [[ClockKey]] when set — queries in the correctness gate must be
+  * deterministic; production sessions leave it unset for the wall clock.
   */
 object Dialect {
 
@@ -62,7 +64,7 @@ object Dialect {
     if (n > cap) throw new IllegalStateException(
       s"create_time_series: a single series exceeds $cap elements. The array form holds " +
         "one key's whole history in one row — for histories this large use the window-form " +
-        "operators (graft.operators.TimeSeries), or raise maxSeriesElements in Dialect.register.")
+        "operators (graft.operators.TimeSeries).")
 
   /** Sorted-series UDAF: the merge is list concatenation and the sort
     * happens once in finish, so partial aggregation order (cluster
@@ -163,55 +165,80 @@ object Dialect {
     case other => throw new IllegalArgumentException(s"ago(): cannot parse duration '$other'")
   }
 
-  /** Register the dialect on a session. `now` freezes AGO()/TS_NOW()
-    * for deterministic queries; None uses the wall clock per call.
-    * `maxSeriesElements` bounds how many observations one key's series
-    * may hold (the array form's per-key memory knob — exceeded series
-    * fail fast instead of OOMing an executor downstream).
-    * Also exposes the engine's native expressions (VecDot,
-    * WordShingles, RollingPolyHash) as SQL functions — codegen'd /
+  /** Session conf that freezes AGO()/TS_NOW(): a `yyyy-MM-dd HH:mm:ss`
+    * instant (java.sql.Timestamp.valueOf). Read when a query is
+    * ANALYZED, so a deterministic query sets it on its own session;
+    * unset means the wall clock per call. */
+  val ClockKey = "spark.graft.dialect.now"
+
+  /** How many observations one key's series may hold (the array form's
+    * per-key memory bound — exceeded series fail fast instead of OOMing
+    * an executor downstream). */
+  val MaxSeriesElements = 1000000
+
+  /** The series UDAF under an explicit cap (the cap test's handle). */
+  private[graft] def seriesAgg(cap: Int): UserDefinedFunction = udaf(new SeriesAgg(cap))
+
+  private def frozenNow(): Option[Timestamp] =
+    Option(SQLConf.get.getConfString(ClockKey, null)).map(Timestamp.valueOf)
+
+  private def clock(frozen: Option[Timestamp]): () => Timestamp =
+    () => frozen.getOrElse(new Timestamp(System.currentTimeMillis()))
+
+  /** The dialect's SQL functions by name, installed by
+    * [[graft.plans.GraftExtensions]]. Also exposes the engine's native
+    * expressions (VecDot, WordShingles, RollingPolyHash) — codegen'd /
     * compiled-loop implementations resolved straight from SQL text, no
     * UDF SerDe.
     */
-  def register(spark: SparkSession, now: Option[Timestamp] = None,
-      maxSeriesElements: Int = 1000000): Unit = {
-    import org.apache.spark.sql.GraftShim.registerFunction
-    registerFunction(spark, "vec_dot", es => {
-      require(es.length == 2, s"vec_dot requires 2 arguments, got ${es.length}")
-      // cast to array<double> so SQL callers with array<float>/array<int>
-      // get correct numbers (raw ArrayData reads would return garbage)
-      // and non-castable inputs fail at analysis time
-      VecDot(VectorFunctions.asDoubleArray(es(0)), VectorFunctions.asDoubleArray(es(1)))
-    })
-    registerFunction(spark, "word_shingles", es => {
-      // n must be a literal: the shingle width shapes the expression
-      // itself, so a column reference (or non-deterministic foldable)
-      // has no meaningful analysis-time value
-      require(es.length == 2, s"word_shingles requires 2 arguments, got ${es.length}")
-      require(es(1).foldable && es(1).deterministic,
-        "word_shingles requires a literal shingle size n")
-      val n = es(1).eval() match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"word_shingles: n must be an integer literal, got $other")
-      }
-      WordShingles(es(0), n)
-    })
-    registerFunction(spark, "rolling_poly_hash", es => {
-      require(es.length == 1, s"rolling_poly_hash requires 1 argument, got ${es.length}")
-      RollingPolyHash(es(0))
-    })
-    spark.udf.register("create_time_series", udaf(new SeriesAgg(maxSeriesElements)))
-    spark.udf.register("create_time_series_str", udaf(new SeriesStrAgg(maxSeriesElements)))
-    spark.udf.register("interpolate_linear",
-      (series: Seq[Row], grid: Seq[Timestamp]) => interpLinear(series, grid))
-    spark.udf.register("interpolate_locf",
-      (series: Seq[Row], grid: Seq[Timestamp]) => interpLocf(series, grid))
-    spark.udf.register("bin", (t: Timestamp, s: Long) => binTs(t, s))
-    def nowTs(): Timestamp = now.getOrElse(new Timestamp(System.currentTimeMillis()))
-    spark.udf.register("ts_now", () => nowTs())
-    spark.udf.register("ago",
-      (d: String) => new Timestamp(nowTs().getTime - parseAgoMicros(d) / 1000L))
+  val functions: Seq[(String, Seq[Expression] => Expression)] = {
+    import org.apache.spark.sql.GraftShim.udfBuilder
+    Seq(
+      "vec_dot" -> { es =>
+        require(es.length == 2, s"vec_dot requires 2 arguments, got ${es.length}")
+        // cast to array<double> so SQL callers with array<float>/array<int>
+        // get correct numbers (raw ArrayData reads would return garbage)
+        // and non-castable inputs fail at analysis time
+        VecDot(VectorFunctions.asDoubleArray(es(0)), VectorFunctions.asDoubleArray(es(1)))
+      },
+      "word_shingles" -> { es =>
+        // n must be a literal: the shingle width shapes the expression
+        // itself, so a column reference (or non-deterministic foldable)
+        // has no meaningful analysis-time value
+        require(es.length == 2, s"word_shingles requires 2 arguments, got ${es.length}")
+        require(es(1).foldable && es(1).deterministic,
+          "word_shingles requires a literal shingle size n")
+        val n = es(1).eval() match {
+          case i: Int => i
+          case l: Long => l.toInt
+          case other => throw new IllegalArgumentException(
+            s"word_shingles: n must be an integer literal, got $other")
+        }
+        WordShingles(es(0), n)
+      },
+      "rolling_poly_hash" -> { es =>
+        require(es.length == 1, s"rolling_poly_hash requires 1 argument, got ${es.length}")
+        RollingPolyHash(es(0))
+      },
+      "create_time_series" -> udfBuilder("create_time_series",
+        udaf(new SeriesAgg(MaxSeriesElements))),
+      "create_time_series_str" -> udfBuilder("create_time_series_str",
+        udaf(new SeriesStrAgg(MaxSeriesElements))),
+      "interpolate_linear" -> udfBuilder("interpolate_linear",
+        udf((series: Seq[Row], grid: Seq[Timestamp]) => interpLinear(series, grid))),
+      "interpolate_locf" -> udfBuilder("interpolate_locf",
+        udf((series: Seq[Row], grid: Seq[Timestamp]) => interpLocf(series, grid))),
+      "bin" -> udfBuilder("bin", udf((t: Timestamp, s: Long) => binTs(t, s))),
+      // the clock is read per ANALYSIS, so these two build their UDF
+      // at lookup time
+      "ts_now" -> { es =>
+        val now = clock(frozenNow())
+        udfBuilder("ts_now", udf(() => now()))(es)
+      },
+      "ago" -> { es =>
+        val now = clock(frozenNow())
+        udfBuilder("ago", udf((d: String) =>
+          new Timestamp(now().getTime - parseAgoMicros(d) / 1000L)))(es)
+      })
   }
 }

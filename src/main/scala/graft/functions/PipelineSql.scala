@@ -133,34 +133,30 @@ object PipelineSql {
   private def csv(s: String): Seq[String] =
     s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
-  /** Install the pipeline table functions on `spark`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.GraftShim.{analyzedPlan, registerTableFunction}
+  /** The pipeline table functions by name, installed by
+    * [[graft.plans.GraftExtensions]]. Builders resolve tables and run
+    * operators on the ACTIVE session — the one analyzing the calling
+    * query (deferred effects: the one executing it). */
+  lazy val tableFunctions: Seq[(String, Seq[Expression] => LogicalPlan)] =
+    build(SparkSession.active)
+
+  private def build(spark: => SparkSession): Seq[(String, Seq[Expression] => LogicalPlan)] = {
+    import org.apache.spark.sql.GraftShim.analyzedPlan
+    val out = scala.collection.mutable.ListBuffer.empty[(String, Seq[Expression] => LogicalPlan)]
 
     def table(fn: String, e: Expression): DataFrame =
       spark.table(str(fn, e, "the table argument"))
 
     def reg(name: String)(builder: Seq[Expression] => DataFrame): Unit =
-      registerTableFunction(spark, name, es => analyzedPlan(builder(es)))
+      out += name -> (es => analyzedPlan(builder(es)))
 
     // side-effecting maintenance TVFs: the builder (analysis time)
     // only parses arguments and declares the receipt schema; the
     // operation runs when the plan EXECUTES (graft.plans.DeferredEffect
     // — EXPLAIN and failed outer analysis leave the lake untouched)
-    graft.plans.DeferredEffect.install(spark)
-    // zone-map file skipping for range predicates over lake scans —
-    // planner-automatic (the read_range TVF stays the explicit form)
-    graft.plans.ZoneMapPrune.install(spark)
-    // COUNT(*) over a lake scan answered from the manifest's recorded
-    // row counts (the lake_row_count TVF stays the explicit form)
-    graft.plans.LakeCountFromManifest.install(spark)
-    // unfiltered MIN/MAX over a lake scan folded from the manifest's
-    // per-file zone maps (the same metadata ZoneMapPrune skips files by)
-    graft.plans.LakeMinMaxFromManifest.install(spark)
     def regDeferred(name: String, schema: org.apache.spark.sql.types.StructType)(
         builder: Seq[Expression] => () => Seq[Seq[Any]]): Unit =
-      registerTableFunction(spark, name,
-        es => graft.plans.DeferredEffect.plan(schema)(builder(es)))
+      out += name -> (es => graft.plans.DeferredEffect.plan(schema)(builder(es)))
 
     // dedup family
     reg("minhash_lsh_pairs") { es =>
@@ -618,8 +614,9 @@ object PipelineSql {
     reg("lake_row_count") { es =>
       if (es.length < 1 || es.length > 2)
         fail("lake_row_count", s"expects 1 or 2 arguments, got ${es.length}")
-      import spark.implicits._
-      Seq(graft.sources.VersionedLake.rowCount(spark,
+      val session = spark
+      import session.implicits._
+      Seq(graft.sources.VersionedLake.rowCount(session,
         str("lake_row_count", es(0), "lake directory"),
         es.lift(1).map(int("lake_row_count", _, "version"))))
         .toDF("n_rows")
@@ -1309,5 +1306,6 @@ object PipelineSql {
         Seq(Seq(oldV, replayed, greenDir))
       }
     }
+    out.toList
   }
 }

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * array<double> at analysis time — previously ArrayData.getDouble
   * reinterpreted 4-byte float slots as doubles and returned garbage
   * without error. The public entry points ([[VectorFunctions.vecDot]]
-  * and the SQL builder in Dialect.register) wrap arguments in a Cast
+  * and the SQL builder in Dialect.functions) wrap arguments in a Cast
   * to array<double>, so castable inputs (array<float>, array<int>)
   * just work and the optimizer's SimplifyCasts erases the no-op cast
   * on the already-double hot paths. Null ELEMENTS propagate to a null

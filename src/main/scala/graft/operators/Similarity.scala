@@ -451,6 +451,9 @@ object Similarity {
       vec: String, k: Int, nprobes: Seq[Int], assigned: DataFrame,
       centroids: DataFrame): DataFrame = {
     require(nprobes.nonEmpty, "annRecall needs at least one nprobe")
+    // one row per DEPTH: a repeated depth would explode every candidate
+    // twice and double-count its hits
+    val depths = nprobes.distinct
     import org.apache.spark.sql.expressions.Window
     val truth = graft.CacheRegistry.retain(
       cosineTopK(corpus, queries, id, vec, k)
@@ -466,7 +469,7 @@ object Similarity {
     // neighbor_id) ranking, and the truth semi-join are exactly what
     // the per-depth searches computed, so hits are bit-identical — the
     // s_ann_recall oracle hash pins that.
-    val maxProbe = nprobes.max
+    val maxProbe = depths.max
     val probed = quantizedProbeRanked(queries, id, vec, maxProbe, centroids)
     val cands = assigned.withColumnRenamed("doc", "neighbor_id")
       .join(broadcast(probed), Seq("cell"))
@@ -476,7 +479,7 @@ object Similarity {
       .withColumn("cos", dotN(col("qv"), col("nv")))
     val hitsByDepth = cands
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("crank"),
-        explode(array(nprobes.map(n => lit(n.toLong)): _*)).as("nprobe"))
+        explode(array(depths.map(n => lit(n.toLong)): _*)).as("nprobe"))
       .filter(col("crank") <= col("nprobe"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("nprobe"), col("query_id"))
@@ -488,7 +491,7 @@ object Similarity {
     // (the per-depth agg form produced hits = 0, not an absent row)
     val spark = corpus.sparkSession
     import spark.implicits._
-    nprobes.map(_.toLong).toDF("nprobe")
+    depths.map(_.toLong).toDF("nprobe")
       .join(hitsByDepth, Seq("nprobe"), "left")
       .select(col("nprobe"), lit(k.toLong).as("k"),
         lit(nQueries).as("n_queries"),

@@ -127,13 +127,6 @@ case class LakeCountFromManifest(spark: SparkSession) extends Rule[LogicalPlan] 
 
 object LakeCountFromManifest {
   val EnabledKey = "spark.graft.countmeta.enabled"
-
-  /** Live-session installation, idempotent. */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[LakeCountFromManifest]))
-      spark.experimental.extraOptimizations = existing :+ LakeCountFromManifest(spark)
-  }
 }
 
 /** Optimizer rule that answers unfiltered `MIN(col)` / `MAX(col)` (and
@@ -303,11 +296,4 @@ object LakeMinMaxFromManifest {
   /** 2^53 — the largest magnitude at which every long is exactly
     * representable as a double (the manifest's stats encoding). */
   val MaxExactLong: Double = 9007199254740992.0
-
-  /** Live-session installation, idempotent. */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[LakeMinMaxFromManifest]))
-      spark.experimental.extraOptimizations = existing :+ LakeMinMaxFromManifest(spark)
-  }
 }

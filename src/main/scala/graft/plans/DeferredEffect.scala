@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
@@ -73,13 +72,6 @@ object DeferredEffect {
         DeferredEffectExec(out, () => p.result) :: Nil
       case _ => Nil
     }
-  }
-
-  /** Idempotently register [[Strategy]] on the session. */
-  def install(spark: SparkSession): Unit = {
-    val have = spark.experimental.extraStrategies
-    if (!have.exists(_.isInstanceOf[Strategy.type]))
-      spark.experimental.extraStrategies = have :+ Strategy
   }
 
   /** A receipt-shaped leaf: `schema` now, `thunk` at execution. */

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -141,28 +140,4 @@ object RangeJoinBinRewrite {
   private final case class Containment(
       t: AttributeReference, s: AttributeReference, e: AttributeReference,
       pointIsLeft: Boolean, pointChild: LogicalPlan, intervalChild: LogicalPlan)
-
-  /** Live-session installation (Verify/Bench run on a driver-owned
-    * session where `spark.sql.extensions` is already fixed):
-    * idempotently append to the experimental optimizer batch. */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[RangeJoinBinRewrite]))
-      spark.experimental.extraOptimizations =
-        existing :+ RangeJoinBinRewrite(spark)
-  }
-}
-
-/** Cluster-deploy entry point:
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(sp => RangeJoinBinRewrite(sp))
-    ext.injectOptimizerRule(sp => ZoneMapPrune(sp))
-    ext.injectOptimizerRule(sp => LakeCountFromManifest(sp))
-    ext.injectOptimizerRule(sp => LakeMinMaxFromManifest(sp))
-    // plans the deferred-effect leaf the side-effecting maintenance
-    // TVFs build (PipelineSql.register also installs it live)
-    ext.injectPlannerStrategy(_ => DeferredEffect.Strategy)
-  }
 }

@@ -371,12 +371,4 @@ object ZoneMapPrune {
   private final case class StrHi(v: String) extends StrCon
   private final case class StrIn(vs: Seq[String]) extends StrCon
   private final case class StrPrefix(v: String) extends StrCon
-
-  /** Live-session installation, idempotent (same discipline as
-    * [[RangeJoinBinRewrite.install]]). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[ZoneMapPrune]))
-      spark.experimental.extraOptimizations = existing :+ ZoneMapPrune(spark)
-  }
 }

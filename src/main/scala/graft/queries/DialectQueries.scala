@@ -3,8 +3,6 @@ package graft.queries
 import graft.{QDef, Tables}
 import graft.functions.Dialect
 
-import java.sql.Timestamp
-
 /** The Timestream dialect executed as SQL TEXT (SURVEY §7 Phase 3) —
   * the engine-native surface a reference user would type. The flagship
   * is near-verbatim timestream-queries/queries.txt:2-19: series built
@@ -22,15 +20,14 @@ object DialectQueries {
   /** Frozen "now" for gate queries: just past the last event in the
     * fixtures' January 2024 span. Shared with ExportQueries' ad-hoc
     * relative-window export so every ago()-anchored gate agrees on the
-    * clock. */
-  private[queries] val FrozenNow = Timestamp.valueOf("2024-01-31 00:00:00")
+    * clock. Set as [[Dialect.ClockKey]] on the gate's own session. */
+  private[queries] val FrozenNow = "2024-01-31 00:00:00"
 
   def defs: Seq[QDef] = Seq(
 
     QDef(
       "q_sql_flagship",
       (s, dir) => {
-        Dialect.register(s)
         Tables.events(s, dir).createOrReplaceTempView("events")
         // the series-building CTE is consumed by BOTH UNNEST branches;
         // Spark inlines CTEs, so materialize it once (cached view)
@@ -66,7 +63,7 @@ object DialectQueries {
     QDef(
       "q_sql_ago_bin",
       (s, dir) => {
-        Dialect.register(s, now = Some(FrozenNow))
+        s.conf.set(Dialect.ClockKey, FrozenNow)
         Tables.events(s, dir).createOrReplaceTempView("events")
         s.sql(
           """SELECT user_id, bin(ts, 86400) AS day,

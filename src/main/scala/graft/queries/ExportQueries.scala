@@ -427,7 +427,7 @@ object ExportQueries {
     QDef(
       "c7_adhoc_export",
       (s, dir) => {
-        graft.functions.Dialect.register(s, now = Some(DialectQueries.FrozenNow))
+        s.conf.set(graft.functions.Dialect.ClockKey, DialectQueries.FrozenNow)
         val b = s.sql(
           "SELECT date_format(ago('48h'), 'yyyy-MM-dd HH:mm:ss') AS st, " +
             "date_format(ago('24h'), 'yyyy-MM-dd HH:mm:ss') AS en").head()
@@ -584,7 +584,6 @@ object ExportQueries {
       "q_sql_time_travel",
       (s, dir) => {
         val lake = versionedLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         def leg(v: Int) =
           s"""SELECT CAST($v AS BIGINT) AS version,
              |       CAST(event_date AS STRING) AS event_date,
@@ -624,7 +623,6 @@ object ExportQueries {
       "q_sql_version_diff",
       (s, dir) => {
         val lake = versionedLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         s.sql(
           s"""SELECT _change, CAST(event_date AS STRING) AS event_date,
              |       count(*) AS n_rows,
@@ -676,7 +674,6 @@ object ExportQueries {
       "q_sql_read_range",
       (s, dir) => {
         val lake = versionedLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         s.sql(
           s"""SELECT CAST(event_date AS STRING) AS event_date,
              |       count(*) AS n_rows,
@@ -696,7 +693,7 @@ object ExportQueries {
 
     // The same range answered with NO explicit range TVF: a plain
     // WHERE over time_travel(...), file-skipped AUTOMATICALLY by the
-    // ZoneMapPrune optimizer rule (PipelineSql.register installs it) —
+    // ZoneMapPrune optimizer rule (part of the installed engine) —
     // the planner half of read_range. Hash-equality against the same
     // oracle is the CORRECTNESS guard an optimizer rule needs: the
     // rewrite may only move I/O, never rows (planning-time skip sets
@@ -706,7 +703,6 @@ object ExportQueries {
       "q_sql_zonemap_auto",
       (s, dir) => {
         val lake = versionedLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         val v = graft.sources.VersionedLake.currentVersion(lake)
         s.sql(
           s"""SELECT CAST(event_date AS STRING) AS event_date,
@@ -737,7 +733,6 @@ object ExportQueries {
       "q_sql_count_meta",
       (s, dir) => {
         val lake = versionedLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         def bare(v: Int) = s.sql(
           s"""SELECT CAST($v AS BIGINT) AS version, count(*) AS n_rows
              |FROM time_travel('$lake', $v)""".stripMargin)
@@ -779,7 +774,6 @@ object ExportQueries {
       "q_sql_bloom_auto",
       (s, dir) => {
         val lake = versionedLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         val v = graft.sources.VersionedLake.currentVersion(lake)
         val probe = Tables.events(s, dir)
           .filter(col("event_id") % 13 =!= 0)
@@ -813,7 +807,6 @@ object ExportQueries {
       "q_sql_minmax_meta",
       (s, dir) => {
         val lake = versionedLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         def leg(tag: Int, v: Int, where: String) = s.sql(
           s"""SELECT CAST($tag AS BIGINT) AS version,
              |       CAST(round(min(value) * 100) AS BIGINT) AS min_cents,
@@ -861,7 +854,6 @@ object ExportQueries {
       "q_sql_zonemap_string",
       (s, dir) => {
         val lake = stringZoneLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         val v = graft.sources.VersionedLake.currentVersion(lake)
         s.sql(
           s"""SELECT * FROM (
@@ -1210,7 +1202,6 @@ object ExportQueries {
       "s27_lake_col_stats",
       (s, dir) => {
         val lake = versionedLakeFixture(s, dir)
-        graft.functions.PipelineSql.register(s)
         s.sql(
           s"""SELECT CAST(partition AS STRING) AS event_date, n_rows,
              |       min, max
@@ -1239,7 +1230,6 @@ object ExportQueries {
             val ev = Tables.events(s, dir)
               .withColumn("event_date", to_date(col("ts")).cast("string"))
             graft.sources.VersionedLake.create(ev, s"$o/lake", "event_date")
-            graft.functions.PipelineSql.register(s)
             val receipt = s.sql(
               s"SELECT * FROM lake_expire_below('$o/lake', '2024-01-15')")
               .collect()
@@ -1300,7 +1290,6 @@ object ExportQueries {
               .withColumn("event_date", to_date(col("ts")).cast("string"))
             graft.sources.VersionedLake.create(
               ev.repartition(6), s"$o/lake", "event_date")
-            graft.functions.PipelineSql.register(s)
             val receipt = s.sql(
               s"""SELECT * FROM
                  |lake_zorder('$o/lake', 'event_date', 'value, user_id', 4)"""
@@ -1324,7 +1313,6 @@ object ExportQueries {
           }
           s"$out/lake"
         }
-        graft.functions.PipelineSql.register(s)
         def leg(v: Int) = s.sql(
           s"""SELECT CAST($v AS BIGINT) AS version,
              |       CAST(event_date AS STRING) AS event_date,

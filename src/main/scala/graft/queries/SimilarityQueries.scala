@@ -894,7 +894,6 @@ object SimilarityQueries {
     QDef(
       "s30_ann_rotate",
       (s, dir) => {
-        graft.functions.PipelineSql.register(s)
         val emb = Tables.embeddings(s, dir)
         val ix = Fixtures.dir("ann_lake_rotate", dir) { o =>
           graft.sources.AnnLake.create(emb.filter(col("vec_id") % 3 === 0),
@@ -927,7 +926,6 @@ object SimilarityQueries {
     QDef(
       "s35_ann_pq_rotate",
       (s, dir) => {
-        graft.functions.PipelineSql.register(s)
         val emb = Tables.embeddings(s, dir)
         val ix = Fixtures.dir("ann_pq_rotate", dir) { o =>
           graft.sources.AnnLake.createPq(emb.filter(col("vec_id") % 3 === 0),

@@ -162,7 +162,6 @@ object TemporalQueries {
     QDef(
       "j_range_rewrite",
       (s, dir) => {
-        graft.plans.RangeJoinBinRewrite.install(s)
         val l = clicks(s, dir)
         val w = errors(s, dir)
           .select(col("user_id").as("uid"), col("ts").as("w_start"),

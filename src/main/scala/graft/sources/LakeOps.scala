@@ -176,15 +176,11 @@ object LakeOps {
         .filter(f => f.isDirectory && f.getName.startsWith(partitionCol + "="))
         .map(_.getName.substring(partitionCol.length + 1)).toSet
       if (stagedPartitions.nonEmpty) {
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          spark.read.parquet(staging)
-            .write.mode("overwrite").partitionBy(partitionCol).parquet(lakeDir)
-        } finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+        // per-write option: the session conf stays untouched for
+        // queries running concurrently on the same session
+        spark.read.parquet(staging)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy(partitionCol).parquet(lakeDir)
       }
       // partitions the change-set emptied entirely: dynamic overwrite
       // never saw them, so drop their directories (metadata-only).

@@ -1671,10 +1671,13 @@ object VersionedLake {
     * maps — what makes `WHERE col BETWEEN lo AND hi` over a
     * `time_travel(...)`/lake read skip files AUTOMATICALLY instead of
     * only through the opt-in `read_range` TVF. Weak keys: a dropped
-    * DataFrame releases its entry with its relation. */
-  private val zoneInfo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[AnyRef, (String, Int)]())
+    * DataFrame releases its entry with its relation. Keys compare by
+    * IDENTITY: relations over the same files are equal, and an equal
+    * key would keep the first relation's weak reference, so the entry
+    * would vanish when that relation is collected while a later equal
+    * one is still being planned. */
+  private val zoneInfo: java.util.concurrent.ConcurrentMap[AnyRef, (String, Int)] =
+    new com.google.common.collect.MapMaker().weakKeys().makeMap()
 
   private[graft] def zoneInfoFor(relation: AnyRef): Option[(String, Int)] =
     Option(zoneInfo.get(relation))

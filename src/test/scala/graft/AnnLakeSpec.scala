@@ -102,7 +102,6 @@ class AnnLakeSpec extends SparkSpec {
     assert(filt.length == 30)
     assert(filt.forall(_.getLong(2) % 5 == 0))
     // TVF parity
-    graft.functions.PipelineSql.register(spark)
     queries.createOrReplaceTempView("annpq_q")
     val viaSql = spark.sql(
       s"SELECT * FROM ann_lake_search_pq('annpq_q', 'vec_id', 'embedding', '$r', 10, 8)")
@@ -135,7 +134,6 @@ class AnnLakeSpec extends SparkSpec {
   }
 
   test("ann_lake_search TVF equals the Scala API") {
-    graft.functions.PipelineSql.register(spark)
     val q = Tables.embeddings(spark, sf("sf0.001")).filter(col("vec_id") < 5)
     q.createOrReplaceTempView("ann_q")
     val viaSql = spark.sql(
@@ -182,7 +180,6 @@ class AnnLakeSpec extends SparkSpec {
     val stats = AnnLake.cellStats(spark, root).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     // SQL form sees the same table
-    graft.functions.PipelineSql.register(spark)
     assert(spark.sql(s"SELECT * FROM ann_cell_stats('$root')").collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap == stats)
     assert(stats.values.sum == emb.count(), stats.toString)
@@ -597,7 +594,6 @@ class AnnLakeSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(rows.map(_.toSeq).toSet == brute && rows.nonEmpty)
     // SQL form
-    graft.functions.PipelineSql.register(spark)
     queries.createOrReplaceTempView("annf_q")
     allow.createOrReplaceTempView("annf_allow")
     assert(spark.sql(

@@ -150,7 +150,6 @@ class CurationSpec extends SparkSpec {
       assert(c == d && sz == 1L && sp == perDoc(d), s"singleton $d diverged")
     }
     // SQL TVF parity
-    graft.functions.PipelineSql.register(spark)
     docs.createOrReplaceTempView("lss_docs")
     val viaSql = spark.sql(
       "SELECT * FROM leakage_safe_split('lss_docs', 'doc_id', 'text', 3, 0.8D, 80, 10)")

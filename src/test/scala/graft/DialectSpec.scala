@@ -17,7 +17,6 @@ class DialectSpec extends SparkSpec {
     status = "event_type", step = "1 HOUR")
 
   test("SQL-text flagship equals the window-formulated flagship (sf0.001)") {
-    Dialect.register(spark)
     Tables.events(spark, sf("sf0.001")).createOrReplaceTempView("events")
     val sql = spark.sql(
       """WITH interpolated AS (
@@ -42,7 +41,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("interpolate_linear handles exact hits, midpoints, and edges") {
-    Dialect.register(spark)
     val out = spark.sql(
       """SELECT interpolate_linear(
         |  array(struct(TIMESTAMP '2024-01-01 00:00:00' AS time, 10.0D AS value),
@@ -55,7 +53,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("interpolate_locf carries the last observation forward") {
-    Dialect.register(spark)
     val out = spark.sql(
       """SELECT interpolate_locf(
         |  array(struct(TIMESTAMP '2024-01-01 00:00:00' AS time, 'OK' AS value),
@@ -67,7 +64,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("bin() UDF equals the native bin column") {
-    Dialect.register(spark)
     val df = Tables.events(spark, sf("sf0.001")).limit(200)
     val diff = df.select(
       expr("bin(ts, 3600)").as("udf_bin"),
@@ -78,11 +74,13 @@ class DialectSpec extends SparkSpec {
 
   test("ago()/ts_now() honor the frozen clock") {
     val now = Timestamp.valueOf("2024-01-31 00:00:00")
-    Dialect.register(spark, now = Some(now))
-    val r = spark.sql("SELECT ts_now() AS n, ago('15d') AS a, ago('90m') AS m").collect().head
-    assert(r.getTimestamp(0) == now)
-    assert(r.getTimestamp(1) == Timestamp.valueOf("2024-01-16 00:00:00"))
-    assert(r.getTimestamp(2) == Timestamp.valueOf("2024-01-30 22:30:00"))
+    spark.conf.set(Dialect.ClockKey, now.toString)
+    try {
+      val r = spark.sql("SELECT ts_now() AS n, ago('15d') AS a, ago('90m') AS m").collect().head
+      assert(r.getTimestamp(0) == now)
+      assert(r.getTimestamp(1) == Timestamp.valueOf("2024-01-16 00:00:00"))
+      assert(r.getTimestamp(2) == Timestamp.valueOf("2024-01-30 22:30:00"))
+    } finally spark.conf.unset(Dialect.ClockKey)
   }
 
   test("ago() rejects garbage durations") {
@@ -91,22 +89,18 @@ class DialectSpec extends SparkSpec {
   }
 
   test("series element cap fails fast with a clear error") {
-    Dialect.register(spark, maxSeriesElements = 10)
-    try {
-      Tables.events(spark, sf("sf0.001")).createOrReplaceTempView("events")
-      val e = intercept[Exception] {
-        spark.sql("SELECT user_id, CREATE_TIME_SERIES(ts, value) AS s FROM events GROUP BY user_id")
-          .collect()
-      }
-      // Spark wraps the UDAF failure; the root message must survive
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
-      assert(messages(e).exists(m => m != null && m.contains("exceeds 10 elements")), e.toString)
-    } finally Dialect.register(spark) // restore the default cap for other tests
+    val e = intercept[Exception] {
+      Tables.events(spark, sf("sf0.001")).groupBy("user_id")
+        .agg(Dialect.seriesAgg(10)(col("ts"), col("value")).as("s"))
+        .collect()
+    }
+    // Spark wraps the UDAF failure; the root message must survive
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
+    assert(messages(e).exists(m => m != null && m.contains("exceeds 10 elements")), e.toString)
   }
 
   test("vec_dot SQL surface casts float arrays and propagates null elements") {
-    Dialect.register(spark)
     // array<float> input: implicit cast to array<double> must produce the
     // true dot product (raw ArrayData reinterpretation returned garbage)
     val f = spark.sql(
@@ -123,7 +117,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("word_shingles requires a literal shingle size") {
-    Dialect.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT word_shingles('a b c', CAST(id AS INT)) FROM range(3)").collect()
     }
@@ -158,7 +151,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("interpolation UDFs sort an unsorted hand-built series defensively") {
-    Dialect.register(spark)
     val out = spark.sql(
       """SELECT interpolate_linear(
         |  array(struct(TIMESTAMP '2024-01-01 00:02:00' AS time, 30.0D AS value),
@@ -169,7 +161,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("native expressions resolve from SQL text (FunctionRegistry injection)") {
-    Dialect.register(spark)
     val r = spark.sql(
       """SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
         |       word_shingles('a b c d', 3) AS sh,
@@ -181,7 +172,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("pipeline table functions: one SQL round-trip per family equals the Scala API") {
-    graft.functions.PipelineSql.register(spark)
     val docs = Tables.documents(spark, sf("sf0.001"))
     docs.createOrReplaceTempView("psql_docs")
     val events = Tables.events(spark, sf("sf0.001"))
@@ -238,7 +228,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("pipeline table functions reject non-literal and mistyped arguments") {
-    graft.functions.PipelineSql.register(spark)
     Tables.documents(spark, sf("sf0.001")).createOrReplaceTempView("psql_docs2")
     val e1 = intercept[Exception] {
       spark.sql("SELECT * FROM cap_per_group('psql_docs2', 'source', 'doc_id', 'ten')").collect()
@@ -251,7 +240,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("pipeline table functions cover every extension family (SQL == Scala API)") {
-    graft.functions.PipelineSql.register(spark)
     val docs = Tables.documents(spark, sf("sf0.001"))
     docs.createOrReplaceTempView("pq_docs")
     val events = Tables.events(spark, sf("sf0.001"))
@@ -376,7 +364,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("versioned-lake table functions: time_travel / version_diff from SQL text") {
-    graft.functions.PipelineSql.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_tvf_lake").toString
     import spark.implicits._
     val v1 = Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0))
@@ -407,7 +394,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("lake maintenance table functions: read_range / lake_compact / lake_vacuum / lake_clean_orphans") {
-    graft.functions.PipelineSql.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_tvf_maint").toString
     val lake = s"$dir/lake"
     import spark.implicits._
@@ -465,7 +451,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("multimodal table functions: decode_media / decode_audio / decode_video_frames from SQL") {
-    graft.functions.PipelineSql.register(spark)
     import spark.implicits._
     val docs = Seq((1L, "a mixed media corpus doc"), (2L, "another document here!"),
       (3L, "and a third one for luck")).toDF("doc_id", "text")
@@ -496,7 +481,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("round-12 table functions: bm25_batch / unigram_train / unigram_encode from SQL") {
-    graft.functions.PipelineSql.register(spark)
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     val docs = Tables.documents(spark, sf("sf0.001")).limit(60)
@@ -519,7 +503,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("near-dup table functions: set_jaccard_pairs / audio_fingerprints / video_neardup / audio_neardup") {
-    graft.functions.PipelineSql.register(spark)
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     val items = Seq((10L, 1L), (10L, 2L), (10L, 3L),
@@ -567,7 +550,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("rrf_fuse TVF equals the Scala API") {
-    graft.functions.PipelineSql.register(spark)
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     val lex = Seq((1L, 1L, 10L), (1L, 2L, 11L)).toDF("query_id", "rank", "doc_id")
@@ -579,7 +561,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("round-14 TVFs equal the Scala API: html_extract, link graph, learned quality, prune") {
-    graft.functions.PipelineSql.register(spark)
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
 
@@ -642,7 +623,6 @@ class DialectSpec extends SparkSpec {
   }
 
   test("side-effecting TVFs run at EXECUTION, not analysis: EXPLAIN touches nothing") {
-    graft.functions.PipelineSql.register(spark) // order-independent
     import graft.streaming.Exporter
     import graft.operators.TimeSeries.GridParams
     val out = java.nio.file.Files.createTempDirectory("tvf_defer").toString
@@ -702,7 +682,6 @@ class DialectSpec extends SparkSpec {
       "count()+show()+head() on one Dataset must commit exactly one compaction")
     // ann_rotate defers the same way: EXPLAIN must neither rebuild nor
     // swap; execution rotates and the receipt names what it did
-    graft.functions.PipelineSql.register(spark)
     val abase = java.nio.file.Files.createTempDirectory("tvf_defer_ann").toString
     val live = s"$abase/live"; val green = s"$abase/green"
     graft.sources.AnnLake.create(

@@ -99,7 +99,6 @@ class GramLakeSpec extends SparkSpec {
   }
 
   test("gram TVFs equal the Scala API") {
-    graft.functions.PipelineSql.register(spark)
     assert(spark.sql(s"SELECT * FROM gram_decontaminate('$root')")
       .collect().map(_.toSeq).toSet ==
       GramLake.decontaminate(spark, root).collect().map(_.toSeq).toSet)

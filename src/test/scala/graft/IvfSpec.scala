@@ -143,6 +143,24 @@ class IvfSpec extends SparkSpec {
     assert(mid > 1 && mid <= 8, s"chose $mid")
   }
 
+  test("ann_recall: a repeated depth returns the same rows as the distinct depths") {
+    val emb = Tables.embeddings(spark, sf("sf0.01"))
+    val (assigned, centroids) = Similarity.quantizedKMeans(
+      emb, "vec_id", "embedding", nlist = 8, dim = 64, iters = 4)
+    emb.createOrReplaceTempView("ivf_emb")
+    emb.filter(col("vec_id") < 5).createOrReplaceTempView("ivf_q")
+    assigned.createOrReplaceTempView("ivf_assigned")
+    centroids.zipWithIndex.map { case (c, j) => (j, c.toSeq) }.toSeq
+      .toDF("cell", "cv").createOrReplaceTempView("ivf_centroids")
+    def recall(depths: String) = spark.sql(
+      s"""SELECT * FROM ann_recall('ivf_emb', 'ivf_q', 'vec_id', 'embedding', 10,
+         |  '$depths', 'ivf_assigned', 'ivf_centroids')""".stripMargin)
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val distinct = recall("1,2,8")
+    assert(distinct.size == 3)
+    assert(recall("1,2,2,8,1") == distinct)
+  }
+
   test("quantized IVF: full probe equals brute force; partition-invariant") {
     val emb = Tables.embeddings(spark, sf("sf0.01"))
     val q = emb.filter(col("vec_id") < 3)

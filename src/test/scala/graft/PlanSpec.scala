@@ -72,6 +72,56 @@ class PlanSpec extends SparkSpec {
       }
   }
 
+  test("every gate plans the same alone as after the whole suite") {
+    // Alone: each gate on a fresh suite session before the suite pass.
+    // After: every gate built on ONE session, then each built again.
+    // A gate that installs or sets anything on the session it is
+    // handed (rules, functions, confs, a clock) makes a later gate's
+    // plan depend on run order; the canonical optimized plans differ.
+    def fresh() = { val s = spark.newSession(); GraftSession.install(s); s }
+    // canonical form: what a build numbers afresh is blanked — expression
+    // and lambda-variable ids, object identities, codegen-stage and
+    // exchange ids inside cached plans — and lines of the distinct-
+    // aggregate rewrite (gid), whose columns Spark orders by hash, are
+    // compared as character multisets. A scan's file list is not in the
+    // plan text, so each file relation's file count is appended, and so
+    // are the engine rules and strategies the plan was made with.
+    def canon(q: QDef, s: org.apache.spark.sql.SparkSession): String = try {
+      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+      val df = q.fn(s, sf("sf0.001"))
+      val (rules, strategies, _, _) =
+        org.apache.spark.sql.GraftTestShim.sessionEngine(df.sparkSession)
+      val plan = df.queryExecution.optimizedPlan
+      val files = plan.collect { case r: LogicalRelation => r.relation }
+        .collect { case h: HadoopFsRelation => h.location.inputFiles.length }
+      plan.toString
+        .replaceAll("#\\d+", "#")
+        .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_")
+        .replaceAll("@[0-9a-f]+", "@")
+        .replaceAll("\\*\\(\\d+\\)", "*")
+        .replaceAll("plan_id=\\d+", "plan_id=")
+        .split("\n").map(l => if (l.contains("gid#")) l.sorted else l)
+        .mkString("", "\n", files.mkString("\nfiles: ", ",", "")) +
+        (rules.toSeq.sorted ++ strategies.toSeq.sorted).mkString("\nengine: ", ",", "")
+    } finally CacheRegistry.clearAll()
+    val alone = Registry.all.map(q => q.name -> canon(q, fresh())).toMap
+    val suite = fresh()
+    Registry.all.foreach(canon(_, suite))
+    val moved = Registry.all.collect { case q if canon(q, suite) != alone(q.name) => q.name }
+    assert(moved.isEmpty, s"plan differently after the suite: ${moved.mkString(", ")}")
+  }
+
+  test("the cluster extension and the live install give a session the same engine") {
+    import org.apache.spark.sql.GraftTestShim.{extensionEngine, sessionEngine}
+    val cluster = extensionEngine(spark, "graft.plans.GraftExtensions")
+    val live = { val s = spark.newSession(); GraftSession.install(s); sessionEngine(s) }
+    assert(cluster == live)
+    val (rules, strategies, fns, tvfs) = live
+    assert(rules.size == 4 && strategies.size == 1, live)
+    assert(Set("ago", "ts_now", "create_time_series", "vec_dot").subsetOf(fns))
+    assert(Set("ann_recall", "time_travel", "lake_compact").subsetOf(tvfs))
+  }
+
   test("range join is a binned equi-join — hash join on (key, bin), no nested loop") {
     val p = plan("j_range_incidents")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
@@ -415,7 +465,6 @@ class PlanSpec extends SparkSpec {
   test("zone-map prune rule: a range WHERE over a lake scan skips files from the manifest") {
     import spark.implicits._
     import graft.sources.VersionedLake
-    graft.plans.ZoneMapPrune.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_zmp").toString + "/lake"
     // three commits with DISJOINT value ranges → three files whose zone
     // maps can prove exclusion for a mid-range predicate
@@ -440,7 +489,6 @@ class PlanSpec extends SparkSpec {
     assert(pruned.nonEmpty && pruned.length < all,
       s"expected manifest file skipping: ${pruned.length} vs $all")
     // the same predicate through SQL TEXT over the time_travel TVF
-    graft.functions.PipelineSql.register(spark)
     val v = VersionedLake.currentVersion(dir)
     val qSql = spark.sql(
       s"SELECT * FROM time_travel('$dir', $v) WHERE v BETWEEN 12 AND 17")
@@ -481,7 +529,6 @@ class PlanSpec extends SparkSpec {
   test("count-from-manifest: bare COUNT(*) and null-sensitive count(col) plan NO scan; filters and legacy lakes keep it") {
     import spark.implicits._
     import graft.sources.VersionedLake
-    graft.plans.LakeCountFromManifest.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_cmeta").toString + "/lake"
     VersionedLake.create((0 until 25).map(i =>
       (i.toLong, if (i % 5 == 0) null else s"n$i", s"p${i % 3}"))
@@ -524,7 +571,6 @@ class PlanSpec extends SparkSpec {
     try assert(hasScan(VersionedLake.read(spark, dir).groupBy().count()))
     finally spark.conf.unset(graft.plans.LakeCountFromManifest.EnabledKey)
     // SQL text through time_travel takes the same metadata path
-    graft.functions.PipelineSql.register(spark)
     val sqlCount = spark.sql(s"SELECT count(*) AS n FROM time_travel('$dir', 2)")
     assert(!hasScan(sqlCount) && sqlCount.head().getLong(0) == 40L)
   }
@@ -532,7 +578,6 @@ class PlanSpec extends SparkSpec {
   test("bloom point prune: equality over a Bloom-indexed lake skips files the envelopes cannot") {
     import spark.implicits._
     import graft.sources.VersionedLake
-    graft.plans.ZoneMapPrune.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_zmbloom").toString + "/lake"
     // ids INTERLEAVED across three single-file commits: every file's
     // numeric envelope spans ~[0, 60], so a point predicate gets
@@ -594,7 +639,6 @@ class PlanSpec extends SparkSpec {
   test("path fallback never splices a scan whose inferred types disagree with the recorded schema") {
     import spark.implicits._
     import graft.sources.VersionedLake
-    graft.plans.ZoneMapPrune.install(spark)
     // a pack-lake shape: STRING partition values that LOOK numeric, so
     // a raw (unregistered) read of the data tree infers block as INT
     // while the recorded schema says STRING — the path fallback makes
@@ -621,7 +665,6 @@ class PlanSpec extends SparkSpec {
   test("minmax-from-manifest: unfiltered MIN/MAX over a lake plans NO scan; filters, strings, NaN keep it") {
     import spark.implicits._
     import graft.sources.VersionedLake
-    graft.plans.LakeMinMaxFromManifest.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_mmeta").toString + "/lake"
     VersionedLake.create((0 until 25).map(i =>
       (i.toLong, i * 1.5, s"n$i", s"p${i % 3}"))
@@ -664,7 +707,6 @@ class PlanSpec extends SparkSpec {
     finally spark.conf.unset(graft.plans.LakeMinMaxFromManifest.EnabledKey)
     // SQL text through time_travel takes the same metadata path,
     // timestamps decode back through the epoch-micros encoding
-    graft.functions.PipelineSql.register(spark)
     val sqlMm = spark.sql(
       s"SELECT min(v) AS mn, max(d) AS mx, count(*) AS n FROM time_travel('$dir', 2)")
     assert(!hasScan(sqlMm) && sqlMm.head() == org.apache.spark.sql.Row(0L, 58.5, 40L))
@@ -703,7 +745,6 @@ class PlanSpec extends SparkSpec {
   test("zone-map prune never changes rows: randomized interval sweep, rule on vs off") {
     import spark.implicits._
     import graft.sources.VersionedLake
-    graft.plans.ZoneMapPrune.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_zmprop").toString + "/lake"
     val rnd = new scala.util.Random(42)
     // three commits of uniformly random values: per-file intervals
@@ -756,7 +797,6 @@ class PlanSpec extends SparkSpec {
   test("string zone-map prune: categorical predicates skip files from string envelopes") {
     import spark.implicits._
     import graft.sources.VersionedLake
-    graft.plans.ZoneMapPrune.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_zmstr").toString + "/lake"
     // three lang-disjoint single-file commits: the q_sql_zonemap_string
     // fixture shape, shrunk to pin EXACT pruned file counts

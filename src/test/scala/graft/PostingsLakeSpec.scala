@@ -124,7 +124,6 @@ class PostingsLakeSpec extends SparkSpec {
       PostingsLake.proximitySearch(spark, old, "alpha beta", 1)
     }.getMessage.contains("no positional postings"))
     // TVF parity
-    graft.functions.PipelineSql.register(spark)
     assert(spark.sql(
       s"SELECT * FROM proximity_lake_search('$root', '$phrase', 2)")
       .collect().map(_.toSeq).toSet ==
@@ -252,7 +251,6 @@ class PostingsLakeSpec extends SparkSpec {
   }
 
   test("postings-lake TVFs equal the Scala API") {
-    graft.functions.PipelineSql.register(spark)
     val r = java.nio.file.Files.createTempDirectory("graft_postings_tvf").toString
     Tables.documents(spark, sf("sf0.001")).limit(100)
       .createOrReplaceTempView("pl_docs")

@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
 class RangeRuleSpec extends SparkSpec {
   import spark.implicits._
 
-  RangeJoinBinRewrite.install(spark)
-
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   private lazy val pts = Seq(

@@ -155,7 +155,6 @@ class TextSearchSpec extends SparkSpec {
     assert(run("york") == Seq((1L, 2L, 1L), (2L, 2L, 2L), (3L, 1L, 2L),
       (4L, 1L, 0L), (6L, 1L, 3L)))
     // SQL TVF parity
-    graft.functions.PipelineSql.register(spark)
     docs.createOrReplaceTempView("ps_docs")
     assert(spark.sql(
       "SELECT * FROM phrase_search('ps_docs', 'doc_id', 'text', 'new york') ORDER BY doc_id")
@@ -195,7 +194,6 @@ class TextSearchSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(viaProx == viaPhrase)
     // SQL TVF parity
-    graft.functions.PipelineSql.register(spark)
     docs.createOrReplaceTempView("prox_docs")
     assert(spark.sql(
       "SELECT * FROM proximity_search('prox_docs', 'doc_id', 'text', 'new york', 2) ORDER BY doc_id")
@@ -220,7 +218,6 @@ class TextSearchSpec extends SparkSpec {
       (2L, 2L, 1L, "hit a b hit c d"),
       (3L, 1L, 1L, "d e hit")), out.toSeq.toString)
     // SQL TVF parity
-    graft.functions.PipelineSql.register(spark)
     docs.createOrReplaceTempView("hl_docs")
     assert(spark.sql(
       "SELECT * FROM highlight('hl_docs', 'doc_id', 'text', 'hit', 2) ORDER BY doc_id")
@@ -249,7 +246,6 @@ class TextSearchSpec extends SparkSpec {
       (2L, 1L, 0L, 0L, 0.0, 0.0),
       (3L, 1L, 0L, 0L, 0.0, 0.0)), out.toSeq.toString)
     // SQL TVF parity
-    graft.functions.PipelineSql.register(spark)
     run.createOrReplaceTempView("rm_run")
     qrels.createOrReplaceTempView("rm_qrels")
     assert(spark.sql("SELECT * FROM retrieval_metrics('rm_run', 'rm_qrels', 5)")

@@ -744,7 +744,6 @@ class VersionedLakeSpec extends SparkSpec {
     assert(overlaps(after, "x", 10, 20) < after.size)
     assert(overlaps(after, "y", 100, 200) < after.size)
     // …and the automatic prune rule turns that into fewer scanned files
-    graft.plans.ZoneMapPrune.install(spark)
     val q = VersionedLake.read(spark, lake)
       .filter(col("x") >= 10 && col("x") <= 20 &&
         col("y") >= 100 && col("y") <= 200)
@@ -802,7 +801,6 @@ class VersionedLakeSpec extends SparkSpec {
     assert(covering(after, "es") < after.size,
       "clustered files must be tight on the string column")
     // the automatic rule turns the tight envelopes into skipped files
-    graft.plans.ZoneMapPrune.install(spark)
     val q = VersionedLake.read(spark, lake).filter(col("lang") === "es")
     val scanned = q.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec =>
@@ -1347,7 +1345,6 @@ class VersionedLakeSpec extends SparkSpec {
     assert(VersionedLake.history(spark, lake).collect()
       .map(_.getInt(0)).toSeq == Seq(3))
     // SQL surface
-    graft.functions.PipelineSql.register(spark)
     assert(spark.sql(s"SELECT version, n_rows FROM lake_history('$lake')")
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq == Seq((3, 2L)))
   }
