@@ -10,7 +10,11 @@ object GraftSession {
     * partition per core, UI off, and capped listener-state retention —
     * the app-status store collects per-task metrics even with the UI
     * off, and a 200-gate session otherwise drags hundreds of MB of it
-    * (heap and GC grow, and late gates read slower than early ones). */
+    * (heap and GC grow, and late gates read slower than early ones).
+    * Artifact isolation is off: every gate runs on its own clone
+    * ([[isolated]]), and with isolation on each clone's first job sets
+    * up its own artifact state on the executors, about 0.1 s a gate;
+    * the engine adds no per-session artifacts. */
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -22,6 +26,7 @@ object GraftSession {
       .config("spark.ui.retainedStages", "100")
       .config("spark.ui.retainedTasks", "2000")
       .config("spark.sql.ui.retainedExecutions", "25")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     install(spark)

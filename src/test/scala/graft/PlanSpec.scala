@@ -64,50 +64,88 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("unboundedfollowing$()"), p)
   }
 
+  /** What one build of a gate yields for the whole-registry audits. */
+  private final case class Audit(cartesian: Boolean, embeddedSorts: Seq[String],
+      optimized: String, canon: String)
+
+  /** A fresh suite session: nothing any gate or test set on `spark`. */
+  private def fresh() = { val s = spark.newSession(); GraftSession.install(s); s }
+
+  /** Global sorts below the root presentation sort and outside top-k
+    * (see "global sorts live at the gate edge only"). */
+  private def violations(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      edgeOk: Boolean, limitOk: Boolean): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Project, Sort}
+    p match {
+      case s: Sort if s.global =>
+        val bad = if (edgeOk || limitOk) Seq.empty else Seq(s.simpleString(200))
+        bad ++ violations(s.child, edgeOk = false, limitOk = false)
+      case pr: Project =>
+        // projections are transparent: a root Project over a Sort is
+        // still the edge; a Limit>Project>Sort chain is still top-k
+        violations(pr.child, edgeOk, limitOk)
+      case l @ (_: GlobalLimit | _: LocalLimit) =>
+        l.children.flatMap(violations(_, edgeOk = false, limitOk = true))
+      case other =>
+        other.children.flatMap(violations(_, edgeOk = false, limitOk = false))
+    }
+  }
+
+  /** Build `q` on `s` once and read every audit off that one DataFrame.
+    * The canonical form blanks what a build numbers afresh — expression
+    * and lambda-variable ids, object identities, codegen-stage and
+    * exchange ids inside cached plans — and compares lines of the
+    * distinct-aggregate rewrite (gid), whose columns Spark orders by
+    * hash, as character multisets. A scan's file list is not in the
+    * plan text, so each file relation's file count is appended, and so
+    * are the engine rules and strategies the plan was made with. */
+  private def audit(q: QDef, s: org.apache.spark.sql.SparkSession, executed: Boolean): Audit = try {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val df = q.fn(s, sf("sf0.001"))
+    val (rules, strategies, _, _) =
+      org.apache.spark.sql.GraftTestShim.sessionEngine(df.sparkSession)
+    val plan = df.queryExecution.optimizedPlan
+    val files = plan.collect { case r: LogicalRelation => r.relation }
+      .collect { case h: HadoopFsRelation => h.location.inputFiles.length }
+    val canon = plan.toString
+      .replaceAll("#\\d+", "#")
+      .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_")
+      .replaceAll("@[0-9a-f]+", "@")
+      .replaceAll("\\*\\(\\d+\\)", "*")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      .split("\n").map(l => if (l.contains("gid#")) l.sorted else l)
+      .mkString("", "\n", files.mkString("\nfiles: ", ",", "")) +
+      (rules.toSeq.sorted ++ strategies.toSeq.sorted).mkString("\nengine: ", ",", "")
+    Audit(
+      cartesian = executed && df.queryExecution.executedPlan.toString.contains("CartesianProduct"),
+      embeddedSorts = violations(plan, edgeOk = true, limitOk = false),
+      optimized = plan.toString, canon = canon)
+  } finally CacheRegistry.clearAll()
+
+  /** Every gate built ONCE, alone: each on its own fresh suite session,
+    * before the suite pass of the order spec. The cartesian, global-sort
+    * and order audits all read this one pass over the registry. */
+  private lazy val alone: Map[String, Audit] =
+    Registry.all.map(q => q.name -> audit(q, fresh(), executed = true)).toMap
+
   test("registered queries avoid cartesian products") {
     Registry.all.foreach { q =>
-        val p = q.fn(spark, sf("sf0.001")).queryExecution.executedPlan.toString
-        assert(!p.contains("CartesianProduct"),
-          s"${q.name} plans a CartesianProduct")
-      }
+      assert(!alone(q.name).cartesian, s"${q.name} plans a CartesianProduct")
+    }
   }
 
   test("every gate plans the same alone as after the whole suite") {
-    // Alone: each gate on a fresh suite session before the suite pass.
-    // After: every gate built on ONE session, then each built again.
-    // A gate that installs or sets anything on the session it is
-    // handed (rules, functions, confs, a clock) makes a later gate's
-    // plan depend on run order; the canonical optimized plans differ.
-    def fresh() = { val s = spark.newSession(); GraftSession.install(s); s }
-    // canonical form: what a build numbers afresh is blanked — expression
-    // and lambda-variable ids, object identities, codegen-stage and
-    // exchange ids inside cached plans — and lines of the distinct-
-    // aggregate rewrite (gid), whose columns Spark orders by hash, are
-    // compared as character multisets. A scan's file list is not in the
-    // plan text, so each file relation's file count is appended, and so
-    // are the engine rules and strategies the plan was made with.
-    def canon(q: QDef, s: org.apache.spark.sql.SparkSession): String = try {
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-      val df = q.fn(s, sf("sf0.001"))
-      val (rules, strategies, _, _) =
-        org.apache.spark.sql.GraftTestShim.sessionEngine(df.sparkSession)
-      val plan = df.queryExecution.optimizedPlan
-      val files = plan.collect { case r: LogicalRelation => r.relation }
-        .collect { case h: HadoopFsRelation => h.location.inputFiles.length }
-      plan.toString
-        .replaceAll("#\\d+", "#")
-        .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_")
-        .replaceAll("@[0-9a-f]+", "@")
-        .replaceAll("\\*\\(\\d+\\)", "*")
-        .replaceAll("plan_id=\\d+", "plan_id=")
-        .split("\n").map(l => if (l.contains("gid#")) l.sorted else l)
-        .mkString("", "\n", files.mkString("\nfiles: ", ",", "")) +
-        (rules.toSeq.sorted ++ strategies.toSeq.sorted).mkString("\nengine: ", ",", "")
-    } finally CacheRegistry.clearAll()
-    val alone = Registry.all.map(q => q.name -> canon(q, fresh())).toMap
+    // Alone: the shared pass above. After: every gate built on ONE
+    // session, then each built again and compared. A gate that installs
+    // or sets anything on the session it is handed (rules, functions,
+    // confs, a clock) makes a later gate's plan depend on run order;
+    // the canonical optimized plans differ.
     val suite = fresh()
-    Registry.all.foreach(canon(_, suite))
-    val moved = Registry.all.collect { case q if canon(q, suite) != alone(q.name) => q.name }
+    Registry.all.foreach(q => try q.fn(suite, sf("sf0.001")).queryExecution.optimizedPlan
+      finally CacheRegistry.clearAll())
+    val moved = Registry.all.collect {
+      case q if audit(q, suite, executed = false).canon != alone(q.name).canon => q.name
+    }
     assert(moved.isEmpty, s"plan differently after the suite: ${moved.mkString(", ")}")
   }
 
@@ -298,25 +336,10 @@ class PlanSpec extends SparkSpec {
     // SMJ/window never false-positive. Allowed global sorts: the root
     // presentation sort (possibly under column-pruning Projects) and
     // top-k Sort-under-Limit (which executes as TakeOrderedAndProject).
-    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
-    def violations(p: LogicalPlan, edgeOk: Boolean, limitOk: Boolean): Seq[Sort] = p match {
-      case s: Sort if s.global =>
-        val bad = if (edgeOk || limitOk) Seq.empty else Seq(s)
-        bad ++ violations(s.child, edgeOk = false, limitOk = false)
-      case pr: Project =>
-        // projections are transparent: a root Project over a Sort is
-        // still the edge; a Limit>Project>Sort chain is still top-k
-        violations(pr.child, edgeOk, limitOk)
-      case l @ (_: GlobalLimit | _: LocalLimit) =>
-        l.children.flatMap(violations(_, edgeOk = false, limitOk = true))
-      case other =>
-        other.children.flatMap(violations(_, edgeOk = false, limitOk = false))
-    }
     Registry.all.foreach { q =>
-      val plan = q.fn(spark, sf("sf0.001")).queryExecution.optimizedPlan
-      val embedded = violations(plan, edgeOk = true, limitOk = false)
-      assert(embedded.isEmpty,
-        s"${q.name} embeds ${embedded.size} non-edge global sort(s):\n$plan")
+      val a = alone(q.name)
+      assert(a.embeddedSorts.isEmpty,
+        s"${q.name} embeds ${a.embeddedSorts.size} non-edge global sort(s):\n${a.optimized}")
     }
   }
 

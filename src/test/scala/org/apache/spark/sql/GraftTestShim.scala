@@ -1,7 +1,5 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TableFunctionRegistry}
-
 /** Test access to `private[sql]` session internals. */
 object GraftTestShim {
 
@@ -12,20 +10,23 @@ object GraftTestShim {
   private def graftClasses(xs: Seq[AnyRef]): Set[String] =
     xs.map(_.getClass.getName).filter(_.startsWith("graft.")).toSet
 
-  /** What `spark.sql.extensions=<className>` gives a NEW session on
-    * `spark`'s context: the class is instantiated and applied to the
-    * session's extensions, whose rules, strategies, functions and table
-    * functions the session state builder then adds to the built-ins. */
+  /** The engine of a NEW session built the way `spark.sql.extensions=
+    * <className>` builds one: the class is loaded by name and applied to
+    * the session's extensions, and Spark's session-state builder adds
+    * their rules, strategies, functions and table functions to the
+    * built-ins. The session shares `spark`'s context and shared state,
+    * as `newSession()` does; its constructor is private, hence the
+    * reflection. */
   def extensionEngine(spark: SparkSession, className: String): Engine = {
     val ext = new SparkSessionExtensions
     Class.forName(className).getConstructor().newInstance()
       .asInstanceOf[SparkSessionExtensions => Unit](ext)
-    (graftClasses(ext.buildOptimizerRules(spark)),
-      graftClasses(ext.buildPlannerStrategies(spark)),
-      ext.registerFunctions(FunctionRegistry.builtin.clone())
-        .listFunction().map(_.funcName).toSet,
-      ext.registerTableFunctions(TableFunctionRegistry.builtin.clone())
-        .listFunction().map(_.funcName).toSet)
+    val parent = spark.asInstanceOf[classic.SparkSession]
+    val ctor = classOf[classic.SparkSession].getDeclaredConstructors
+      .find(_.getParameterCount == 6).get
+    val session = ctor.newInstance(parent.sparkContext, Some(parent.sharedState),
+      None, ext, Map.empty[String, String], Map.empty[String, String])
+    sessionEngine(session.asInstanceOf[SparkSession])
   }
 
   /** The engine a built session actually plans and resolves with. */
