@@ -7,14 +7,18 @@ import org.apache.spark.sql.functions._
 
 /** C1 over `events` in BOTH forms SURVEY §2.7 requires (FIXTURES.md §C:
   * event_type='error' plays ERROR, value plays temperature): the
-  * window-function batch emulation and the flatMapGroupsWithState state
-  * machine (the streaming operator, run here in batch mode — identical
-  * code path minus the watermark TTL). Both hash-check against the SAME
-  * DuckDB oracle; StreamingCepSpec additionally proves the streaming
-  * form across MemoryStream micro-batches. WITHIN is 72 h — the scaled
-  * analog of the reference's 1 minute for this table's ~10 h inter-event
-  * cadence. The B-sum accumulates as DECIMAL in all three formulations
-  * so avg_temperature is independent of accumulation order.
+  * window-function formulation (`Cep.matchesBatch`, c1) and the state
+  * machine `Cep.Machine` — driven by flatMapGroupsWithState (the
+  * streaming operator, run here in batch mode — identical code path
+  * minus the watermark TTL) and, for the generic funnel gates c8/c9, by
+  * the batch sorted pass of `Cep.matchesPattern` (one shuffle by key,
+  * one sort by (key, time, id), one mapPartitions). c1's two forms
+  * hash-check against the SAME DuckDB oracle; StreamingCepSpec
+  * additionally proves the streaming form across MemoryStream
+  * micro-batches. WITHIN is 72 h — the scaled analog of the reference's
+  * 1 minute for this table's ~10 h inter-event cadence. The B-sum
+  * accumulates as DECIMAL in every formulation so avg_temperature is
+  * independent of accumulation order.
   */
 object CepQueries {
 

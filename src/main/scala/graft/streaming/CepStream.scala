@@ -1,12 +1,12 @@
 package graft.streaming
 
 import graft.operators.Cep
+import graft.operators.Cep.PartialMatch
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import java.sql.Timestamp
-import scala.math.BigDecimal.RoundingMode
 
 /** C1 (streaming form) — the reference's MATCH_RECOGNIZE as a Structured
   * Streaming operator (kinesis-studio-notebook/notebook.txt:47-68),
@@ -20,22 +20,23 @@ import scala.math.BigDecimal.RoundingMode
   * Engine shape: the spec's predicate Columns are evaluated IN THE PLAN
   * (a projection before `groupByKey` — codegen'd, no closure capture of
   * Catalyst trees), yielding a typed event with isA/isB/isC booleans.
-  * `flatMapGroupsWithState` with event-time timeout then runs a bounded
-  * state machine: per-key state is one partial match (pending A +
-  * ≤maxB buffered B events). The WITHIN clause doubles as the state
-  * TTL: once the watermark passes A + within, the partial match can
-  * never complete, so the state store stays O(keys × maxB) regardless
-  * of stream length — the property that lets this run indefinitely on
-  * an unbounded 100 TB/day stream.
+  * `flatMapGroupsWithState` with event-time timeout then drives
+  * [[Cep.Machine]] — the same per-event transition the batch
+  * [[Cep.matchesPattern]] runs in its sorted pass: per-key state is one
+  * partial match (pending A + ≤maxB buffered B events). The WITHIN
+  * clause doubles as the state TTL: once the watermark passes
+  * A + within, the partial match can never complete, so the state store
+  * stays O(keys × maxB) regardless of stream length — the property that
+  * lets this run indefinitely on an unbounded 100 TB/day stream.
   *
-  * Equivalence to the batch window-function formulation
-  * (operators/Cep.scala): classification first (B wins; non-B rows are
+  * Equivalence to the window-function formulation
+  * ([[Cep.matchesBatch]]): classification first (B wins; non-B rows are
   * boundaries), so rows strictly between consecutive boundaries are all
   * B and every candidate match is a consecutive-boundary pair — two
   * candidates overlap only by sharing an endpoint. The greedy machine
   * (emit and consume C; a consumed C starts nothing) therefore takes
-  * positions 1,3,5,… of every endpoint-chain — exactly the batch
-  * operator's gaps-and-islands parity. StreamingCepSpec asserts parity
+  * positions 1,3,5,… of every endpoint-chain — exactly the window
+  * form's gaps-and-islands parity. StreamingCepSpec asserts parity
   * on the sandwich AND funnel shapes, single- and multi-batch.
   *
   * Ordering (C2): the reference orders by processing time; its measures
@@ -44,9 +45,10 @@ import scala.math.BigDecimal.RoundingMode
   * cross-batch reordering is not repaired (documented divergence,
   * matching at-most-once arrival order of a Kinesis shard).
   *
-  * Measure semantics replicate the batch emulation bit for bit:
+  * Measure semantics replicate the batch forms bit for bit:
   * decimal(18,2) exact accumulation for the average, half-up rounding
-  * to 2 decimals, elapsed = half-up seconds between A and C.
+  * to 2 decimals, elapsed = half-up seconds between A and C. A NULL
+  * value or event time is refused, as in the batch forms.
   */
 object CepStream {
 
@@ -98,30 +100,6 @@ object CepStream {
       _isB: Boolean,
       _isC: Boolean)
 
-  /** Partial-match state: the pending A plus buffered B measures —
-    * bounded at maxB entries by construction. A's instant is kept in
-    * microseconds (Timestamp.getTime is millis-only; the events table
-    * carries micros and elapsed/WITHIN must be micros-exact to match
-    * the batch emulation).
-    *
-    * CHECKPOINT COMPATIBILITY: this class IS the
-    * flatMapGroupsWithState state encoder schema. Changing its fields
-    * (as the `aStatus` addition did when measures became generic)
-    * breaks resume from a checkpoint written by the previous shape —
-    * Spark fails state-schema compatibility rather than misdecoding.
-    * Contract: a CEP query restarted across such a change must start
-    * from a FRESH checkpoint (partial matches in flight at the switch
-    * are lost; completed matches already emitted are unaffected). If
-    * live rolling upgrades ever matter, version the state instead:
-    * keep the old case class, read old-state rows through a migration
-    * default for the missing field. */
-  final case class PartialMatch(
-      aTimeMicros: Long,
-      aValue: Double,
-      aStatus: String,
-      bStatuses: List[String],
-      bValues: List[Double])
-
   /** Full-precision instant of a Timestamp in microseconds. */
   private def micros(t: Timestamp): Long =
     math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
@@ -130,10 +108,6 @@ object CepStream {
       errorValue: String = "ERROR",
       maxB: Int = 5,
       withinMicros: Long = 60000000L) // WITHIN INTERVAL '1' MINUTES
-
-  /** Batch-identical rounding: cast to decimal(18,2) half-up. */
-  private def d2(v: Double): BigDecimal =
-    BigDecimal(v).setScale(2, RoundingMode.HALF_UP)
 
   private def toTimestamp(us: Long): Timestamp = {
     val t = new Timestamp(math.floorDiv(us, 1000000L) * 1000L)
@@ -148,8 +122,8 @@ object CepStream {
     val lo = (st.aValue :: cValue :: st.bValues).min
     val hi = (st.aValue :: cValue :: st.bValues).max
     val total = st.bValues.size + 2
-    val bSum = st.bValues.map(d2).foldLeft(BigDecimal(0).setScale(2))(_ + _)
-    val sum = d2(st.aValue) + d2(cValue) + bSum
+    val bSum = st.bSum
+    val sum = Cep.d2(st.aValue) + Cep.d2(cValue) + bSum.getOrElse(BigDecimal(0))
     val avg = math.floor((sum.toDouble / total) * 100 + 0.5) / 100.0
     val elapsed = math.floor((cTimeMicros - st.aTimeMicros) / 1000000.0 + 0.5).toLong
     CepMatchVocab(
@@ -157,10 +131,10 @@ object CepStream {
       a_time = toTimestamp(st.aTimeMicros), a_value = st.aValue, a_status = st.aStatus,
       c_time = toTimestamp(cTimeMicros), c_value = cValue, c_status = cStatus,
       b_count = st.bValues.size.toLong,
-      b_min = st.bValues.reduceOption((a, b) => math.min(a, b)),
-      b_max = st.bValues.reduceOption((a, b) => math.max(a, b)),
-      b_sum = if (st.bValues.isEmpty) None else Some(bSum.bigDecimal),
-      b_history = st.bStatuses.reverse,
+      b_min = st.bMin,
+      b_max = st.bMax,
+      b_sum = bSum.map(_.bigDecimal),
+      b_history = st.bHistory,
       total_rows = total.toLong,
       min_value = lo, max_value = hi, avg_value = avg,
       elapsed_seconds = elapsed)
@@ -177,22 +151,12 @@ object CepStream {
     max_temperature = v.max_value,
     elapsed = v.elapsed_seconds)
 
-  /** The per-key state machine, generic over the pattern's scalar
-    * parameters (the predicates were already evaluated in the plan).
-    * Mirrors the batch candidate/parity semantics exactly:
-    *  - B row (isB wins over isA/isC — the batch classification rule)
-    *    with a pending A → buffered; overflow (> maxB) kills the
-    *    pending match (the consecutive-boundary pair can never be a
-    *    candidate, and A pairs with no later boundary). Without a
-    *    pending A → ignored.
-    *  - boundary row completing a candidate (pending A, isC, B count in
-    *    [minB,maxB], C-A within the bound) → match; state cleared
-    *    (SKIP PAST LAST ROW: the consumed C starts nothing).
-    *  - any other boundary → becomes the new pending A iff isA, else
-    *    clears the state (a failed consecutive-boundary pair leaves A
-    *    unmatchable forever).
+  /** The streaming side of [[Cep.Machine]]: one key's micro-batch,
+    * sorted by (event_time, event_id), stepped through the shared
+    * transition from the key's stored partial match; the partial match
+    * left over is stored with the WITHIN horizon as its timeout.
     */
-  private def stepPattern(minB: Int, maxB: Int, withinMicros: Long, streaming: Boolean)(
+  private def stepPattern(machine: Cep.Machine, streaming: Boolean)(
       key: String, events: Iterator[ClassifiedEvent],
       state: GroupState[PartialMatch]): Iterator[CepMatchVocab] = {
     if (state.hasTimedOut) {
@@ -204,34 +168,14 @@ object CepStream {
 
     events.toSeq.sortBy(e => (micros(e._t), e._id)).foreach { e =>
       val t = micros(e._t)
-      if (e._isB) {
-        st match {
-          case Some(pm) =>
-            if (pm.bValues.size >= maxB) st = None // B{minB,maxB} overflow: abort
-            else st = Some(pm.copy(
-              // collect_list (the batch history) skips a null status;
-              // the value still counts toward every other measure
-              bStatuses = if (e._s == null) pm.bStatuses else e._s :: pm.bStatuses,
-              bValues = e._v :: pm.bValues))
-          case None => // B row outside any pending match
-        }
-      } else {
-        val completes = st.exists { pm =>
-          e._isC && pm.bValues.size >= minB &&
-            (t - pm.aTimeMicros) <= withinMicros
-        }
-        if (completes) {
-          out += emit(key, st.get, t, e._v, e._s)
-          st = None // SKIP PAST LAST ROW
-        } else {
-          st = if (e._isA) Some(PartialMatch(t, e._v, e._s, Nil, Nil)) else None
-        }
+      st = machine.step(st, t, e._v, e._s, e._isA, e._isB, e._isC) { pm =>
+        out += emit(key, pm, t, e._v, e._s)
       }
     }
 
     st match {
       case Some(pm) =>
-        val expiryMillis = pm.aTimeMicros / 1000L + withinMicros / 1000L + 1L
+        val expiryMillis = pm.aTimeMicros / 1000L + machine.withinMicros / 1000L + 1L
         val wm = if (streaming) state.getCurrentWatermarkMs() else 0L
         if (streaming && wm >= expiryMillis) {
           // the pending A is already beyond the WITHIN horizon (any
@@ -260,16 +204,17 @@ object CepStream {
     * Streaming input gets a watermark on the event time (bounds state
     * via the WITHIN TTL); batch input runs the same state machine in
     * one pass per key — the same operator serves the continuous and the
-    * ad-hoc form. Output keeps the fixed measure schema of
-    * [[Cep.matchesPattern]], so the two are drop-in interchangeable.
+    * ad-hoc form. Output keeps the measure names of
+    * [[Cep.matchesPattern]] (the key arrives as a string).
     *
     * Memory shape: streaming STATE is O(keys × maxB), but each
     * invocation buffers its micro-batch's per-key events for the
     * in-batch sort — fine for micro-batches, whereas the batch form
-    * hands one invocation a key's FULL history. For unbounded per-key
-    * batch histories prefer [[Cep.matchesPattern]] (window functions
-    * sort with disk spill); the batch mode here exists for parity
-    * testing and moderate ad-hoc runs.
+    * hands one invocation a key's FULL history. For batch input use
+    * [[Cep.matchesPattern]]: it runs the same [[Cep.Machine]] over one
+    * spilling sort by (key, time, id) and streams each key's rows, so
+    * its per-key memory stays O(maxB); the batch mode here exists for
+    * parity testing and moderate ad-hoc runs.
     */
   def matchesPattern(df: DataFrame, p: Cep.Params, spec: Cep.PatternSpec,
       watermarkDelay: String = "10 seconds"): Dataset[CepMatch] = {
@@ -315,8 +260,8 @@ object CepStream {
     // pattern parameters cross into the executor closure
     val classified = df.select(
       col(p.key).cast("string").as("_k"),
-      col(p.time).as("_t"),
-      col(p.value).cast("double").as("_v"),
+      Cep.timeCol(p).as("_t"),
+      Cep.valueCol(p).as("_v"),
       col(p.status).cast("string").as("_s"),
       col(p.id).cast("long").as("_id"),
       coalesce(spec.a, lit(false)).as("_isA"),
@@ -328,13 +273,13 @@ object CepStream {
     // copy the scalars OUT of the spec before building the closure:
     // referencing spec.minB inside would make scalac capture the whole
     // PatternSpec — whose Columns are not serializable
-    val (minB, maxB, within) = (spec.minB, spec.maxB, spec.withinMicros)
+    val machine = Cep.Machine(spec.minB, spec.maxB, spec.withinMicros)
     withWm
       .groupByKey(_._k)
       .flatMapGroupsWithState[PartialMatch, CepMatchVocab](
         OutputMode.Append,
         if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout)(
-        stepPattern(minB, maxB, within, streaming))
+        stepPattern(machine, streaming))
   }
 
   /** The reference's ERROR-sandwich as an instance of the generic

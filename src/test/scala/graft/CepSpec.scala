@@ -103,28 +103,100 @@ class CepSpec extends SparkSpec {
   }
 
   test("generic pattern: fixed-form equals matchesPattern(errorSandwichSpec) on random sequences") {
-    // property-style: 40 pseudo-random status/value sequences (seeded,
-    // reproducible) — the fixed two-shuffle machinery and the generic
-    // pattern machinery must emit identical match sets and measures
+    // property-style, seeded: the window formulation (matchesBatch) and
+    // the sorted pass through the state machine (matchesPattern) must
+    // emit identical match sets, measures and schemas. Each trial is one
+    // DataFrame of 30 keys — more keys than the spec session's 4 shuffle
+    // partitions — with time steps of 0 or 1 s (ties broken by a
+    // shuffled id), NULL statuses, runs of non-errors longer than maxB,
+    // and whole-second gaps so C often lands exactly on the WITHIN
+    // bound. Even trials key on a long, odd trials on a string.
     val rnd = new scala.util.Random(42)
-    val statuses = Seq("ERROR", "OK", "WARN")
-    (1 to 40).foreach { trial =>
-      val n = 5 + rnd.nextInt(40)
-      val rows = (0 until n).map { i =>
-        (s"k${i % 2}", new Timestamp(1700000000000L + i * 1000L),
-          math.floor(rnd.nextDouble() * 1000) / 10.0,
-          statuses(rnd.nextInt(statuses.length)), i.toLong)
+    val statuses = Seq[Option[String]](Some("ERROR"), Some("ERROR"), Some("OK"),
+      Some("OK"), Some("WARN"), None)
+    var atBound = 0
+    (1 to 8).foreach { trial =>
+      val rows = (0 until 30).flatMap { key =>
+        val n = 5 + rnd.nextInt(30)
+        val ids = rnd.shuffle((0 until n).toList)
+        val steps = Seq.fill(n)(rnd.nextInt(2) * 1000L).scanLeft(0L)(_ + _)
+        (0 until n).map { i =>
+          (key, new Timestamp(1700000000000L + steps(i)),
+            math.floor(rnd.nextDouble() * 1000) / 10.0,
+            statuses(rnd.nextInt(statuses.length)), key * 1000L + ids(i))
+        }
       }
-      val df = rows.toDF("k", "t", "v", "s", "id")
+      val df =
+        if (trial % 2 == 0) rows.map { case (k, t, v, s, id) => (k.toLong, t, v, s, id) }
+          .toDF("k", "t", "v", "s", "id")
+        else rows.map { case (k, t, v, s, id) => (s"k$k", t, v, s, id) }
+          .toDF("k", "t", "v", "s", "id")
       val p = Cep.Params("k", "t", "v", "s", "id",
         errorValue = "ERROR", maxB = 1 + rnd.nextInt(5),
-        withinMicros = (2 + rnd.nextInt(10)) * 1000000L)
-      val fixed = Cep.matchesBatch(df, p)
-        .collect().map(_.toSeq).toSet
-      val generic = Cep.matchesPattern(df, p, Cep.errorSandwichSpec(p))
-        .collect().map(_.toSeq).toSet
-      assert(fixed == generic, s"trial $trial diverged (params $p)")
+        withinMicros = (1 + rnd.nextInt(6)) * 1000000L)
+      val fixedDf = Cep.matchesBatch(df, p)
+      val genericDf = Cep.matchesPattern(df, p, Cep.errorSandwichSpec(p))
+      assert(fixedDf.schema == genericDf.schema, s"trial $trial schemas differ")
+      val fixed = fixedDf.collect().map(_.toSeq)
+      val generic = genericDf.collect().map(_.toSeq)
+      assert(fixed.length == generic.length && fixed.toSet == generic.toSet,
+        s"trial $trial diverged (params $p)")
+      atBound += fixed.count(_(7) == p.withinMicros / 1000000L)
     }
+    assert(atBound > 0, "no trial put a C exactly on the WITHIN bound")
+  }
+
+  // A NULL value has one answer in every form: refused, naming the column.
+  private val nullValue = Seq(("k1", 0L, Some(10.0), "ERROR"), ("k1", 1L, None, "OK"),
+    ("k1", 2L, Some(30.0), "ERROR"))
+    .map { case (k, i, v, s) => (k, new Timestamp(1700000000000L + i * 1000L), v, s, i) }
+  private val nullP = Cep.Params("k", "t", "v", "s", "id",
+    errorValue = "ERROR", maxB = 5, withinMicros = 10000000L)
+
+  private def assertRefusesNullValue(run: => Any): Unit = {
+    val e = intercept[Exception](run)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("column 'v' holds a NULL")), e.toString)
+  }
+
+  test("NULL value: matchesPattern refuses it, naming the column") {
+    val df = nullValue.toDF("k", "t", "v", "s", "id")
+    assertRefusesNullValue(Cep.matchesPattern(df, nullP, Cep.errorSandwichSpec(nullP)).collect())
+  }
+
+  test("NULL value: matchesBatch refuses it, naming the column") {
+    val df = nullValue.toDF("k", "t", "v", "s", "id")
+    assertRefusesNullValue(Cep.matchesBatch(df, nullP).collect())
+  }
+
+  test("NULL value: CepStream.matchesPattern refuses it, naming the column") {
+    val df = nullValue.toDF("k", "t", "v", "s", "id")
+    assertRefusesNullValue(
+      graft.streaming.CepStream.matchesPattern(df, nullP, Cep.errorSandwichSpec(nullP)).collect())
+  }
+
+  test("plan shape: matchesPattern is one shuffle and no window; matchesBatch keeps its windows") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    // the final AQE plan, query stages unwrapped
+    def nodes(df: DataFrame): Seq[SparkPlan] = {
+      df.collect()
+      def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => q +: walk(q.plan)
+        case other => other +: other.children.flatMap(walk)
+      }
+      walk(df.queryExecution.executedPlan)
+    }
+    val df = seq(E, ok(1), E, ok(2), ok(3), E, E)
+    val p = Cep.Params("k", "t", "v", "s", "id", errorValue = "ERROR")
+    val machine = nodes(Cep.matchesPattern(df, p, Cep.errorSandwichSpec(p)))
+    assert(!machine.exists(_.isInstanceOf[WindowExec]), machine.mkString("\n"))
+    assert(machine.count(_.isInstanceOf[ShuffleExchangeLike]) == 1, machine.mkString("\n"))
+    val windows = nodes(Cep.matchesBatch(df, p))
+    assert(windows.exists(_.isInstanceOf[WindowExec]), windows.mkString("\n"))
   }
 
   test("generic pattern: distinct A/C, minB=0, and non-variable rows breaking runs") {
