@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.{udaf, udf}
 import org.apache.spark.sql.internal.SQLConf
 
+import graft.operators.TimeSeries
+
 import java.sql.Timestamp
 import scala.math.Ordering.Implicits._
 
@@ -21,19 +23,20 @@ import scala.math.Ordering.Implicits._
   *   BIN(time, seconds)                   → fixed-width bucket truncate
   *   AGO('15m' | '7d' | …) / TS_NOW()     → relative time, frozen-clock
   *
-  * Interpolation math replicates operators/TimeSeries.interpolateOnGrid
-  * operation for operation (micros integer deltas, identical op order,
-  * ties broken by value), so the SQL-text flagship hash-matches the
-  * window-formulated one — q_sql_flagship shares t9's DuckDB oracle.
+  * Linear interpolation calls the same formula as the grid walk of
+  * operators/TimeSeries.interpolateOnGrid (`TimeSeries.linearAt`: edge
+  * rules, micros integer deltas, one op order; ties broken by value),
+  * so the SQL-text flagship hash-matches the DataFrame one —
+  * q_sql_flagship shares t9's DuckDB oracle.
   * One documented divergence: at duplicate (key, time) observations the
   * string-series LOCF breaks the tie by STATUS string here (each series
-  * is built independently) while the fused window path breaks it by
+  * is built independently) while the grid walk breaks it by
   * temperature (both columns ride one row there); identical whenever
   * (key, time) is unique — which the fixtures and any sane sensor feed
   * guarantee.
   * The array form is the API-fidelity path (a sensor's history becomes
-  * one array row); the window form remains the scale path (SURVEY
-  * §2.3 T3 design note).
+  * one array row); the grid walk is the scale path (TimeSeries' design
+  * note).
   *
   * AGO resolves against the frozen clock in the session conf
   * [[ClockKey]] when set — queries in the correctness gate must be
@@ -63,7 +66,7 @@ object Dialect {
   private def checkSeriesSize(n: Int, cap: Int): Unit =
     if (n > cap) throw new IllegalStateException(
       s"create_time_series: a single series exceeds $cap elements. The array form holds " +
-        "one key's whole history in one row — for histories this large use the window-form " +
+        "one key's whole history in one row — for histories this large use the grid-walk " +
         "operators (graft.operators.TimeSeries).")
 
   /** Sorted-series UDAF: the merge is list concatenation and the sort
@@ -97,9 +100,8 @@ object Dialect {
 
   /** Linear interpolation of a sorted (time, double) series onto grid
     * instants. prev = last observation at-or-before the instant (ties:
-    * greatest value — the window formulation's `_v asc` tiebreak);
-    * next = first strictly after. Identical IEEE op order to
-    * interpolateOnGrid: pv + ((nv - pv) * Δt) / Δtotal on micros longs.
+    * greatest value — the grid walk's value-ascending tiebreak);
+    * next = first strictly after; the value is `TimeSeries.linearAt`.
     */
   private def interpLinear(series: Seq[Row], grid: Seq[Timestamp]): Seq[TV] = {
     val obs = ensureSorted(
@@ -117,15 +119,10 @@ object Dialect {
       if (gu < lastGu) i = 0
       lastGu = gu
       while (i < obs.length && obs(i)._1 <= gu) i += 1
-      val v =
-        if (i == obs.length) obs(i - 1)._2 // past the last observation
-        else if (i == 0) obs.head._2 // before the first observation
-        else {
-          val (pt, pv) = obs(i - 1)
-          val (nt, nv) = obs(i)
-          pv + ((nv - pv) * (gu - pt).toDouble) / (nt - pt).toDouble
-        }
-      TV(g, v)
+      val (pt, pv) = if (i > 0) obs(i - 1) else (0L, 0.0)
+      val (nt, nv) = if (i < obs.length) obs(i) else (0L, 0.0)
+      // obs is non-empty, so at least one side exists: never null
+      TV(g, TimeSeries.linearAt(gu, i > 0, pt, pv, i < obs.length, nt, nv))
     }
   }
 

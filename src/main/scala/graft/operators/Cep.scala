@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,9 +21,9 @@ import scala.math.BigDecimal.RoundingMode
   *    one sorted pass: the A/B/C predicates are evaluated in a
   *    projection, one hash shuffle by key and one sort by
   *    (key, time, id) bring each key's rows together in order, and one
-  *    `mapPartitions` walks them through [[Machine]] — the per-event
-  *    transition the streaming operator (CepStream) runs live. One
-  *    matcher, two callers. Per-key memory is one partial match
+  *    `mapPartitions` ([[KeyedWalk]]) walks them through [[Machine]] —
+  *    the per-event transition the streaming operator (CepStream) runs
+  *    live. One matcher, two callers. Per-key memory is one partial match
   *    (≤ maxB buffered B rows): the sort spills, the iterator streams,
   *    and no key's rows are ever collected.
   *  - [[matchesBatch]], the fixed ERROR sandwich, is window functions
@@ -81,16 +81,12 @@ object Cep {
     c = col(p.status).cast("string") === lit(p.errorValue),
     minB = 1, maxB = p.maxB, withinMicros = p.withinMicros)
 
-  /** `c`, or a runtime error naming `column` on a row where it is NULL. */
-  private[graft] def nonNull(c: Column, column: String): Column =
-    when(c.isNull, raise_error(lit(
-      s"CEP input column '$column' holds a NULL; the pattern operators refuse it"))).otherwise(c)
-
   /** The value as the double every form computes with, refused if NULL. */
-  private[graft] def valueCol(p: Params): Column = nonNull(col(p.value).cast("double"), p.value)
+  private[graft] def valueCol(p: Params): Column =
+    KeyedWalk.nonNull(col(p.value).cast("double"), p.value, "CEP")
 
   /** The time column as given, refused if NULL. */
-  private[graft] def timeCol(p: Params): Column = nonNull(col(p.time), p.time)
+  private[graft] def timeCol(p: Params): Column = KeyedWalk.nonNull(col(p.time), p.time, "CEP")
 
   /** Decimal(18,2) half-up of a double — Spark's cast (via
     * `Double.toString`), so the machine's sums equal the window form's. */
@@ -332,10 +328,8 @@ object Cep {
       coalesce(spec.c, lit(false)).as("_isC"))
     // copy the scalars out of the spec: its Columns are not serializable
     val machine = Machine(spec.minB, spec.maxB, spec.withinMicros)
-    val matched = base
-      .repartition(col("_k"))
-      .sortWithinPartitions(col("_k"), col("_tu"), col("_id"))
-      .mapPartitions(rows => sortedPass(rows, machine))(Encoders.row(matchSchema(base.schema)))
+    val matched = KeyedWalk(base, "_k", Seq(col("_tu"), col("_id")),
+      matchSchema(base.schema))(walker(machine))
 
     val total = col("_b_n") + 2
     val avgNum = col("_a_v").cast("decimal(18,2)") + col("_c_v").cast("decimal(18,2)") +
@@ -370,43 +364,26 @@ object Cep {
       StructField("_b_hist", ArrayType(StringType, containsNull = false), nullable = false))
   }
 
-  private object NoKey
-
-  /** The batch side of [[Machine]]: walks rows sorted by (key, time, id) — the
-    * columns of [[matchesPattern]]'s `base` — through `machine`, one
-    * key after another, and yields a [[matchSchema]] row per match.
-    * Holds one key's partial match at a time. */
-  private def sortedPass(rows: Iterator[Row], machine: Machine): Iterator[Row] =
-    new Iterator[Row] {
-      private var key: Any = NoKey
+  /** The batch side of [[Machine]]: one key's walk over rows sorted by
+    * (time, id) — the columns of [[matchesPattern]]'s `base` — yielding
+    * a [[matchSchema]] row per match. Holds the key's partial match. */
+  private def walker(machine: Machine)(k: Any, emit: Row => Unit): KeyedWalk.Walker =
+    new KeyedWalk.Walker {
       private var st: Option[PartialMatch] = None
       private var aTime: Any = null // the pending A's own time value
-      private var out: Row = null
 
-      private def advance(): Unit = while (out == null && rows.hasNext) {
-        val r = rows.next()
-        val k = r.get(0)
-        // deepEquals: a binary key arrives as a fresh array on every row
-        if (!java.util.Objects.deepEquals(k, key)) { key = k; st = None }
+      def row(r: Row): Unit = {
         val tu = r.getLong(2)
         val v = r.getDouble(3)
         val s = r.getString(4)
         val isB = r.getBoolean(7)
         st = machine.step(st, tu, v, s, r.getBoolean(6), isB, r.getBoolean(8)) { pm =>
-          out = Row(k, aTime, pm.aTimeMicros, pm.aValue, pm.aStatus,
+          emit(Row(k, aTime, pm.aTimeMicros, pm.aValue, pm.aStatus,
             r.get(1), tu, v, s,
             pm.bValues.size, pm.bMin.getOrElse(null), pm.bMax.getOrElse(null),
-            pm.bSum.map(_.bigDecimal).orNull, pm.bHistory)
+            pm.bSum.map(_.bigDecimal).orNull, pm.bHistory))
         }
         if (!isB && st.isDefined) aTime = r.get(1)
-      }
-
-      def hasNext: Boolean = { advance(); out != null }
-      def next(): Row = {
-        if (!hasNext) throw new NoSuchElementException("next on an exhausted CEP pass")
-        val o = out
-        out = null
-        o
       }
     }
 }

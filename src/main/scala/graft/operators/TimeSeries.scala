@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Time-series operators: the Timestream dialect surface of the reference,
   * re-expressed as Spark-native plans.
@@ -15,22 +18,19 @@ import org.apache.spark.sql.functions._
   *  - CROSS JOIN UNNEST(series) AS t (time, value): queries.txt:16-17
   *  - flagship composite: queries.txt:2-19
   *
-  * Design note (scale): the interpolation path deliberately avoids the
-  * array-per-group representation for execution. Collecting a sensor's whole
-  * history into one array row caps scalability at per-key memory; instead we
-  * union the grid points with the observations and resolve previous/next
-  * observation per grid point with frame-bounded window functions. That is
-  * one hash-partition shuffle + one sort per key — the same shape Spark uses
-  * for any windowed analytic — and streams arbitrarily long per-key history.
-  * The array form (`createTimeSeries`) is still provided for API fidelity
-  * (UNNEST round-trips, SQL dialect), just not on the hot path.
+  * Design note (scale): interpolation never builds a key's series as one
+  * array row. It is one sorted walk ([[KeyedWalk]]): one hash shuffle by
+  * key, one sort by (key, time, value), and one pass that generates each
+  * key's grid instants as it meets them and settles every instant from
+  * the observations around it. No grid aggregate, union, explode or
+  * window. The array form (`createTimeSeries`, the SQL dialect) is
+  * still provided for API fidelity, just not on the hot path.
   *
-  * 100× caveat (standard for Window.partitionBy): one KEY's rows must fit
-  * a single partition's sort (spilling to disk beyond memory). Keys here
-  * are sensors — per-sensor history is bounded by retention, and a
-  * pathological hot sensor degrades to disk-backed sort, not failure. If
-  * keys were genuinely unbounded, pre-bucket by (key, coarse time range)
-  * and stitch range boundaries.
+  * Per-key memory is the grid instants since the key's last non-NULL
+  * value (each waits for the next one); the sort spills to disk beyond
+  * memory. A key's rows all go to one partition, so one hot sensor is
+  * one task's work: if keys were genuinely unbounded, pre-bucket by
+  * (key, coarse time range) and stitch range boundaries.
   */
 object TimeSeries {
 
@@ -62,95 +62,147 @@ object TimeSeries {
       status: String,
       step: String)
 
-  /** T2+T3+T4 fused: for each key, build the regular grid
-    * [min(time), max(time)] with `step`, linearly interpolate `value` onto
-    * it (INTERPOLATE_LINEAR) and carry the last `status` forward onto it
-    * (INTERPOLATE_LOCF).
+  /** INTERPOLATE_LINEAR at instant `gu` from the last observation at or
+    * before it (`pt`, `pv`; absent when `hasPrev` is false) and the first
+    * one after it (`nt`, `nv`; absent when `hasNext` is false), times in
+    * µs. Edge rules in order: pt = nt → pv; no next → pv; no prev → nv;
+    * neither → null. Otherwise pv + ((nv − pv) · Δt) / Δtotal on µs
+    * longs — the operation order the oracle replays bit for bit. The
+    * grid walk and the SQL dialect's `interpolate_linear` both call it.
+    */
+  def linearAt(gu: Long, hasPrev: Boolean, pt: Long, pv: Double,
+      hasNext: Boolean, nt: Long, nv: Double): java.lang.Double =
+    if (!hasPrev && !hasNext) null
+    else if (!hasNext || (hasPrev && pt == nt)) pv
+    else if (!hasPrev) nv
+    else pv + ((nv - pv) * (gu - pt).toDouble) / (nt - pt).toDouble
+
+  /** A grid step applied as `sequence` applies it: the i-th instant is
+    * the start plus i·step, split into months, days and µs. A day-time
+    * interval under a day (`1 second`, `1 HOUR`) is a fixed µs step. Whole
+    * days (`1 DAY`) and months (`1 MONTH`, a year-month interval) go
+    * through Spark's own interval add in the session time zone, so they
+    * keep the local wall time across a DST change. */
+  private final case class GridStep(months: Int, days: Int, micros: Long, zone: java.time.ZoneId) {
+    /** The i-th instant from `t0`, µs. */
+    def instant(t0: Long, i: Long): Long =
+      if (months == 0 && days == 0) Math.addExact(t0, Math.multiplyExact(i, micros))
+      else DateTimeUtils.timestampAddInterval(t0, Math.toIntExact(i * months),
+        Math.toIntExact(i * days), Math.multiplyExact(i, micros), zone)
+  }
+
+  private def gridStep(df: DataFrame, step: String): GridStep = {
+    val zone = DateTimeUtils.getZoneId(df.sparkSession.conf.get("spark.sql.session.timeZone"))
+    val day = 86400000000L
+    CatalystSqlParser.parseExpression(s"INTERVAL $step") match {
+      case Literal(us: Long, _: DayTimeIntervalType) if us > 0 =>
+        GridStep(0, (us / day).toInt, us % day, zone)
+      case Literal(m: Int, _: YearMonthIntervalType) if m > 0 => GridStep(m, 0, 0L, zone)
+      case _ => throw new IllegalArgumentException(
+        s"interpolation grid step '$step' must be a positive day-time or year-month interval")
+    }
+  }
+
+  /** A grid instant settled by the walk: its own time and the state at
+    * it (last non-NULL value and its time, LOCF status). */
+  private final case class Settled(g: Long, hasPrev: Boolean, pt: Long, pv: Double, locf: String)
+
+  /** One key's grid walk over rows (key, time µs, value, status) sorted
+    * by (time, value ASC NULLS FIRST, status ASC NULLS FIRST). */
+  private final class GridWalk(k: Any, emit: Row => Unit, step: GridStep)
+      extends KeyedWalk.Walker {
+    private var t0 = 0L
+    private var i = -1L // index of the next unsettled instant; -1 before the first row
+    private var g = 0L // that instant, µs
+    private var last = 0L // time of the key's latest row
+    private var hasPrev = false // the last non-NULL value so far: pv at pt
+    private var pt = 0L
+    private var pv = 0.0
+    private var locf: String = null // the last non-NULL status so far
+    private val waiting = new java.util.ArrayDeque[Settled]() // instants awaiting nv
+
+    def row(r: Row): Unit = {
+      val t = r.getLong(1)
+      if (i < 0) { t0 = t; i = 0; g = t }
+      // every instant before this row is settled by the rows at or before it
+      while (g < t) { waiting.add(settled()); advance() }
+      if (!r.isNullAt(2)) {
+        val v = r.getDouble(2)
+        while (!waiting.isEmpty) put(waiting.poll(), hasNext = true, t, v)
+        hasPrev = true; pt = t; pv = v
+      }
+      val s = r.getString(3)
+      if (s != null) locf = s
+      last = t
+    }
+
+    override def end(): Unit = {
+      while (!waiting.isEmpty) put(waiting.poll(), hasNext = false, 0L, 0.0)
+      while (g <= last) { put(settled(), hasNext = false, 0L, 0.0); advance() }
+    }
+
+    private def settled() = Settled(g, hasPrev, pt, pv, locf)
+    private def advance(): Unit = { i += 1; g = step.instant(t0, i) }
+    private def put(s: Settled, hasNext: Boolean, nt: Long, nv: Double): Unit =
+      emit(Row(k, s.g, linearAt(s.g, s.hasPrev, s.pt, s.pv, hasNext, nt, nv), s.locf))
+  }
+
+  /** T2+T3+T4 fused: for each key, the regular grid from the key's first
+    * time to its last with `step` (SEQUENCE), `value` linearly
+    * interpolated onto it (INTERPOLATE_LINEAR) and the last `status`
+    * carried onto it (INTERPOLATE_LOCF).
     *
-    * Output columns: key, "time" (grid instant), "temperature" (interpolated
-    * double), "status" (LOCF string).
+    * Output columns: key, "time" (grid instant, unique per key),
+    * "temperature" (interpolated double), "status" (LOCF string).
     *
-    * Implementation: union(observations, grid) → per-key window:
-    *   prev/next observation via last/first(ignoreNulls) with
-    *   unbounded-preceding / unbounded-following frames. Observations sort
-    *   before grid points at equal timestamps (is_grid tiebreak) so an
-    *   exact grid hit interpolates to the observed value and LOCF picks the
-    *   co-timed observation, matching Timestream semantics.
+    * One [[KeyedWalk]] over (key, time µs, value::double,
+    * status::string) sorted by (time, value ASC NULLS FIRST, status).
+    * Per key, grid instants start at the first time and are generated
+    * as the walk meets them. An instant g is settled once a row with
+    * time > g arrives (or the key ends): it takes the last non-NULL
+    * value at or before g (at a tie the greatest), its time, and the
+    * last non-NULL status (LOCF). It then waits for the next non-NULL
+    * value, its nv/nt (at a tie the smallest), or the key's end (nt
+    * NULL). [[linearAt]] gives the value. So an exact grid hit
+    * interpolates to the observed value and LOCF picks the co-timed
+    * observation, matching Timestream; a NULL value carries its status
+    * for LOCF but is skipped for interpolation.
+    *
+    * Input rules: a NULL time is refused with an error naming the
+    * column; the time column must be TIMESTAMP; `step` must be a
+    * positive day-time or year-month interval.
     */
   def interpolateOnGrid(df: DataFrame, p: GridParams): DataFrame = {
+    val key = df.select(col(p.key)).schema.head
+    val time = df.select(col(p.time)).schema.head
+    if (time.dataType != TimestampType) throw new IllegalArgumentException(
+      s"interpolation time column '${p.time}' is ${time.dataType.sql}; it must be TIMESTAMP")
+    val step = gridStep(df, p.step)
     val obs = df.select(
       col(p.key).as("_k"),
-      col(p.time).as("_t"),
+      unix_micros(KeyedWalk.nonNull(col(p.time), p.time, "interpolation")).as("_tu"),
       col(p.value).cast("double").as("_v"),
-      col(p.status).cast("string").as("_s"),
-      lit(0).as("_g"))
-
-    val grid = df
-      .groupBy(col(p.key).as("_k"))
-      .agg(sequence(min(col(p.time)), max(col(p.time)), expr(s"INTERVAL ${p.step}")).as("_grid"))
-      .select(col("_k"), explode(col("_grid")).as("_t"),
-        lit(null).cast("double").as("_v"), lit(null).cast("string").as("_s"),
-        lit(1).as("_g"))
-
-    // _v as final sort key: duplicate (key, ts) observations would
-    // otherwise make prev/next nondeterministic across runs/engines.
-    // asc_nulls_first matches the oracle's explicit NULLS FIRST (grid
-    // rows carry null _v; DuckDB defaults to NULLS LAST on ASC).
-    val base = Window.partitionBy(col("_k"))
-      .orderBy(col("_t"), col("_g"), col("_v").asc_nulls_first)
-    val wPrev = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // "next observation" = first non-null at-or-after the current row.
-    // Expressed as a RUNNING frame over the REVERSED ordering instead of
-    // first() over [currentRow, unboundedFollowing]: Spark evaluates an
-    // unbounded-FOLLOWING frame by rescanning the remainder of the
-    // partition for every row — O(n²) per key — while running frames
-    // are incremental O(n). Same rows, same values, ~3× faster flagship.
-    val wNextRun = Window.partitionBy(col("_k"))
-      .orderBy(col("_t").desc, col("_g").desc, col("_v").desc_nulls_last)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val obsTime = when(col("_v").isNotNull, col("_t"))
-    val annotated = obs.unionByName(grid)
-      .withColumn("_nv", last(col("_v"), ignoreNulls = true).over(wNextRun))
-      .withColumn("_nt", last(obsTime, ignoreNulls = true).over(wNextRun))
-      .withColumn("_pv", last(col("_v"), ignoreNulls = true).over(wPrev))
-      .withColumn("_pt", last(obsTime, ignoreNulls = true).over(wPrev))
-      .withColumn("_locf", last(col("_s"), ignoreNulls = true).over(wPrev))
-
-    // v = pv + (nv - pv) * (t - pt) / (nt - pt), micros integer deltas.
-    // Edges: pt == nt ⇔ grid point coincides with the only observation in
-    // range; nt null ⇔ grid point ties with the final observation (which
-    // sorts before it, emptying the following frame) → carry pv; pt null
-    // symmetric (only possible with null-valued leading observations).
-    val interp = when(col("_pt") === col("_nt"), col("_pv"))
-      .when(col("_nt").isNull, col("_pv"))
-      .when(col("_pt").isNull, col("_nv"))
-      .otherwise(
-        col("_pv") + (col("_nv") - col("_pv")) *
-          (unix_micros(col("_t")) - unix_micros(col("_pt"))) /
-          (unix_micros(col("_nt")) - unix_micros(col("_pt"))))
-
-    annotated
-      .filter(col("_g") === 1)
-      .select(
-        col("_k").as(p.key),
-        col("_t").as("time"),
-        interp.as("temperature"),
-        col("_locf").as("status"))
+      col(p.status).cast("string").as("_s"))
+    val out = StructType(Seq(
+      key.copy(name = "_k"),
+      StructField("_gu", LongType, time.nullable),
+      StructField("temperature", DoubleType),
+      StructField("status", StringType)))
+    KeyedWalk(obs, "_k", Seq(col("_tu"), col("_v").asc_nulls_first, col("_s").asc_nulls_first),
+      out)((k, emit) => new GridWalk(k, emit, step))
+      .select(col("_k").as(p.key), timestamp_micros(col("_gu")).as("time"),
+        col("temperature"), col("status"))
   }
 
-  /** T9 — the flagship composite (queries.txt:2-19): interpolate both
-    * series onto the grid, flatten, re-aggregate per (key, grid instant)
-    * with min(status) / avg(temperature) exactly as the reference query
-    * does after its double UNNEST + time equi-join.
+  /** T9 — the flagship composite (queries.txt:2-19): both series
+    * interpolated onto the grid and flattened. The reference's double
+    * UNNEST + time equi-join + per-(key, instant) min(status) /
+    * avg(temperature) regroup is the identity here, since each key's
+    * grid instants are unique; only the rounding remains.
     */
-  def flagship(df: DataFrame, p: GridParams): DataFrame = {
-    interpolateOnGrid(df, p)
-      .groupBy(col(p.key), col("time"))
-      .agg(
-        min(col("status")).as("status"),
-        graft.functions.Arith.r2(avg(col("temperature"))).as("temperature"))
-  }
+  def flagship(df: DataFrame, p: GridParams): DataFrame =
+    interpolateOnGrid(df, p).select(col(p.key), col("time"), col("status"),
+      graft.functions.Arith.r2(col("temperature")).as("temperature"))
 
   /** T7 — BIN(time, step): truncate a timestamp to a fixed-width bucket.
     * Grafana panels: grafana-dashboard/grafanaTimeSeriesre_Inventdemo.json:121,392,518.

@@ -10,7 +10,7 @@ import graft.functions.Dialect
   * INTERPOLATE_LINEAR / INTERPOLATE_LOCF, flattened (Spark spells
   * UNNEST as LATERAL VIEW explode), grid-aligned with the time
   * equi-join, re-aggregated — and it must hash-match the SAME oracle
-  * as the window-formulated t9.
+  * as the grid-walk t9.
   *
   * The relative-time query gives AGO()/TS_NOW()/BIN() their call sites
   * (P4/P6/T8/T7) with a frozen clock so the gate stays deterministic.

@@ -19,11 +19,13 @@ object TimeSeriesQueries {
   private val P = GridParams(key = "user_id", time = "ts", value = "value",
     status = "event_type", step = "1 HOUR")
 
-  /** Window-formulated interpolation, shared by the t3/t4/t9 oracles
-    * and (suffixed, time-windowed) by the incremental-export oracle.
-    * Must match TimeSeries.interpolateOnGrid exactly: same tiebreak
-    * (observations before grid at equal t), same micros integer math,
-    * same operator order in the interpolation formula.
+  /** Window-formulated interpolation in DuckDB SQL, shared by the
+    * t3/t4/t9 oracles and (suffixed, time-windowed) by the
+    * incremental-export oracle. An independent formulation of
+    * TimeSeries.interpolateOnGrid's grid walk that must land on the same
+    * rows: same tiebreak (observations before grid at equal t, then
+    * value ascending), same micros integer math, same operator order in
+    * the interpolation formula (TimeSeries.linearAt).
     */
   def gridCteDefs(sfx: String, where: String): String =
     s"""obs$sfx AS (
@@ -55,7 +57,7 @@ object TimeSeriesQueries {
 
   private val oracleGridCte: String = "WITH " + gridCteDefs("", "") + "\n"
 
-  /** The flagship oracle — shared by t9 (window formulation) and
+  /** The flagship oracle — shared by t9 (grid walk) and
     * q_sql_flagship (SQL-dialect array formulation): both engines'
     * flagship paths must land on this exact relation. */
   val flagshipOracle: String = oracleGridCte +

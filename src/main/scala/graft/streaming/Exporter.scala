@@ -340,15 +340,25 @@ object Exporter {
       .write.mode("overwrite").parquet(s"$outDir/$key")
   }
 
-  /** Crawl a raw-prefix lake back into one typed DataFrame: a single
-    * parquet read across every prefix (Spark's distributed file
-    * listing — no per-prefix driver loop), the window key recovered
-    * from the file path. The crawler role of the reference's catalog
-    * (README.md:359-) for layouts `partitionBy` discovery can't parse. */
-  def readRawPrefixExport(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/*")
+  /** Crawl a raw-prefix lake back into one typed DataFrame: one listing
+    * of the lake's window prefixes, then a single parquet read across
+    * all of them, the window key recovered from the file path. The
+    * crawler role of the reference's catalog (README.md:359-) for
+    * layouts `partitionBy` discovery can't parse. A lake with no window
+    * prefix is refused. */
+  def readRawPrefixExport(spark: SparkSession, outDir: String): DataFrame = {
+    val root = new Path(outDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefixes = (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
+      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath.toString).sorted
+    if (prefixes.isEmpty) throw new IllegalArgumentException(
+      s"raw-prefix export lake $outDir holds no window prefix")
+    spark.read.parquet(prefixes: _*)
       .withColumn("partition_key",
         regexp_extract(input_file_name(), "/([^/]+)/[^/]+$", 1))
+  }
 
   /** The reference's LIVE scheduled export — a 5-minute cron DAG,
     * catchup=False (mwaa/mwaa-cdk/dags/timestream-airflow-demo.py:88,

@@ -16,7 +16,7 @@ class DialectSpec extends SparkSpec {
   private val P = GridParams(key = "user_id", time = "ts", value = "value",
     status = "event_type", step = "1 HOUR")
 
-  test("SQL-text flagship equals the window-formulated flagship (sf0.001)") {
+  test("SQL-text flagship equals the DataFrame flagship (sf0.001)") {
     Tables.events(spark, sf("sf0.001")).createOrReplaceTempView("events")
     val sql = spark.sql(
       """WITH interpolated AS (

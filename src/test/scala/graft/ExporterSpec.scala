@@ -183,6 +183,12 @@ class ExporterSpec extends SparkSpec {
     assert(left == Set("2024-01-15T00-00"))
   }
 
+  test("a raw-prefix lake with no window prefix is refused, not read as empty") {
+    val out = freshDir
+    val e = intercept[IllegalArgumentException](Exporter.readRawPrefixExport(spark, out))
+    assert(e.getMessage.contains("holds no window prefix"), e.getMessage)
+  }
+
   test("window assignment plans a broadcast HASH join for uniform windows") {
     val events = Tables.events(spark, sf("sf0.001"))
     val uniform = Exporter.tagWindows(events, P, windows)._1
