@@ -54,6 +54,20 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$|project/'; then
     echo "$regrow" >&2
     exit 1
   fi
+  # One manifest format: zone maps and Blooms are per column only, so
+  # the retired single-column fork (statsCol, the "colstats" opt-out,
+  # the tableMeta header reader) must not regrow in src/main.
+  regrow=$(git diff --cached -U0 -- src/main | awk '
+    /^\+\+\+ / { f = substr($0, 7); next }
+    !/^\+/ { next }
+    /statsCol|"colstats"|tableMeta/ { print f ": " substr($0, 2) }')
+  if [ -n "$regrow" ]; then
+    echo "[precommit_guard] REFUSING COMMIT: lake metadata is per column" >&2
+    echo "[precommit_guard] only (colStats/colBlooms); keep statsCol," >&2
+    echo "[precommit_guard] \"colstats\" and tableMeta out of src/main:" >&2
+    echo "$regrow" >&2
+    exit 1
+  fi
   # GATES.md census: regenerate from the registry so the committed
   # census can never lag it. A diff means the registry changed without
   # the census — regenerate, auto-stage when GATES.md itself is part

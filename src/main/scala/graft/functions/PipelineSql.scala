@@ -553,46 +553,42 @@ object PipelineSql {
         int("version_diff", es(1), "from version"),
         int("version_diff", es(2), "to version"))
     }
+    // Bloom point read of a named column: files skipped from manifest
+    // metadata alone; the caller applies the exact row predicate
     reg("read_point") { es =>
-      argc("read_point", es, 2)
+      argc("read_point", es, 3)
       graft.sources.VersionedLake.readPoint(spark,
         str("read_point", es(0), "lake directory"),
-        str("read_point", es(1), "key value"))
+        str("read_point", es(1), "bloom column"),
+        str("read_point", es(2), "key value"), None)
     }
-    // zone-map range read: files skipped from manifest metadata alone;
-    // the caller still applies the exact row predicate on top (zone
-    // maps bound files, not rows)
-    // 3-arg form prunes on the legacy commit-time statsCol; the 4-arg
-    // form names ANY column with recorded per-column zone maps
-    // (timestamps probe in epoch micros, dates in epoch days)
-    // the 4-arg form with STRING bounds prunes on the truncated string
-    // envelopes commits record for every string column (binary UTF-8
-    // order — categorical filters like lang = 'en' probe with lo = hi)
+    // zone-map range read of a named column: files skipped from
+    // manifest metadata alone; the caller still applies the exact row
+    // predicate on top (zone maps bound files, not rows). Numeric
+    // bounds prune on the per-column min/max (timestamps probe in
+    // epoch micros, dates in epoch days); STRING bounds prune on the
+    // truncated string envelopes commits record for every string
+    // column (binary UTF-8 order — categorical filters like
+    // lang = 'en' probe with lo = hi)
     reg("read_range") { es =>
+      argc("read_range", es, 4)
       def isStr(e: Expression): Boolean = e match {
         case org.apache.spark.sql.catalyst.expressions.Literal(_, t) =>
           t == org.apache.spark.sql.types.StringType
         case _ => false
       }
-      if (es.length == 4 && isStr(es(2)) && isStr(es(3)))
+      if (isStr(es(2)) && isStr(es(3)))
         graft.sources.VersionedLake.readRange(spark,
           str("read_range", es(0), "lake directory"),
           str("read_range", es(1), "stats column"),
           str("read_range", es(2), "range low"),
           str("read_range", es(3), "range high"), None)
-      else if (es.length == 4)
+      else
         graft.sources.VersionedLake.readRange(spark,
           str("read_range", es(0), "lake directory"),
           str("read_range", es(1), "stats column"),
           dbl("read_range", es(2), "range low"),
           dbl("read_range", es(3), "range high"), None)
-      else {
-        argc("read_range", es, 3)
-        graft.sources.VersionedLake.readRange(spark,
-          str("read_range", es(0), "lake directory"),
-          dbl("read_range", es(1), "range low"),
-          dbl("read_range", es(2), "range high"))
-      }
     }
     // maintenance TVFs: the argument parsing happens at analysis, the
     // OPERATION at first execution, and the relation is its receipt —
@@ -603,13 +599,11 @@ object PipelineSql {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     regDeferred("lake_compact",
       StructType(Seq(StructField("committed_version", LongType)))) { es =>
-      if (es.length < 2 || es.length > 3)
-        fail("lake_compact", s"expects 2 or 3 arguments, got ${es.length}")
+      argc("lake_compact", es, 2)
       val dir = str("lake_compact", es(0), "lake directory")
       val part = str("lake_compact", es(1), "partition column")
-      val statsCol = es.lift(2).map(str("lake_compact", _, "stats column"))
       () => Seq(Seq(graft.sources.VersionedLake.compactPartitions(
-        spark, dir, part, statsCol = statsCol).toLong))
+        spark, dir, part).toLong))
     }
     reg("lake_row_count") { es =>
       if (es.length < 1 || es.length > 2)

@@ -31,13 +31,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    DIRECT column — no DISTINCT, no FILTER clause, nothing else in
   *    the select list. `count(col)` folds as rows − recorded per-file
   *    null counts, and requires EVERY scanned file to record one for
-  *    the column (legacy files, and columns added by schema evolution
-  *    after a file was written — whose rows read back as nulls — keep
-  *    the scan);
-  *  - every file the scan covers is a manifest entry WITH a recorded
-  *    row count (partition- or point-pruned scans still qualify: the
-  *    count folds only the scanned files' entries; legacy entries
-  *    without counts keep the scan).
+  *    the column (a column added by schema evolution after a file was
+  *    written — whose rows read back as nulls — keeps the scan);
+  *  - every file the scan covers is a manifest entry (partition- or
+  *    point-pruned scans still qualify: the count folds only the
+  *    scanned files' entries).
   *
   * `spark.graft.countmeta.enabled=false` switches the rule off.
   */
@@ -103,15 +101,14 @@ case class LakeCountFromManifest(spark: SparkSession) extends Rule[LogicalPlan] 
       .getOrElse(return None) // huge uncached manifest: keep the scan
       .filter(e => current.contains(
         graft.sources.VersionedLake.normalizePath(e.path)))
-    if (entries.size != current.size || !entries.forall(_.rows.isDefined))
-      return None
-    val total = entries.flatMap(_.rows).sum
+    if (entries.size != current.size) return None
+    val total = entries.map(_.rows).sum
     val vals = aggExprs.map {
       case Alias(ae: AggregateExpression, _) => ae.aggregateFunction match {
         // count(col) = rows - nulls, exact ONLY when every scanned
-        // file records a null count for the column (legacy files, or
-        // columns added by schema evolution after a file was written —
-        // whose rows surface as nulls on read — keep the scan)
+        // file records a null count for the column (a column added by
+        // schema evolution after a file was written — whose rows
+        // surface as nulls on read — keeps the scan)
         case Count(Seq(a: AttributeReference)) =>
           if (entries.forall(_.nullCounts.contains(a.name)))
             total - entries.map(_.nullCounts(a.name)).sum
@@ -155,9 +152,9 @@ object LakeCountFromManifest {
   *    round-trip not guaranteed).
   *  - every file the scan covers has recorded stats for every folded
   *    column (a NaN-bearing double file records NO stats — so a NaN
-  *    anywhere keeps the scan, preserving NaN-greatest max semantics),
-  *    and a recorded row count when a count(*) rides along. An empty
-  *    file list folds to NULL min/max and 0 rows — the SQL semantics.
+  *    anywhere keeps the scan, preserving NaN-greatest max semantics).
+  *    An empty file list folds to NULL min/max and 0 rows — the SQL
+  *    semantics.
   *
   * `spark.graft.minmaxmeta.enabled=false` switches the rule off.
   */
@@ -208,9 +205,7 @@ case class LakeMinMaxFromManifest(spark: SparkSession) extends Rule[LogicalPlan]
       .filter(e => current.contains(
         graft.sources.VersionedLake.normalizePath(e.path)))
     if (entries.size != current.size) return None
-    val needRows = aggs.exists(_.aggregateFunction.isInstanceOf[Count])
-    if (needRows && !entries.forall(_.rows.isDefined)) return None
-    val totalRows = entries.flatMap(_.rows).sum
+    val totalRows = entries.map(_.rows).sum
     // fold each aggregate to a literal; refuse the whole rewrite if any
     // single one can't be answered exactly from the manifest
     val folded: Map[AggregateExpression, Literal] = aggs.map { ae =>
@@ -243,10 +238,6 @@ case class LakeMinMaxFromManifest(spark: SparkSession) extends Rule[LogicalPlan]
       a: AttributeReference, isMin: Boolean): Option[Literal] = {
     if (entries.isEmpty) return Some(Literal(null, a.dataType))
     val per = entries.map(_.colStats.get(a.name).getOrElse(return None))
-    // NaN stats mean "no stats" everywhere else (readRange, ZoneMapPrune)
-    // — legacy manifests can carry them, and a NaN would both poison max
-    // (NaN sorts greatest) and silently drop out of min. Keep the scan.
-    if (per.exists { case (mn, mx) => mn.isNaN || mx.isNaN }) return None
     val d = if (isMin) per.map(_._1).min else per.map(_._2).max
     // beyond double's integer-exact range the recorded stat is already
     // rounded — folding it would return a value a real scan would not.

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types._
   * the surviving file list. The original Filter STAYS on top — zone
   * maps bound files, not rows — so the rewrite is semantics-preserving
   * by construction, exactly like [[graft.sources.VersionedLake
-  * .readRange]] whose overlap-and-NaN rules it shares.
+  * .readRange]] whose overlap rule it shares.
   *
   * Scope guards (a rule that fires wrongly is worse than no rule):
   * Filter DIRECTLY over a registered lake relation; testable leaves
@@ -40,7 +40,7 @@ import org.apache.spark.sql.types._
   * (either operand order; strict bounds conservatively widened to
   * closed intervals; any OTHER node — Not, UDFs — is opaque and
   * admits everything, and leaves under it are never tested); files
-  * without stats for a bounded column — or with NaN stats — are KEPT;
+  * without stats for a bounded column are KEPT;
   * the rewrite only happens when it strictly shrinks the CURRENT file
   * set (which also terminates the fixpoint: re-pruning a pruned scan
   * removes nothing). Timestamp and date literals fold through the
@@ -72,11 +72,6 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
   private def tryPrune(f: Filter, cond: Expression, lr: LogicalRelation,
       lakeDir: String, v: Int): LogicalPlan = {
     if (!usable(cond)) return f
-    // the legacy single-filter's column rides the manifest header;
-    // parsed only when a point probe could use it
-    val legacyBloom: Option[String] =
-      if (!hasPointLeaf(cond)) None
-      else graft.sources.VersionedLake.tableMetaAt(lakeDir, v)._2.map(_.column)
     val current = lr.relation match {
       case hfs: HadoopFsRelation =>
         hfs.location.inputFiles
@@ -95,7 +90,7 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
       .getOrElse(return f)
       .filter(e => current.contains(
         graft.sources.VersionedLake.normalizePath(e.path)))
-    val admissible = entries.filter(e => admits(e, legacyBloom, cond))
+    val admissible = entries.filter(e => admits(e, cond))
     if (admissible.size >= entries.size || entries.size != current.size) return f
     val pruned = graft.sources.VersionedLake.readFiles(
       spark, lakeDir, v, admissible.map(_.path))
@@ -127,13 +122,12 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     * row can never be dropped. Leaves under an opaque node are never
     * evaluated (a leaf inside NOT must not be tested positively). */
   private def admits(e: graft.sources.VersionedLake.Entry,
-      legacyBloom: Option[String], cond: Expression): Boolean = cond match {
-    case And(a, b) => admits(e, legacyBloom, a) && admits(e, legacyBloom, b)
-    case Or(a, b) => admits(e, legacyBloom, a) || admits(e, legacyBloom, b)
+      cond: Expression): Boolean = cond match {
+    case And(a, b) => admits(e, a) && admits(e, b)
+    case Or(a, b) => admits(e, a) || admits(e, b)
     case leaf =>
       numericLeaf(leaf).forall { case (name, lo, hi) =>
         e.colStats.get(name) match {
-          case Some((mn, mx)) if mn.isNaN || mx.isNaN => true // no stats
           case Some((mn, mx)) => mx >= lo && mn <= hi
           case None => true
         }
@@ -153,24 +147,18 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
           case None => true // no string stats for this file: kept
         }
       } && pointLeaf(leaf).forall { case (name, keys) =>
-        // the planner twin of readPoint: every per-file Bloom recorded
-        // for the column (the column-SET filters, plus the legacy
-        // single filter when it covers this column) must admit at
-        // least one probed key — false negatives are impossible, so
-        // a definite miss skips the file
-        val filters = e.colBlooms.get(name).toSeq ++
-          (if (legacyBloom.contains(name)) e.bloom.toSeq else Nil)
-        filters.forall(fb => keys.exists(fb.mightContain))
+        // the planner twin of readPoint: the file's Bloom for the
+        // column, when recorded, must admit at least one probed key —
+        // false negatives are impossible, so a definite miss skips the
+        // file
+        e.colBlooms.get(name).forall(fb => keys.exists(fb.mightContain))
       } && nullLeaf(leaf).forall { case (name, wantNull) =>
         // recorded per-file null counts decide null predicates exactly:
         // IS NULL needs at least one null; IS NOT NULL needs at least
-        // one non-null (row count required to know that). Missing
-        // stats (legacy files, evolved columns) keep the file.
+        // one non-null. A column added after the file was written has
+        // no count there (all its rows read as null): kept.
         if (wantNull) e.nullCounts.get(name).forall(_ > 0)
-        else (e.rows, e.nullCounts.get(name)) match {
-          case (Some(r), Some(nc)) => nc < r
-          case _ => true
-        }
+        else e.nullCounts.get(name).forall(_ < e.rows)
       }
   }
 
@@ -182,12 +170,6 @@ case class ZoneMapPrune(spark: SparkSession) extends Rule[LogicalPlan] {
     case Or(a, b) => usable(a) || usable(b)
     case leaf => numericLeaf(leaf).nonEmpty || strLeaf(leaf).nonEmpty ||
       pointLeaf(leaf).nonEmpty || nullLeaf(leaf).nonEmpty
-  }
-
-  private def hasPointLeaf(cond: Expression): Boolean = cond match {
-    case And(a, b) => hasPointLeaf(a) || hasPointLeaf(b)
-    case Or(a, b) => hasPointLeaf(a) || hasPointLeaf(b)
-    case leaf => pointLeaf(leaf).nonEmpty
   }
 
   /** One comparison leaf as a closed numeric interval the column must

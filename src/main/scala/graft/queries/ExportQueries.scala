@@ -76,8 +76,7 @@ object ExportQueries {
       val ev = Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")).cast("string"))
       graft.sources.VersionedLake.create(ev, s"$o/lake", "event_date",
-        statsCol = Some("value"),
-        bloom = Some(graft.sources.VersionedLake.BloomSpec("event_id")))
+        blooms = Seq(graft.sources.VersionedLake.BloomSpec("event_id")))
       val scope = ev.filter(col("event_date") <= "2024-01-15")
       val changes = scope
         .filter(col("event_id") % 7 === 0 && col("event_id") % 13 =!= 0)
@@ -90,9 +89,7 @@ object ExportQueries {
           .withColumn("event_type", lit("backfill"))
           .withColumn("_deleted", lit(false)))
       graft.sources.VersionedLake.mergeUpsert(
-        s, s"$o/lake", changes, Seq("event_id"), "event_date",
-        statsCol = Some("value"),
-        bloom = Some(graft.sources.VersionedLake.BloomSpec("event_id")))
+        s, s"$o/lake", changes, Seq("event_id"), "event_date")
     }
     s"$out/lake"
   }
@@ -128,7 +125,6 @@ object ExportQueries {
       val ev = Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")).cast("string"))
       graft.sources.VersionedLake.create(ev, s"$o/lake", "event_date",
-        statsCol = Some("value"),
         blooms = Seq(graft.sources.VersionedLake.BloomSpec("event_id"),
           graft.sources.VersionedLake.BloomSpec("user_id")),
         props = Map("fixture" -> "s21", "partition" -> "event_date"))
@@ -647,7 +643,7 @@ object ExportQueries {
         val probe = Tables.events(s, dir)
           .filter(col("event_id") % 13 =!= 0)
           .agg(min(col("event_id"))).head().getLong(0)
-        graft.sources.VersionedLake.readPoint(s, lake, probe.toString)
+        graft.sources.VersionedLake.readPoint(s, lake, "event_id", probe.toString, None)
           .filter(col("event_id") === probe)
           .select(col("event_id"), col("user_id"), col("event_type"),
             round(col("value") * 100).cast("long").as("value_cents"),
@@ -678,7 +674,7 @@ object ExportQueries {
           s"""SELECT CAST(event_date AS STRING) AS event_date,
              |       count(*) AS n_rows,
              |       sum(CAST(round(value * 100) AS BIGINT)) AS sum_cents
-             |FROM read_range('$lake', 40.0D, 120.0D)
+             |FROM read_range('$lake', 'value', 40.0D, 120.0D)
              |WHERE value >= 40.0 AND value <= 120.0
              |GROUP BY CAST(event_date AS STRING)
              |ORDER BY event_date""".stripMargin)
@@ -1078,8 +1074,7 @@ object ExportQueries {
     // Lake maintenance 11: PER-COLUMN zone maps. Every commit records
     // min/max for every stats-encodable column (numeric, date,
     // timestamp — the Iceberg/Delta-class per-column metadata), so a
-    // range read prunes on ANY recorded column, not just a single
-    // declared statsCol. The gate runs the column-aware readRange on
+    // range read prunes on ANY recorded column. The gate runs readRange on
     // two DIFFERENT columns of the shared fixture (value, user_id) and
     // hashes both legs against plain range filters over the merged
     // state; exact per-column skip sets and the loud refusal for

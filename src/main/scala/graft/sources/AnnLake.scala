@@ -444,12 +444,8 @@ object AnnLake {
     * frozen centroids, so as the corpus distribution moves, cells
     * skew; a skewed cell means partial-probe searches read more data
     * for the same recall. One row per cell: (cell, files, rows).
-    * `rows` is null for any cell holding at least one file written
-    * before row counts were recorded in the manifest — null, not a
-    * silent partial sum over only the counted files, so a drift check
-    * can never compare fabricated populations (compact the lake to
-    * refresh the counts). Check max(rows)/avg(rows) on a cadence and
-    * [[reindex]] when it drifts past tolerance. */
+    * Check max(rows)/avg(rows) on a cadence and [[reindex]] when it
+    * drifts past tolerance. */
   def cellStats(spark: SparkSession, lakeDir: String): DataFrame = {
     import spark.implicits._
     val root = resolved(lakeDir)
@@ -459,11 +455,7 @@ object AnnLake {
       .map(e => (e.partition, 1L, e.rows))
       .toDF("cell", "files", "rows")
       .groupBy(col("cell"))
-      .agg(sum(col("files")).as("files"),
-        // sum() skips nulls; a partial sum presented as the population
-        // would silently understate — poison the cell to null instead
-        when(count(col("rows")) === count(lit(1)), sum(col("rows")))
-          .as("rows"))
+      .agg(sum(col("files")).as("files"), sum(col("rows")).as("rows"))
   }
 
   /** REINDEX — the drift repair: retrain the quantizer on the CURRENT

@@ -41,16 +41,32 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * Layout under `lakeDir`:
   * {{{
   *   data/<partitionCol>=<v>/c<commit>-part-*.parquet   immutable
-  *   _versions/v<N>.manifest    optional "#batchid=<id>" /
-  *                              "#statscol=<col>" / "#bloom=<col>:<k>:<m>"
-  *                              headers (the table's metadata spec,
-  *                              carried forward by every commit so
-  *                              appends/merges/compactions inherit it),
-  *                              then one "partitionValue\tpath[\tmin\tmax
-  *                              [\tk:m:bloomwords]]" line per file
+  *   _versions/v<N>.manifest    one manifest per committed version
   *   _versions/CURRENT          advisory hint; the source of truth is
   *                              the set of committed manifests
   * }}}
+  *
+  * One manifest format, written by every commit and refused by every
+  * reader in any other shape (the error names the file):
+  * {{{
+  *   #format=1                      first line, always
+  *   #batchid=<id>                  optional: this commit's batch id
+  *   #retractid=<id>                optional: this commit's retraction id
+  *   #batchwm=<id>                  mandatory: highest batch id so far
+  *   #retractwm=<id>                mandatory: highest retraction id so far
+  *   #mbloom=<col>:<k>:<m>          0..n: the table's Bloom columns
+  *   #props=<k>=<v>&...             optional: the table's properties
+  *   #schema=<json>                 mandatory: the table's schema
+  *   #committs=<epoch millis>       mandatory: commit wall time
+  *   partition \t path \t rows \t colStats \t colBlooms \t strStats \t nullCounts
+  * }}}
+  * one tab-separated entry line per file. Each per-column field is a
+  * `;`-joined list sorted by column name (names URL-encoded): colStats
+  * `col:min:max` (finite doubles, see [[statsEncoding]]), colBlooms
+  * `col:k:m:hexwords`, strStats `col:min:max` (URL-encoded truncated
+  * envelope), nullCounts `col:n`. The Bloom columns, properties and
+  * schema are the table's metadata spec: every commit carries them
+  * forward, so appends, merges and compactions inherit it.
   *
   * Scale shape: manifests are file-count-sized metadata (the same
   * scaling argument as any table format); reads hand Spark an explicit
@@ -82,13 +98,12 @@ object VersionedLake {
   /** One manifest line: a data file, its partition value (in the
     * Hive-ESCAPED directory form Spark writes — %-encoded special
     * chars, `__HIVE_DEFAULT_PARTITION__` for null; raw caller values
-    * go through [[escapedPartition]] before comparing), and (when
-    * the commit recorded them) the zone-map min/max of the stats
-    * column — the planning-time file-skipping metadata. */
-  final case class Entry(partition: String, path: String,
-      min: Option[Double], max: Option[Double],
-      bloom: Option[FileBloom] = None,
-      rows: Option[Long] = None,
+    * go through [[escapedPartition]] before comparing), its row count
+    * from the parquet footer, and the per-column zone maps, Blooms and
+    * null counts its commit recorded — the planning-time file-skipping
+    * metadata. A column missing from a map has no stats in that file
+    * (all-null, not stats-encodable, or added by a later commit). */
+  final case class Entry(partition: String, path: String, rows: Long,
       colStats: Map[String, (Double, Double)] = Map.empty,
       colBlooms: Map[String, FileBloom] = Map.empty,
       strStats: Map[String, (String, String)] = Map.empty,
@@ -142,13 +157,35 @@ object VersionedLake {
     else
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
 
+  /** The first line of every manifest: the one format this lake reads
+    * and writes (the layout is in the object doc). */
+  private val FormatHeader = "#format=1"
+
+  /** One committed version as its manifest records it: the commit's
+    * headers, then its file entries. `schemaJson` is kept as written,
+    * so [[renderManifest]] reproduces the file byte for byte. */
+  private[graft] final case class Manifest(
+      batchId: Option[Long],
+      retractId: Option[Long],
+      batchWm: Long,
+      retractWm: Long,
+      blooms: Seq[BloomSpec],
+      props: Map[String, String],
+      schemaJson: String,
+      commitTs: Long,
+      entries: Seq[Entry]) {
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
+
   /** Committed manifests are IMMUTABLE (the hard-link claim is the
-    * commit point; a slot is never rewritten), so their parsed entries
-    * cache perfectly: the planner rules re-derive zone maps on every
+    * commit point; a slot is never rewritten), so their parse caches
+    * perfectly: the planner rules re-derive zone maps on every
     * optimized query, and re-parsing a 100k-file manifest per query is
     * avoidable driver overhead. Bounded LRU; entries are validated
     * against the file's (mtime, size, head/tail fingerprint) so even an
-    * out-of-band manifest edit (manual repair, a legacy-simulation
+    * out-of-band manifest edit (manual repair, a doctored-manifest
     * test) reparses rather than serving stale entries — the fingerprint
     * covers equal-length in-place edits that coarse-mtime filesystems
     * would otherwise hide (r18 ADVICE), and since r20 probes the middle
@@ -160,10 +197,10 @@ object VersionedLake {
     * still fails loudly. */
   private val ManifestCacheSize = 64
   private val manifestCache =
-    new java.util.LinkedHashMap[(String, Int), (Long, Long, Long, Seq[Entry])](
+    new java.util.LinkedHashMap[(String, Int), (Long, Long, Long, Manifest)](
       ManifestCacheSize, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), (Long, Long, Long, Seq[Entry])]): Boolean =
+          e: java.util.Map.Entry[(String, Int), (Long, Long, Long, Manifest)]): Boolean =
         size() > ManifestCacheSize
     }
 
@@ -211,8 +248,8 @@ object VersionedLake {
           s"version manifest $f does not exist (vacuumed concurrently?)")
     }
 
-  private def cachedEntries(k: (String, Int),
-      stamp: (Long, Long, Long)): Option[Seq[Entry]] =
+  private def cachedManifest(k: (String, Int),
+      stamp: (Long, Long, Long)): Option[Manifest] =
     manifestCache.synchronized {
       val hit = manifestCache.get(k)
       if (hit != null && (hit._1, hit._2, hit._3) == stamp) Some(hit._4)
@@ -220,7 +257,7 @@ object VersionedLake {
     }
 
   private def parseAndCache(f: java.nio.file.Path, k: (String, Int),
-      stamp: (Long, Long, Long)): Seq[Entry] = {
+      stamp: (Long, Long, Long)): Manifest = {
     val parsed = parseManifest(f)
     manifestCache.synchronized {
       manifestCache.put(k, (stamp._1, stamp._2, stamp._3, parsed))
@@ -229,15 +266,24 @@ object VersionedLake {
     parsed
   }
 
-  /** Full manifest entries of a version, zone maps included. Header
-    * lines (`#key=value` — e.g. the streaming batch id) are skipped. */
-  def manifestEntries(lakeDir: String, version: Int): Seq[Entry] = {
-    val f = Paths.get(s"${versionsDir(lakeDir)}/v$version.manifest")
+  private def manifestPath(lakeDir: String, version: Int): java.nio.file.Path =
+    Paths.get(s"${versionsDir(lakeDir)}/v$version.manifest")
+
+  /** A version's parsed manifest, headers and entries — the one read
+    * path every question about a committed version goes through, so a
+    * manifest in any other format is refused whichever reader meets it
+    * first. */
+  private[graft] def loadManifest(lakeDir: String, version: Int): Manifest = {
+    val f = manifestPath(lakeDir, version)
     require(Files.exists(f), s"version $version does not exist under $lakeDir")
     val stamp = manifestStamp(f)
     val k = (lakeDir, version)
-    cachedEntries(k, stamp).getOrElse(parseAndCache(f, k, stamp))
+    cachedManifest(k, stamp).getOrElse(parseAndCache(f, k, stamp))
   }
+
+  /** Full manifest entries of a version, zone maps included. */
+  def manifestEntries(lakeDir: String, version: Int): Seq[Entry] =
+    loadManifest(lakeDir, version).entries
 
   private val warnedHugeManifests =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -254,11 +300,11 @@ object VersionedLake {
     * the cached parse serves the planner too. Warns once per lake. */
   private[graft] def manifestEntriesForPlanning(lakeDir: String,
       version: Int): Option[Seq[Entry]] = {
-    val f = Paths.get(s"${versionsDir(lakeDir)}/v$version.manifest")
+    val f = manifestPath(lakeDir, version)
     if (!Files.exists(f)) return None
     val stamp = manifestStamp(f)
     val k = (lakeDir, version)
-    cachedEntries(k, stamp).orElse {
+    cachedManifest(k, stamp).orElse {
       val maxBytes = java.lang.Long.getLong("graft.manifest.maxPlanBytes",
         16L << 20)
       if (stamp._2 > maxBytes) {
@@ -269,69 +315,125 @@ object VersionedLake {
             "-Dgraft.manifest.maxPlanBytes")
         None
       } else Some(parseAndCache(f, k, stamp))
-    }
+    }.map(_.entries)
   }
 
-  private def parseManifest(f: java.nio.file.Path): Seq[Entry] = {
-    new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-      .split("\n").toSeq.filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { line =>
-        def num(v: String): Option[Double] =
-          if (v.isEmpty) None else Some(v.toDouble)
-        def bl(v: String): Option[FileBloom] = if (v.isEmpty) None else {
-          val parts = v.split(":", 3)
-          Some(FileBloom(parts(0).toInt, parts(1).toInt,
-            parts(2).split(",").map(java.lang.Long.parseUnsignedLong(_, 16))))
-        }
-        def rw(v: String): Option[Long] =
-          if (v.isEmpty) None else Some(v.toLong)
-        def cs(v: String): Map[String, (Double, Double)] =
-          if (v.isEmpty) Map.empty
-          else v.split(";").iterator.map { ent =>
-            val Array(n, mn, mx) = ent.split(":", 3)
-            java.net.URLDecoder.decode(n, "UTF-8") -> ((mn.toDouble, mx.toDouble))
-          }.toMap
-        def cb(v: String): Map[String, FileBloom] =
-          if (v.isEmpty) Map.empty
-          else v.split(";").iterator.map { ent =>
-            val Array(n, k, m, ws) = ent.split(":", 4)
-            java.net.URLDecoder.decode(n, "UTF-8") -> FileBloom(k.toInt, m.toInt,
-              ws.split(",").map(java.lang.Long.parseUnsignedLong(_, 16)))
-          }.toMap
-        def ss(v: String): Map[String, (String, String)] =
-          if (v.isEmpty) Map.empty
-          else v.split(";").iterator.map { ent =>
-            val Array(n, mn, mx) = ent.split(":", 3)
-            def dec(x: String) = java.net.URLDecoder.decode(x, "UTF-8")
-            dec(n) -> ((dec(mn), dec(mx)))
-          }.toMap
-        def nc(v: String): Map[String, Long] =
-          if (v.isEmpty) Map.empty
-          else v.split(";").iterator.map { ent =>
-            val Array(n, c) = ent.split(":", 2)
-            java.net.URLDecoder.decode(n, "UTF-8") -> c.toLong
-          }.toMap
-        line.split("\t", -1) match {
-          case Array(p, path) => Entry(p, path, None, None)
-          case Array(p, path, mn, mx) => Entry(p, path, num(mn), num(mx))
-          case Array(p, path, mn, mx, b) =>
-            Entry(p, path, num(mn), num(mx), bl(b))
-          case Array(p, path, mn, mx, b, r) =>
-            Entry(p, path, num(mn), num(mx), bl(b), rw(r))
-          case Array(p, path, mn, mx, b, r, c) =>
-            Entry(p, path, num(mn), num(mx), bl(b), rw(r), cs(c))
-          case Array(p, path, mn, mx, b, r, c, mb) =>
-            Entry(p, path, num(mn), num(mx), bl(b), rw(r), cs(c), cb(mb))
-          case Array(p, path, mn, mx, b, r, c, mb, st) =>
-            Entry(p, path, num(mn), num(mx), bl(b), rw(r), cs(c), cb(mb), ss(st))
-          case Array(p, path, mn, mx, b, r, c, mb, st, nl) =>
-            Entry(p, path, num(mn), num(mx), bl(b), rw(r), cs(c), cb(mb),
-              ss(st), nc(nl))
-          case other =>
-            throw new IllegalStateException(
-              s"malformed manifest line (${other.length} fields): $line")
-        }
+  private val MBloomValue = """(.+):(\d+):(\d+)""".r
+  private val HeaderKeys =
+    Set("batchid", "retractid", "batchwm", "retractwm", "mbloom", "props",
+      "schema", "committs")
+
+  /** Parse one manifest file, refusing — with the file's name — any
+    * shape [[renderManifest]] does not write: a missing or unknown
+    * `#format`, an unknown, repeated or missing mandatory header, an
+    * entry line with other than seven fields or an unparsable field,
+    * and a NaN zone-map bound (the writer records none, and every NaN
+    * comparison is false, so one would silently prune a file). */
+  private def parseManifest(f: java.nio.file.Path): Manifest = {
+    def refuse(why: String): Nothing =
+      throw new IllegalStateException(s"manifest $f: $why")
+    def field[A](what: String, v: String)(p: => A): A =
+      try p catch {
+        case scala.util.control.NonFatal(e) => refuse(s"malformed $what '$v' ($e)")
       }
+    def dec(x: String) = java.net.URLDecoder.decode(x, "UTF-8")
+    def perCol[V](what: String, v: String)(p: String => V): Map[String, V] =
+      if (v.isEmpty) Map.empty
+      else v.split(";").iterator.map { ent =>
+        val i = ent.indexOf(':')
+        if (i < 0) refuse(s"malformed $what entry '$ent'")
+        dec(ent.substring(0, i)) -> field(what, ent)(p(ent.substring(i + 1)))
+      }.toMap
+    def pair(v: String): (String, String) = {
+      val Array(a, b) = v.split(":", 2)
+      (a, b)
+    }
+    def words(v: String): Array[Long] =
+      v.split(",").map(java.lang.Long.parseUnsignedLong(_, 16))
+    val lines = new String(Files.readAllBytes(f), StandardCharsets.UTF_8).split("\n")
+    if (lines.headOption.forall(_ != FormatHeader))
+      refuse(s"first line must be '$FormatHeader', found " +
+        s"'${lines.headOption.getOrElse("")}'")
+    val (headerLines, entryLines) = lines.iterator.drop(1).toSeq.span(_.startsWith("#"))
+    val headers = headerLines.map { h =>
+      val i = h.indexOf('=')
+      val key = if (i < 0) h.drop(1) else h.substring(1, i)
+      if (i < 0 || !HeaderKeys.contains(key)) refuse(s"unknown header '$h'")
+      key -> h.substring(i + 1)
+    }
+    def opt(key: String): Option[String] = headers.collect { case (`key`, v) => v } match {
+      case Seq() => None
+      case Seq(v) => Some(v)
+      case _ => refuse(s"header #$key repeats")
+    }
+    def req(key: String): String =
+      opt(key).getOrElse(refuse(s"missing mandatory header #$key"))
+    def long(key: String, v: String): Long = field(s"#$key", v)(v.toLong)
+    val entries = entryLines.map { line =>
+      val fs = line.split("\t", -1)
+      if (fs.length != 7)
+        refuse(s"entry line has ${fs.length} fields, expected 7: $line")
+      val e = Entry(fs(0), fs(1), field("row count", fs(2))(fs(2).toLong),
+        colStats = perCol("colStats", fs(3)) { v =>
+          val (mn, mx) = pair(v); (mn.toDouble, mx.toDouble)
+        },
+        colBlooms = perCol("colBlooms", fs(4)) { v =>
+          val Array(k, m, ws) = v.split(":", 3)
+          FileBloom(k.toInt, m.toInt, words(ws))
+        },
+        strStats = perCol("strStats", fs(5)) { v =>
+          val (mn, mx) = pair(v); (dec(mn), dec(mx))
+        },
+        nullCounts = perCol("nullCounts", fs(6))(_.toLong))
+      e.colStats.collectFirst {
+        case (c, (mn, mx)) if mn.isNaN || mx.isNaN => c
+      }.foreach(c => refuse(s"NaN zone-map bound for column '$c' of ${e.path}"))
+      e
+    }
+    Manifest(
+      batchId = opt("batchid").map(long("batchid", _)),
+      retractId = opt("retractid").map(long("retractid", _)),
+      batchWm = long("batchwm", req("batchwm")),
+      retractWm = long("retractwm", req("retractwm")),
+      blooms = headers.collect { case ("mbloom", v) => v }.map {
+        case v @ MBloomValue(c, k, m) => field("#mbloom", v)(BloomSpec(c, k.toInt, m.toInt))
+        case v => refuse(s"malformed #mbloom '$v'")
+      },
+      props = opt("props").fold(Map.empty[String, String]) { body =>
+        if (body.isEmpty) Map.empty
+        else body.split("&").iterator.map { kv =>
+          field("#props", kv) { val Array(k, v) = kv.split("=", 2); dec(k) -> dec(v) }
+        }.toMap
+      },
+      schemaJson = req("schema"),
+      commitTs = long("committs", req("committs")),
+      entries = entries)
+  }
+
+  /** The one manifest layout (see the object doc); [[parseManifest]]
+    * inverts it exactly, so a parsed manifest re-renders to the same
+    * bytes. */
+  private[graft] def renderManifest(m: Manifest): String = {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    def perCol[V](kv: Map[String, V])(f: V => String): String =
+      kv.toSeq.sortBy(_._1).map { case (n, v) => s"${enc(n)}:${f(v)}" }.mkString(";")
+    val headers = Seq(FormatHeader) ++
+      m.batchId.map(id => s"#batchid=$id") ++
+      m.retractId.map(id => s"#retractid=$id") ++
+      Seq(s"#batchwm=${m.batchWm}", s"#retractwm=${m.retractWm}") ++
+      m.blooms.map(b => s"#mbloom=${b.column}:${b.k}:${b.m}") ++
+      (if (m.props.isEmpty) Nil else Seq("#props=" + m.props.toSeq.sortBy(_._1)
+        .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&"))) ++
+      Seq(s"#schema=${m.schemaJson}", s"#committs=${m.commitTs}")
+    headers.map(_ + "\n").mkString + m.entries.map { e =>
+      Seq(e.partition, e.path, e.rows.toString,
+        perCol(e.colStats) { case (lo, hi) => s"$lo:$hi" },
+        perCol(e.colBlooms) { fb =>
+          s"${fb.k}:${fb.m}:" + fb.words.map(java.lang.Long.toHexString).mkString(",")
+        },
+        perCol(e.strStats) { case (lo, hi) => s"${enc(lo)}:${enc(hi)}" },
+        perCol(e.nullCounts)(_.toString)).mkString("\t")
+    }.mkString("\n")
   }
 
   /** (partitionValue, absolutePath) entries of a version's manifest. */
@@ -342,12 +444,13 @@ object VersionedLake {
     * expired it) — lets replay guards distinguish "provably never
     * committed" from "history no longer inspectable". */
   private[graft] def manifestExists(lakeDir: String, version: Int): Boolean =
-    Files.exists(Paths.get(s"${versionsDir(lakeDir)}/v$version.manifest"))
+    Files.exists(manifestPath(lakeDir, version))
 
-  /** Create version 1 from `df`, partitioned by `partitionCol`.
-    * `statsCol` (numeric) turns on zone maps: every commit records the
-    * column's per-file min/max in the manifest, and
-    * [[readRange]] then skips files at planning time.
+  /** Create version 1 from `df`, partitioned by `partitionCol`. Every
+    * commit records per-file zone maps for every column (numeric, date
+    * and timestamp min/max, truncated string envelopes, null counts),
+    * so [[readRange]] and the planner rules can skip files on any of
+    * them.
     *
     * `blooms` declares a column SET to record per-file Bloom filters
     * for (the point-lookup complement of the per-column zone maps —
@@ -356,43 +459,29 @@ object VersionedLake {
     * in every manifest header and carried forward by every commit —
     * the home for CONSTRUCTION PARAMETERS (a partition-count a writer
     * hashed with, a signature geometry) that later appends and reads
-    * must agree on; validate with [[requireProps]]. Both, like
-    * statsCol/bloom, become the table's recorded metadata spec that
-    * all later commits inherit. */
+    * must agree on; validate with [[requireProps]]. Both become the
+    * table's recorded metadata spec that all later commits inherit. */
   def create(df: DataFrame, lakeDir: String, partitionCol: String,
-      statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
       batchId: Option[Long] = None,
       blooms: Seq[BloomSpec] = Nil,
       props: Map[String, String] = Map.empty): Unit = {
     require(currentVersion(lakeDir) == 0,
       s"$lakeDir already has commits; use mergeUpsert")
-    val entries = writeCommitFiles(df, lakeDir, commitId = 1, partitionCol,
-      statsCol, bloom, blooms, colStatsOn(props))
-    if (!tryCommitManifest(lakeDir, version = 1, entries, batchId = batchId,
-      statsCol = statsCol, bloom = bloom,
-      schemaJson = Some(df.schema.json), mblooms = blooms, props = props)) {
+    val entries = writeCommitFiles(df, lakeDir, commitId = 1, partitionCol, blooms)
+    if (!tryCommitManifest(lakeDir, version = 1, entries, batchId, None,
+        df.schema.json, blooms, props)) {
       entries.foreach(e => Files.deleteIfExists(Paths.get(e.path)))
       throw new java.util.ConcurrentModificationException(
         s"another writer created $lakeDir concurrently")
     }
   }
 
-  /** The opt-out for the per-commit all-columns stats job: a table
-    * created with props("colstats") = "off" records only the legacy
-    * single statsCol zone map (if any) — plain appends on wide numeric
-    * tables then pay no per-commit stats scan, at the price of no
-    * column-aware [[readRange]] pruning. Default ON: per-column
-    * min/max is one aggregate over only the NEW files of each commit. */
-  private def colStatsOn(props: Map[String, String]): Boolean =
-    !props.get("colstats").contains("off")
-
   /** Validate construction parameters against the table's recorded
     * [[tableProps]]: every expected key must match the recorded value
     * exactly. Fails LOUDLY on mismatch — a writer appending with a
     * different partition-count/geometry than the lake was built with
     * would silently corrupt later pruned reads. Keys the lake never
-    * recorded (pre-props lakes) pass unchecked. */
+    * recorded pass unchecked. */
   def requireProps(lakeDir: String, expected: Map[String, String]): Unit = {
     val recorded = tableProps(lakeDir)
     val bad = expected.toSeq.flatMap { case (k, v) =>
@@ -423,30 +512,6 @@ object VersionedLake {
     readFiles(spark, lakeDir, v, wanted.map(_._2))
   }
 
-  /** Zone-map read: only the files whose recorded [min, max] for the
-    * commit-time stats column OVERLAPS [lo, hi] are handed to the
-    * scan — file skipping decided from manifest metadata alone, the
-    * complement of partition pruning for range predicates on a
-    * non-partition column. Files without stats are conservatively
-    * kept. The caller still applies the exact row filter (zone maps
-    * bound files, not rows). */
-  def readRange(spark: SparkSession, lakeDir: String, lo: Double, hi: Double,
-      version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(lakeDir))
-    val wanted = manifestEntries(lakeDir, v).filter { e =>
-      (e.min, e.max) match {
-        // non-finite recorded stats (a NaN min/max from a NaN-bearing
-        // double column) are "no stats": every NaN comparison is
-        // false, so the overlap test would silently PRUNE a file whose
-        // real values are in range — keep it instead
-        case (Some(mn), Some(mx)) if mn.isNaN || mx.isNaN => true
-        case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
-        case _ => true
-      }
-    }
-    readFiles(spark, lakeDir, v, wanted.map(_.path))
-  }
-
   /** How a column's values land in the per-column zone maps, when they
     * do: numerics cast to double; dates as epoch DAYS; timestamps as
     * epoch MICROSECONDS (exact in a double out to ±2^53 µs ≈ ±285
@@ -465,13 +530,13 @@ object VersionedLake {
     }
   }
 
-  /** Column-aware zone-map read: files whose recorded [min, max] FOR
-    * THE NAMED COLUMN overlaps [lo, hi] are handed to the scan —
-    * any column the commit recorded stats for can prune, not just the
-    * single legacy statsCol ([[statsEncoding]] documents the value
-    * encodings: probe timestamps in epoch micros, dates in epoch
-    * days). Files lacking stats for the column (all-null or written
-    * before stats existed) are conservatively KEPT; but a column no
+  /** Zone-map range read: files whose recorded [min, max] FOR THE
+    * NAMED COLUMN overlaps [lo, hi] are handed to the scan — any column
+    * the commit recorded stats for can prune ([[statsEncoding]]
+    * documents the value encodings: probe timestamps in epoch micros,
+    * dates in epoch days). Files lacking stats for the column (all-null,
+    * NaN-bearing, or written before the column was added) are
+    * conservatively KEPT; but a column no
     * entry in the manifest records is REFUSED loudly — a "range read"
     * that silently scans everything is a lie at 100 TB, and the error
     * names the columns that can prune. The caller still applies the
@@ -488,7 +553,6 @@ object VersionedLake {
           s"stats exist for [${available.mkString(", ")}]")
     }
     val wanted = entries.filter(_.colStats.get(column) match {
-      case Some((mn, mx)) if mn.isNaN || mx.isNaN => true // NaN = no stats
       case Some((mn, mx)) => mx >= lo && mn <= hi
       case None => true // no stats for this file: conservatively kept
     })
@@ -589,27 +653,17 @@ object VersionedLake {
     readFiles(spark, lakeDir, v, wanted.map(_.path))
   }
 
-  /** Point-lookup read: only the files whose recorded Bloom filter
-    * MIGHT contain `key` (compared as string — the build-side cast)
-    * are handed to the scan; membership is decided on the driver from
-    * manifest metadata alone. Files without a filter are
-    * conservatively kept. False positives pass (deterministically);
+  /** Point-lookup read: only the files whose recorded Bloom for the
+    * NAMED column might contain `key` (compared as string — the
+    * build-side cast) are handed to the scan; membership is decided on
+    * the driver from manifest metadata alone. Any column the commit
+    * recorded a filter for (the `blooms` spec) can prune, the Bloom
+    * twin of [[readRange]]. False positives pass (deterministically);
     * false negatives are impossible — so the caller's exact
-    * `WHERE col = key` row filter on the result is complete. */
-  def readPoint(spark: SparkSession, lakeDir: String, key: String,
-      version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(lakeDir))
-    val wanted = manifestEntries(lakeDir, v)
-      .filter(_.bloom.forall(_.mightContain(key)))
-    readFiles(spark, lakeDir, v, wanted.map(_.path))
-  }
-
-  /** Column-aware point read: files whose recorded Bloom for the NAMED
-    * column might contain `key` — any column the commit recorded a
-    * filter for (the `blooms` spec) can prune, the Bloom twin of the
-    * column-aware [[readRange]]. Refused loudly when no entry records
-    * a filter for the column (same discipline: a point read that
-    * silently scans everything is a lie at 100 TB). */
+    * `WHERE col = key` row filter on the result is complete. Refused
+    * loudly when no entry records a filter for the column (same
+    * discipline: a point read that silently scans everything is a lie
+    * at 100 TB). */
   def readPoint(spark: SparkSession, lakeDir: String, column: String,
       key: String, version: Option[Int]): DataFrame =
     readPoints(spark, lakeDir, column, Seq(key), version)
@@ -757,29 +811,16 @@ object VersionedLake {
 
   private[graft] def readFiles(spark: SparkSession, lakeDir: String, v: Int,
       files: Seq[String]): DataFrame = {
-    // the version's recorded schema (when present) is authoritative:
-    // no footer inference at planning time, and files written before a
-    // column existed surface nulls for it — merge-on-read evolution
-    // from the commit log. Pre-schema-tracking manifests fall back to
-    // footer inference.
-    val recorded = recordedSchema(lakeDir, v)
-    if (files.isEmpty) {
-      // empty file list (all rows deleted / everything skipped) still
-      // needs a schema — the recorded one, else the newest non-empty
-      // ancestor's footer schema
-      val schema = recorded.getOrElse {
-        val any = (v to 1 by -1).iterator
-          .filter(i => Files.exists(Paths.get(s"${versionsDir(lakeDir)}/v$i.manifest")))
-          .map(manifest(lakeDir, _))
-          .find(_.nonEmpty).getOrElse(
-            throw new IllegalStateException(s"lake $lakeDir has no files in any version"))
-        spark.read.option("basePath", s"$lakeDir/data")
-          .parquet(any.map(_._2): _*).schema
-      }
+    // the version's recorded schema is authoritative: no footer
+    // inference at planning time, and files written before a column
+    // existed surface nulls for it — merge-on-read evolution from the
+    // commit log. An empty file list (all rows deleted / everything
+    // skipped) reads as an empty frame of that schema.
+    val schema = recordedSchema(lakeDir, v)
+    if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      val base = spark.read.option("basePath", s"$lakeDir/data")
-      val df = recorded.fold(base)(base.schema).parquet(files: _*)
+    else {
+      val df = readDataFiles(spark, lakeDir, files, schema)
       // register on the ANALYZED plan: the reader's raw logical plan is
       // an unresolved wrapper in Spark 4; forcing analysis here also
       // pins the one relation instance every derived Dataset will share
@@ -810,8 +851,7 @@ object VersionedLake {
     */
   def mergeUpsert(spark: SparkSession, lakeDir: String, changes: DataFrame,
       keyCols: Seq[String], partitionCol: String,
-      deleteCol: String = "_deleted", statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
+      deleteCol: String = "_deleted",
       batchId: Option[Long] = None,
       retractId: Option[Long] = None): Unit = {
     // the lake ITSELF enforces the retraction replay guard (callers
@@ -820,7 +860,7 @@ object VersionedLake {
     // replay — re-merging it would overwrite newer ingests
     if (retractId.exists(_ <= committedRetractId(lakeDir))) return
     val pending = planMerge(spark, lakeDir, changes, keyCols, partitionCol,
-      deleteCol, statsCol, bloom, batchId, retractId)
+      deleteCol, batchId, retractId)
     if (pending.touched.nonEmpty) { commitPending(lakeDir, pending); () }
   }
 
@@ -883,19 +923,18 @@ object VersionedLake {
     }
 
   /** Read a set of committed data files under the version's recorded
-    * schema when one exists (no footer inference; files predating a
-    * column surface nulls for it). */
+    * schema (no footer inference; files predating a column surface
+    * nulls for it). */
   private def readDataFiles(spark: SparkSession, lakeDir: String,
-      files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    val base = spark.read.option("basePath", s"$lakeDir/data")
-    schema.fold(base)(base.schema).parquet(files: _*)
-  }
+      files: Seq[String], schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.option("basePath", s"$lakeDir/data").schema(schema).parquet(files: _*)
 
   /** A planned-but-uncommitted commit: everything [[commitPending]]
     * needs to claim a version slot, rebase, or abort. `baseEntries` is
     * the manifest snapshot the plan was computed against — conflict
     * detection compares per-partition file sets base → current.
+    * `schemaJson`, `blooms` and `props` are the metadata spec the new
+    * manifest records (rebased onto a concurrent winner's at commit).
     *
     * `guard`: an OPTIONAL caller-supplied conflict test over the
     * CURRENT manifest entries, checked on every commit attempt (even
@@ -915,47 +954,42 @@ object VersionedLake {
       newEntries: Seq[Entry],
       insertOnly: Boolean,
       batchId: Option[Long],
-      statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
-      schemaJson: Option[String] = None,
-      mblooms: Seq[BloomSpec] = Nil,
+      schemaJson: String,
+      blooms: Seq[BloomSpec] = Nil,
       props: Map[String, String] = Map.empty,
       retractId: Option[Long] = None,
       guard: Option[Seq[Entry] => Boolean] = None)
 
+  /** A plan that touches nothing: callers test `touched.isEmpty` and
+    * commit no version. */
+  private def noChange(v: Int, m: Manifest): PendingCommit =
+    PendingCommit(v, m.entries, Set.empty, Seq.empty, insertOnly = false,
+      None, m.schemaJson, m.blooms, m.props)
+
   /** Plan a merge against the CURRENT version and stage its data
     * files, without committing. Split from [[mergeUpsert]] so the
     * two-writer interleaving in VersionedLakeSpec can hold a stale
-    * plan while another writer commits. */
+    * plan while another writer commits. The table's recorded metadata
+    * spec applies to the rewritten files. */
   private[graft] def planMerge(spark: SparkSession, lakeDir: String,
       changes: DataFrame, keyCols: Seq[String], partitionCol: String,
-      deleteCol: String = "_deleted", statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
+      deleteCol: String = "_deleted",
       batchId: Option[Long] = None,
       retractId: Option[Long] = None): PendingCommit = {
     require(keyCols.nonEmpty, "mergeUpsert needs at least one key column")
     val v = currentVersion(lakeDir)
     require(v >= 1, s"$lakeDir has no committed version to merge into")
-    // the table's recorded metadata spec applies unless overridden
-    val (inhStats, inhBloom) = tableMeta(lakeDir)
-    val effStats = statsCol.orElse(inhStats)
-    val effBloom = bloom.orElse(inhBloom)
-    val inhBlooms = tableBlooms(lakeDir)
-    val inhProps = tableProps(lakeDir)
-    val entries = manifestEntries(lakeDir, v)
+    val m = loadManifest(lakeDir, v)
     // manifest partitions are escaped directory names — compare the
     // change-set's raw values in that namespace
     val touched = changes.select(col(partitionCol).cast("string")).distinct()
       .collect().map(r => escapedPartition(r.getString(0))).toSet
-    if (touched.isEmpty)
-      return PendingCommit(v, entries, Set.empty, Seq.empty, insertOnly = false,
-        None, effStats, effBloom, None, inhBlooms, inhProps, retractId)
+    if (touched.isEmpty) return noChange(v, m)
 
-    val recorded = recordedSchema(lakeDir, v)
     val existingTouched = {
-      val files = entries.filter(e => touched.contains(e.partition)).map(_.path)
+      val files = m.entries.filter(e => touched.contains(e.partition)).map(_.path)
       if (files.isEmpty) None
-      else Some(readDataFiles(spark, lakeDir, files, recorded))
+      else Some(readDataFiles(spark, lakeDir, files, m.schema))
     }
     val changeKeys = changes.select(keyCols.map(col): _*).distinct()
     val upserts = changes.filter(!col(deleteCol)).drop(deleteCol)
@@ -966,10 +1000,9 @@ object VersionedLake {
       case None => upserts
     }
     val newEntries = writeCommitFiles(merged, lakeDir, commitId = v + 1,
-      partitionCol, effStats, effBloom, inhBlooms, colStatsOn(inhProps))
-    PendingCommit(v, entries, touched, newEntries, insertOnly = false, batchId,
-      effStats, effBloom, Some(mergeSchemas(recorded, merged.schema).json),
-      inhBlooms, inhProps, retractId)
+      partitionCol, m.blooms)
+    PendingCommit(v, m.entries, touched, newEntries, insertOnly = false, batchId,
+      mergeSchemas(Some(m.schema), merged.schema).json, m.blooms, m.props, retractId)
   }
 
   /** Commit a pending plan under optimistic concurrency: claim the
@@ -988,7 +1021,8 @@ object VersionedLake {
     while (attempt < maxAttempts) {
       attempt += 1
       val cur = currentVersion(lakeDir)
-      val curEntries = if (cur >= 1) manifestEntries(lakeDir, cur) else Seq.empty
+      val curM = if (cur >= 1) Some(loadManifest(lakeDir, cur)) else None
+      val curEntries = curM.fold(Seq.empty[Entry])(_.entries)
       // COMMIT-TIME exactly-once: callers pre-check `batchId >
       // committedBatchId` before planning, but that is check-then-act —
       // a redelivered increment racing a live writer (or two writers
@@ -1036,35 +1070,29 @@ object VersionedLake {
       // or a merge on non-conflicting partitions). The recorded schema
       // is authoritative for reads, so reusing the plan-time JSON here
       // would silently drop the winner's columns from every later read.
-      val effSchema = p.schemaJson.map { planJson =>
-        val plan = org.apache.spark.sql.types.DataType.fromJson(planJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        if (cur == p.baseVersion) planJson
-        else mergeSchemas(recordedSchema(lakeDir, cur), plan).json
-      }
+      //
       // Rebase the table's METADATA SPEC too, not just the schema: a
       // plan computed at v0 (or a stale base) carries the caller's
-      // props/blooms/statsCol — typically empty for a plain appender —
-      // while a concurrent creator's interleaved commit recorded the
-      // table's real spec. Writing the plan-time snapshot here would
-      // silently erase the recorded spec from the new current manifest
+      // props/blooms — typically empty for a plain appender — while a
+      // concurrent creator's interleaved commit recorded the table's
+      // real spec. Writing the plan-time snapshot here would silently
+      // erase the recorded spec from the new current manifest
       // (tableProps/tableBlooms read only CURRENT), disarming
       // requireProps and stopping colBloom recording for every later
       // commit. The committed-on-disk spec wins; plan-time values only
       // fill keys/columns the winner never recorded.
-      val (effStats, effBloom, effMblooms, effProps) =
-        if (cur == p.baseVersion) (p.statsCol, p.bloom, p.mblooms, p.props)
-        else {
-          val (curStats, curBloom) = tableMetaAt(lakeDir, cur)
-          val curBlooms = tableBloomsAt(lakeDir, cur)
-          val haveCols = curBlooms.map(_.column).toSet
-          (curStats.orElse(p.statsCol), curBloom.orElse(p.bloom),
-            curBlooms ++ p.mblooms.filterNot(b => haveCols.contains(b.column)),
-            p.props ++ tablePropsAt(lakeDir, cur))
-        }
-      if (tryCommitManifest(lakeDir, cur + 1, manifest, p.batchId,
-        effStats, effBloom, effSchema, effMblooms, effProps,
-        p.retractId)) return cur + 1
+      val (schemaJson, blooms, props) = curM match {
+        case Some(w) if cur != p.baseVersion =>
+          val plan = org.apache.spark.sql.types.DataType.fromJson(p.schemaJson)
+            .asInstanceOf[org.apache.spark.sql.types.StructType]
+          val haveCols = w.blooms.map(_.column).toSet
+          (mergeSchemas(Some(w.schema), plan).json,
+            w.blooms ++ p.blooms.filterNot(b => haveCols.contains(b.column)),
+            p.props ++ w.props)
+        case _ => (p.schemaJson, p.blooms, p.props)
+      }
+      if (tryCommitManifest(lakeDir, cur + 1, manifest, p.batchId, p.retractId,
+        schemaJson, blooms, props)) return cur + 1
       // lost the slot race: loop re-reads the new current and retries
     }
     throw new IllegalStateException(
@@ -1101,20 +1129,18 @@ object VersionedLake {
     * rebase. A lost compaction is cheap to retry; data is never at
     * risk (same argument as any OCC maintenance job).
     *
-    * `statsCol`/`bloom` re-record zone maps and Bloom filters on the
-    * consolidated files — compaction must not degrade the manifest
-    * metadata the read paths prune with.
+    * The consolidated files record the same per-column zone maps and
+    * the table's Bloom columns — compaction must not degrade the
+    * manifest metadata the read paths prune with.
     *
     * Returns the committed version, or the current version unchanged
     * when nothing needed compacting.
     */
   def compactPartitions(spark: SparkSession, lakeDir: String,
       partitionCol: String, filesPerPartition: Int = 1, minFiles: Int = 2,
-      partitions: Option[Seq[String]] = None,
-      statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None): Int = {
+      partitions: Option[Seq[String]] = None): Int = {
     val p = planCompact(spark, lakeDir, partitionCol, filesPerPartition,
-      minFiles, partitions, statsCol, bloom)
+      minFiles, partitions)
     if (p.touched.isEmpty) p.baseVersion else commitPending(lakeDir, p)
   }
 
@@ -1140,18 +1166,14 @@ object VersionedLake {
       partitions: Option[Seq[String]] = None): Int = {
     val v = currentVersion(lakeDir)
     require(v >= 1, s"$lakeDir has no committed version to rewrite")
-    val (inhStats, inhBloom) = tableMeta(lakeDir)
-    val inhBlooms = tableBlooms(lakeDir)
-    val inhProps = tableProps(lakeDir)
-    val entries = manifestEntries(lakeDir, v)
+    val m = loadManifest(lakeDir, v)
     val touched = partitions match {
       case Some(ps) => ps.map(escapedPartition).toSet
-      case None => entries.map(_.partition).toSet
+      case None => m.entries.map(_.partition).toSet
     }
-    val files = entries.filter(e => touched.contains(e.partition)).map(_.path)
+    val files = m.entries.filter(e => touched.contains(e.partition)).map(_.path)
     if (files.isEmpty) return v
-    val recorded = recordedSchema(lakeDir, v)
-    val out = transform(readDataFiles(spark, lakeDir, files, recorded))
+    val out = transform(readDataFiles(spark, lakeDir, files, m.schema))
     require(out.columns.contains(partitionCol),
       s"rewrite transform dropped partition column '$partitionCol'")
     // the transform's OUTPUT schema must be committable, not silently
@@ -1160,13 +1182,11 @@ object VersionedLake {
     // diverges from the schema header every later read trusts.
     // mergeSchemas refuses type changes loudly and records new or
     // nullability-widened columns the evolved way.
-    val committedSchema = recorded.map(r => mergeSchemas(Some(r), out.schema))
     val newEntries = writeCommitFiles(out.repartition(col(partitionCol)),
-      lakeDir, commitId = v + 1, partitionCol, inhStats, inhBloom,
-      inhBlooms, colStatsOn(inhProps))
-    commitPending(lakeDir, PendingCommit(v, entries, touched, newEntries,
-      insertOnly = false, None, inhStats, inhBloom,
-      committedSchema.map(_.json), inhBlooms, inhProps))
+      lakeDir, commitId = v + 1, partitionCol, m.blooms)
+    commitPending(lakeDir, PendingCommit(v, m.entries, touched, newEntries,
+      insertOnly = false, None, mergeSchemas(Some(m.schema), out.schema).json,
+      m.blooms, m.props))
   }
 
   /** Z-ORDER layout rewrite: re-cluster the touched partitions' files
@@ -1220,21 +1240,14 @@ object VersionedLake {
       s"bits × zCols must fit a long: $bits × ${zCols.size}")
     val v = currentVersion(lakeDir)
     require(v >= 1, s"$lakeDir has no committed version to zorder")
-    val (inhStats, inhBloom) = tableMeta(lakeDir)
-    val inhBlooms = tableBlooms(lakeDir)
-    val inhProps = tableProps(lakeDir)
-    val entries = manifestEntries(lakeDir, v)
+    val m = loadManifest(lakeDir, v)
     val touched = partitions match {
       case Some(ps) => ps.map(escapedPartition).toSet
-      case None => entries.map(_.partition).toSet
+      case None => m.entries.map(_.partition).toSet
     }
-    val files = entries.filter(e => touched.contains(e.partition)).map(_.path)
-    if (files.isEmpty)
-      return PendingCommit(v, entries, Set.empty, Seq.empty,
-        insertOnly = false, None, inhStats, inhBloom, None, inhBlooms,
-        inhProps)
-    val recorded = recordedSchema(lakeDir, v)
-    val df = readDataFiles(spark, lakeDir, files, recorded)
+    val files = m.entries.filter(e => touched.contains(e.partition)).map(_.path)
+    if (files.isEmpty) return noChange(v, m)
+    val df = readDataFiles(spark, lakeDir, files, m.schema)
     val fieldByName = df.schema.fields.map(f => f.name -> f).toMap
     val encoded = zCols.map { c =>
       val f = fieldByName.getOrElse(c,
@@ -1290,9 +1303,9 @@ object VersionedLake {
       .sortWithinPartitions(col(partitionCol), col("_zkey"))
       .drop("_zkey")
     val newEntries = writeCommitFiles(clustered, lakeDir, commitId = v + 1,
-      partitionCol, inhStats, inhBloom, inhBlooms, colStatsOn(inhProps))
-    PendingCommit(v, entries, touched, newEntries, insertOnly = false, None,
-      inhStats, inhBloom, recorded.map(_.json), inhBlooms, inhProps)
+      partitionCol, m.blooms)
+    PendingCommit(v, m.entries, touched, newEntries, insertOnly = false, None,
+      m.schemaJson, m.blooms, m.props)
   }
 
   /** Plan a compaction against the CURRENT version and stage its
@@ -1301,22 +1314,13 @@ object VersionedLake {
     * interleave a competing writer between plan and commit. */
   private[graft] def planCompact(spark: SparkSession, lakeDir: String,
       partitionCol: String, filesPerPartition: Int = 1, minFiles: Int = 2,
-      partitions: Option[Seq[String]] = None,
-      statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None): PendingCommit = {
+      partitions: Option[Seq[String]] = None): PendingCommit = {
     require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
     require(minFiles >= 2, "minFiles must be >= 2 (1-file partitions are compact)")
     val v = currentVersion(lakeDir)
     require(v >= 1, s"$lakeDir has no committed version to compact")
-    // compaction must not degrade the table's recorded metadata: the
-    // manifest-carried spec applies unless explicitly overridden
-    val (inhStats, inhBloom) = tableMeta(lakeDir)
-    val effStats = statsCol.orElse(inhStats)
-    val effBloom = bloom.orElse(inhBloom)
-    val inhBlooms = tableBlooms(lakeDir)
-    val inhProps = tableProps(lakeDir)
-    val entries = manifestEntries(lakeDir, v)
-    val byPart = entries.groupBy(_.partition)
+    val m = loadManifest(lakeDir, v)
+    val byPart = m.entries.groupBy(_.partition)
     val candidates = partitions match {
       case Some(ps) => ps.map(escapedPartition).toSet
       case None => byPart.keySet
@@ -1325,15 +1329,12 @@ object VersionedLake {
     // target file count is carried forward untouched
     val touched = candidates.filter(p =>
       byPart.get(p).exists(_.size >= math.max(minFiles, filesPerPartition + 1)))
-    if (touched.isEmpty)
-      return PendingCommit(v, entries, Set.empty, Seq.empty, insertOnly = false,
-        None, effStats, effBloom, None, inhBlooms, inhProps)
-    val files = entries.filter(e => touched.contains(e.partition)).map(_.path)
-    val recorded = recordedSchema(lakeDir, v)
+    if (touched.isEmpty) return noChange(v, m)
+    val files = m.entries.filter(e => touched.contains(e.partition)).map(_.path)
     // the rewrite must read (and re-write) under the version's
     // recorded schema, or an evolved column absent from some touched
     // file would be dropped from the consolidated files
-    val df = readDataFiles(spark, lakeDir, files, recorded)
+    val df = readDataFiles(spark, lakeDir, files, m.schema)
     // one task per (partition [, salt]) writes one consolidated file —
     // the same shuffle shape as LakeOps.compact, scoped to the touched
     // partitions only
@@ -1343,22 +1344,19 @@ object VersionedLake {
         col(partitionCol),
         pmod(hash(struct(df.columns.map(col): _*)), lit(filesPerPartition)))
     val newEntries = writeCommitFiles(repartitioned, lakeDir, commitId = v + 1,
-      partitionCol, effStats, effBloom, inhBlooms, colStatsOn(inhProps))
-    PendingCommit(v, entries, touched, newEntries, insertOnly = false, None,
-      effStats, effBloom, recorded.map(_.json), inhBlooms, inhProps)
+      partitionCol, m.blooms)
+    PendingCommit(v, m.entries, touched, newEntries, insertOnly = false, None,
+      m.schemaJson, m.blooms, m.props)
   }
 
   /** Write `df`'s files into the shared `data/<partitionCol>=<v>/`
     * tree under commit-prefixed names (stage with partitionBy, then
-    * per-file rename — metadata ops on new files only) and return the
-    * (partitionValue, path) entries produced. One uniform directory
-    * depth keeps a single basePath scan valid across any mix of
-    * commits. */
+    * per-file rename — metadata ops on new files only) and return their
+    * manifest entries, row counts, zone maps, null counts and the
+    * `blooms` columns' filters included. One uniform directory depth
+    * keeps a single basePath scan valid across any mix of commits. */
   private def writeCommitFiles(df: DataFrame, lakeDir: String, commitId: Int,
-      partitionCol: String, statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
-      mblooms: Seq[BloomSpec] = Nil,
-      perColStats: Boolean = true): Seq[Entry] = {
+      partitionCol: String, blooms: Seq[BloomSpec]): Seq[Entry] = {
     // unique per write: concurrent writers may plan the same commitId
     // before the CAS resolves the race — staging must never collide
     val staging = s"$lakeDir/_staging_c$commitId-${java.util.UUID.randomUUID()}"
@@ -1377,119 +1375,92 @@ object VersionedLake {
           // per-file row count straight from the parquet footer —
           // metadata-only (no data read), file-count-sized driver
           // work, and it makes COUNT(*) answerable from the manifest
-          Entry(value, dest.getAbsolutePath, None, None,
-            rows = Some(footerRowCount(dest.getAbsolutePath)))
+          Entry(value, dest.getAbsolutePath, footerRowCount(dest.getAbsolutePath))
         }
       }.toSeq.sortBy(_.path)
     def rm(f: File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
     rm(new File(staging))
+    if (bare.isEmpty) return bare
+    val src = df.sparkSession.read.option("basePath", s"$lakeDir/data")
+      .parquet(bare.map(_.path): _*)
     // ONE job over ONLY the new files: per-file min/max for EVERY
     // stats-encodable column (numeric; date as epoch days; timestamp
     // as epoch micros) — the Iceberg/Delta-class per-column metadata
-    // that lets a range read prune on any recorded column — plus the
-    // legacy single-statsCol zone map, kept bit-compatible with the
-    // original pass (same cast-to-double) and computed in the same
-    // aggregate, so a statsCol commit pays exactly the one stats job
-    // it always did.
-    val withStats = if (bare.isEmpty) bare else {
-      val spark = df.sparkSession
-      val src = spark.read.option("basePath", s"$lakeDir/data")
-        .parquet(bare.map(_.path): _*)
-      // per-column stats are the default (one aggregate over only the
-      // NEW files); a table created with props("colstats") = "off"
-      // skips them — the opt-out for wide numeric tables whose appends
-      // should pay no stats scan
-      val encoded: Seq[(String, org.apache.spark.sql.Column)] =
-        if (!perColStats) Seq.empty
-        else src.schema.fields.toSeq.flatMap(f => statsEncoding(f).map(f.name -> _))
-      // string zone maps: min/max over a (StrStatsLen+1)-codepoint
-      // PREFIX of each value — prefix truncation is monotone under the
-      // binary string order Spark's min/max use, so
-      // min(prefix) = prefix(min) and max(prefix) = prefix(max); the
-      // aggregate never shuffles more than 33 codepoints per value no
-      // matter how long the documents are. The driver then truncates
-      // the min DOWN (a prefix is <= the value) and the max UP
-      // ([[strTruncUp]] increments the last codepoint, the
-      // Delta/Iceberg trick) so the recorded 32-codepoint envelope
-      // provably contains every value in the file.
-      val strCols: Seq[String] =
-        if (!perColStats) Seq.empty
-        else src.schema.fields.toSeq.collect {
-          case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
+    // that lets a range read prune on any recorded column.
+    val encoded: Seq[(String, org.apache.spark.sql.Column)] =
+      src.schema.fields.toSeq.flatMap(f => statsEncoding(f).map(f.name -> _))
+    // string zone maps: min/max over a (StrStatsLen+1)-codepoint
+    // PREFIX of each value — prefix truncation is monotone under the
+    // binary string order Spark's min/max use, so
+    // min(prefix) = prefix(min) and max(prefix) = prefix(max); the
+    // aggregate never shuffles more than 33 codepoints per value no
+    // matter how long the documents are. The driver then truncates
+    // the min DOWN (a prefix is <= the value) and the max UP
+    // ([[strTruncUp]] increments the last codepoint, the
+    // Delta/Iceberg trick) so the recorded 32-codepoint envelope
+    // provably contains every value in the file.
+    val strCols: Seq[String] = src.schema.fields.toSeq.collect {
+      case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
+    }
+    // per-column NULL counts (every column, any type) — the
+    // Iceberg-class stat that makes IS NULL / IS NOT NULL prunable
+    // and null-sensitive count(col) answerable from the manifest
+    val allCols: Seq[String] = src.schema.fields.toSeq.map(_.name)
+    val aggs: Seq[org.apache.spark.sql.Column] =
+      encoded.zipWithIndex.flatMap { case ((_, e), i) =>
+        Seq(min(e).as(s"_n$i"), max(e).as(s"_x$i"))
+      } ++
+        strCols.zipWithIndex.flatMap { case (n, i) =>
+          Seq(min(substring(col(n), 1, StrStatsLen + 1)).as(s"_smn$i"),
+            max(substring(col(n), 1, StrStatsLen + 1)).as(s"_smx$i"))
+        } ++
+        allCols.zipWithIndex.map { case (n, i) =>
+          sum(when(col(n).isNull, 1L).otherwise(0L)).as(s"_nc$i")
         }
-      // per-column NULL counts (every column, any type) — the
-      // Iceberg-class stat that makes IS NULL / IS NOT NULL prunable
-      // and null-sensitive count(col) answerable from the manifest
-      val allCols: Seq[String] =
-        if (!perColStats) Seq.empty else src.schema.fields.toSeq.map(_.name)
-      val aggs: Seq[org.apache.spark.sql.Column] =
-        statsCol.toSeq.flatMap(c => Seq(
-          min(col(c).cast("double")).as("_lmn"),
-          max(col(c).cast("double")).as("_lmx"))) ++
-          encoded.zipWithIndex.flatMap { case ((_, e), i) =>
-            Seq(min(e).as(s"_n$i"), max(e).as(s"_x$i"))
-          } ++
-          strCols.zipWithIndex.flatMap { case (n, i) =>
-            Seq(min(substring(col(n), 1, StrStatsLen + 1)).as(s"_smn$i"),
-              max(substring(col(n), 1, StrStatsLen + 1)).as(s"_smx$i"))
-          } ++
-          allCols.zipWithIndex.map { case (n, i) =>
-            sum(when(col(n).isNull, 1L).otherwise(0L)).as(s"_nc$i")
-          }
-      if (aggs.isEmpty) bare else {
-        val rows = src.groupBy(input_file_name().as("f"))
-          .agg(aggs.head, aggs.tail: _*).collect()
-        val byPath = rows.map { r =>
-          def d(n: String): Option[Double] = {
-            val i = r.fieldIndex(n)
-            if (r.isNullAt(i)) None
-            // a NaN min/max (NaN-bearing double column) is recorded as
-            // "no stats": readRange treats NaN defensively too, but
-            // not writing it keeps manifests honest
-            else { val x = r.getDouble(i); if (x.isNaN) None else Some(x) }
-          }
-          val legacy = statsCol.flatMap(_ =>
-            for { mn <- d("_lmn"); mx <- d("_lmx") } yield (mn, mx))
-          val per = encoded.zipWithIndex.flatMap { case ((n, _), i) =>
-            for { mn <- d(s"_n$i"); mx <- d(s"_x$i") } yield n -> ((mn, mx))
-          }.toMap
-          def st(nm: String): Option[String] = {
-            val i = r.fieldIndex(nm)
-            if (r.isNullAt(i)) None else Some(r.getString(i))
-          }
-          val strs = strCols.zipWithIndex.flatMap { case (n, i) =>
-            for {
-              mnRaw <- st(s"_smn$i"); mxRaw <- st(s"_smx$i")
-              mx <- strTruncUp(mxRaw) // un-incrementable max: no stats
-            } yield n -> ((strTruncDown(mnRaw), mx))
-          }.toMap
-          val nulls = allCols.zipWithIndex.flatMap { case (n, i) =>
-            val j = r.fieldIndex(s"_nc$i")
-            if (r.isNullAt(j)) None else Some(n -> r.getLong(j))
-          }.toMap
-          normalizePath(r.getString(r.fieldIndex("f"))) ->
-            ((legacy, per, strs, nulls))
+    val byPath = src.groupBy(input_file_name().as("f"))
+      .agg(aggs.head, aggs.tail: _*).collect().map { r =>
+        def d(n: String): Option[Double] = {
+          val i = r.fieldIndex(n)
+          if (r.isNullAt(i)) None
+          // a NaN min/max (NaN-bearing double column) records no stats
+          // for the column: every NaN comparison is false, so a NaN
+          // bound would prune wrongly — parseManifest refuses one
+          else { val x = r.getDouble(i); if (x.isNaN) None else Some(x) }
+        }
+        def st(nm: String): Option[String] = {
+          val i = r.fieldIndex(nm)
+          if (r.isNullAt(i)) None else Some(r.getString(i))
+        }
+        val per = encoded.zipWithIndex.flatMap { case ((n, _), i) =>
+          for { mn <- d(s"_n$i"); mx <- d(s"_x$i") } yield n -> ((mn, mx))
         }.toMap
-        bare.map { e =>
-          byPath.get(normalizePath(e.path)) match {
-            case Some((legacy, per, strs, nulls)) => e.copy(
-              min = legacy.map(_._1), max = legacy.map(_._2), colStats = per,
-              strStats = strs, nullCounts = nulls)
-            case None => e // an empty file: no zone maps
-          }
-        }
+        val strs = strCols.zipWithIndex.flatMap { case (n, i) =>
+          for {
+            mnRaw <- st(s"_smn$i"); mxRaw <- st(s"_smx$i")
+            mx <- strTruncUp(mxRaw) // un-incrementable max: no stats
+          } yield n -> ((strTruncDown(mnRaw), mx))
+        }.toMap
+        val nulls = allCols.zipWithIndex.flatMap { case (n, i) =>
+          val j = r.fieldIndex(s"_nc$i")
+          if (r.isNullAt(j)) None else Some(n -> r.getLong(j))
+        }.toMap
+        normalizePath(r.getString(r.fieldIndex("f"))) -> ((per, strs, nulls))
+      }.toMap
+    val withStats = bare.map { e =>
+      byPath.get(normalizePath(e.path)) match {
+        case Some((per, strs, nulls)) =>
+          e.copy(colStats = per, strStats = strs, nullCounts = nulls)
+        case None => e // an empty file: no zone maps
       }
     }
-    // per-file packed Bloom words of a key column: one job over ONLY
-    // the new files per spec — the same distributive (file, word)
-    // bit_or aggregate as Sketch.bloomBuild, shuffle bounded by
-    // files × m/64
-    def bloomWords(entries: Seq[Entry], spec: BloomSpec): Map[String, Array[Long]] = {
-      val spark = df.sparkSession
-      spark.read.option("basePath", s"$lakeDir/data")
-        .parquet(entries.map(_.path): _*)
+    // per-file packed Bloom words of each declared column: one job
+    // over ONLY the new files per spec — the same distributive
+    // (file, word) bit_or aggregate as Sketch.bloomBuild, shuffle
+    // bounded by files × m/64 — so point reads prune on ANY of them
+    blooms.foldLeft(withStats) { (es, spec) =>
+      val words = src
         // NULL keys can never match a string probe, and un-filtered
         // they surface as a (file, null, null) aggregate row that
         // NPEs the collect below — drop them before the explode
@@ -1506,22 +1477,6 @@ object VersionedLake {
           rows.foreach(r => w(r.getLong(1).toInt) = r.getLong(2))
           f -> w
         }
-    }
-    val withLegacy = bloom match {
-      case Some(spec) if withStats.nonEmpty =>
-        val words = bloomWords(withStats, spec)
-        withStats.map { e =>
-          words.get(normalizePath(e.path)) match {
-            case Some(w) => e.copy(bloom = Some(FileBloom(spec.k, spec.m, w)))
-            case None => e // empty file: no filter, conservatively kept
-          }
-        }
-      case _ => withStats
-    }
-    // the column-SET Bloom spec (s22): every declared column gets its
-    // own per-file filter, so point reads prune on ANY of them
-    mblooms.filter(_ => withLegacy.nonEmpty).foldLeft(withLegacy) { (es, spec) =>
-      val words = bloomWords(es, spec)
       es.map { e =>
         words.get(normalizePath(e.path)) match {
           case Some(w) => e.copy(colBlooms =
@@ -1542,18 +1497,14 @@ object VersionedLake {
     try r.getRecordCount finally r.close()
   }
 
-  /** COUNT(*) of a version from manifest metadata alone when every
-    * entry recorded its row count (all commits since row tracking);
-    * falls back to scanning otherwise. The metadata-only count is the
-    * classic table-format win: at any scale it is a manifest read, not
-    * a table scan. */
+  /** COUNT(*) of a version from manifest metadata alone: every entry
+    * records its file's row count, so at any scale the count is a
+    * manifest read, not a table scan — the classic table-format win.
+    * (`spark` is unused; the count never touches data.) */
   def rowCount(spark: SparkSession, lakeDir: String,
-      version: Option[Int] = None): Long = {
-    val v = version.getOrElse(currentVersion(lakeDir))
-    val entries = manifestEntries(lakeDir, v)
-    if (entries.forall(_.rows.isDefined)) entries.flatMap(_.rows).sum
-    else read(spark, lakeDir, Some(v)).count()
-  }
+      version: Option[Int] = None): Long =
+    manifestEntries(lakeDir, version.getOrElse(currentVersion(lakeDir)))
+      .map(_.rows).sum
 
   /** Partition-level RETENTION as a COMMIT: drop whole partitions from
     * the current version by manifest EXCLUSION — metadata-only (no
@@ -1579,14 +1530,11 @@ object VersionedLake {
     val v = currentVersion(lakeDir)
     require(v >= 1, s"$lakeDir has no committed version")
     if (batchId.exists(_ <= committedBatchId(lakeDir))) return v
-    val entries = manifestEntries(lakeDir, v)
-    val touched = escaped.intersect(entries.map(_.partition).toSet)
+    val m = loadManifest(lakeDir, v)
+    val touched = escaped.intersect(m.entries.map(_.partition).toSet)
     if (touched.isEmpty) return v
-    val (inhStats, inhBloom) = tableMeta(lakeDir)
-    commitPending(lakeDir, PendingCommit(v, entries, touched, Nil,
-      insertOnly = false, batchId, inhStats, inhBloom,
-      recordedSchema(lakeDir, v).map(_.json), tableBlooms(lakeDir),
-      tableProps(lakeDir)))
+    commitPending(lakeDir, PendingCommit(v, m.entries, touched, Nil,
+      insertOnly = false, batchId, m.schemaJson, m.blooms, m.props))
   }
 
   /** [[dropPartitions]] for time-keyed partition values: expire every
@@ -1608,14 +1556,12 @@ object VersionedLake {
     * data scan: (partition, n_files, n_rows, min, max), the aggregate
     * the zone maps already paid for at commit time. Per-file min/max
     * are exact (computed from the data by the commit's stats job), so
-    * their fold is the exact partition min/max; `n_rows` is
-    * null-poisoned the [[graft.sources.AnnLake.cellStats]] way when
-    * any file predates row-count recording (never a silent partial
-    * sum). STRING columns fold their truncated envelopes instead —
-    * per-partition BOUNDS (min truncated down, max up), not attained
-    * values, which is what a drift dashboard over categorical columns
-    * needs; Spark's string min/max use the same binary order the
-    * envelopes are recorded in. Refuses loudly when no file records
+    * their fold is the exact partition min/max. STRING columns fold
+    * their truncated envelopes instead — per-partition BOUNDS (min
+    * truncated down, max up), not attained values, which is what a
+    * drift dashboard over categorical columns needs; Spark's string
+    * min/max use the same binary order the envelopes are recorded in.
+    * Refuses loudly when no file records
     * stats of either kind for `column`, naming the columns that can
     * answer — same contract as [[readRange]]. */
   def columnStats(spark: SparkSession, lakeDir: String, column: String,
@@ -1637,15 +1583,15 @@ object VersionedLake {
       .groupBy(col("partition"))
       .agg(
         count(lit(1)).as("n_files"),
-        when(count(col("rows")) === count(lit(1)), sum(col("rows")))
-          .as("n_rows"),
+        sum(col("rows")).as("n_rows"),
         // a file with NO stats for the column (all-null values there)
         // contributes nothing to min/max — min/max skip nulls, which
         // is exactly the aggregate's own null semantics
         min(col("mm._1")).as("min"),
         max(col("mm._2")).as("max"),
-        // null-poisoned like n_rows: a partial sum over only the
-        // files that recorded null counts would silently understate
+        // null-poisoned: a file written before the column was added
+        // records no null count for it, and a partial sum over only
+        // the files that did would silently understate
         when(count(col("nulls")) === count(lit(1)), sum(col("nulls")))
           .as("n_nulls"))
     if (numeric)
@@ -1729,13 +1675,11 @@ object VersionedLake {
     * lost slot race rebases unconditionally — concurrent appenders
     * all land. */
   def append(df: DataFrame, lakeDir: String, partitionCol: String,
-      batchId: Option[Long] = None, statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
+      batchId: Option[Long] = None,
       blooms: Seq[BloomSpec] = Nil,
       props: Map[String, String] = Map.empty): Unit = {
     commitPending(lakeDir,
-      planAppend(df, lakeDir, partitionCol, batchId, statsCol, bloom,
-        blooms, props))
+      planAppend(df, lakeDir, partitionCol, batchId, blooms, props))
     ()
   }
 
@@ -1746,8 +1690,7 @@ object VersionedLake {
     * metadata-spec race [[commitPending]] rebases across). */
   private[graft] def planAppend(df: DataFrame, lakeDir: String,
       partitionCol: String,
-      batchId: Option[Long] = None, statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
+      batchId: Option[Long] = None,
       blooms: Seq[BloomSpec] = Nil,
       props: Map[String, String] = Map.empty,
       guard: Option[Seq[Entry] => Boolean] = None): PendingCommit = {
@@ -1755,13 +1698,11 @@ object VersionedLake {
     // the table's recorded metadata spec applies unless overridden;
     // first-append on an empty lake records the caller's blooms/props
     // as the table's spec (the create-by-append path)
-    val (inhStats, inhBloom) = tableMeta(lakeDir)
-    val effStats = statsCol.orElse(inhStats)
-    val effBloom = bloom.orElse(inhBloom)
-    val effBlooms = if (blooms.nonEmpty) blooms else tableBlooms(lakeDir)
+    val base = if (v >= 1) Some(loadManifest(lakeDir, v)) else None
+    val effBlooms = if (blooms.nonEmpty) blooms else base.fold(blooms)(_.blooms)
     val effProps = if (v == 0) props else {
       requireProps(lakeDir, props) // a mismatched re-statement fails loudly
-      tableProps(lakeDir)
+      base.fold(props)(_.props)
     }
     // Cluster the staged write by the partition column (guide §6 file
     // sizing): without this every append writes one file per (shuffle
@@ -1780,81 +1721,27 @@ object VersionedLake {
         df.hint("rebalance", col(partitionCol))
       else df.repartition(col(partitionCol))
     val newEntries = writeCommitFiles(clustered, lakeDir, commitId = v + 1,
-      partitionCol, effStats, effBloom, effBlooms, colStatsOn(effProps))
-    val evolved = mergeSchemas(
-      if (v >= 1) recordedSchema(lakeDir, v) else None, df.schema)
-    PendingCommit(v, Seq.empty, Set.empty, newEntries,
-      insertOnly = true, batchId, effStats, effBloom, Some(evolved.json),
-      effBlooms, effProps, guard = guard)
+      partitionCol, effBlooms)
+    PendingCommit(v, Seq.empty, Set.empty, newEntries, insertOnly = true,
+      batchId, mergeSchemas(base.map(_.schema), df.schema).json, effBlooms,
+      effProps, guard = guard)
   }
 
   /** The highest batch id recorded by ANY committed version, -1 when
-    * none. The max over all versions — not just CURRENT — so the
-    * replay guard survives a merge or manual append landing BETWEEN
-    * streaming commits (the interleaved commit carries no batch id,
-    * and reading only the newest version would reset the watermark
-    * and let a replayed batch double-commit). Batch ids live in
-    * manifest headers, so only committed (visible) batches count.
-    *
-    * Cost: every commit re-states the high-water `#batchwm`, so the
-    * NEWEST manifest's header lines alone answer — one bounded read,
-    * not an O(versions × manifest-size) walk per call (this runs on
-    * every commit attempt since the claim-point enforcement landed).
-    * Manifests predating the watermark header (hand-written legacy
-    * simulations) fall back to the full header walk. */
-  def committedBatchId(lakeDir: String): Long =
-    highWater(lakeDir,
-      { case BatchIdHeader(id) => id.toLong },
-      { case BatchWmHeader(id) => id.toLong })
-
-  private def highWater(lakeDir: String,
-      perCommit: PartialFunction[String, Long],
-      watermark: PartialFunction[String, Long]): Long = {
-    val files = Option(new File(versionsDir(lakeDir)).listFiles())
-      .getOrElse(Array.empty[File])
-      .filter(f => ManifestName.pattern.matcher(f.getName).matches())
-    if (files.isEmpty) return -1L
-    // the authority is the newest manifest FILE (the hard-link claim is
-    // the commit point; the CURRENT pointer may lag a crashed writer)
-    val newest = files.maxBy(f =>
-      f.getName.stripPrefix("v").stripSuffix(".manifest").toInt)
-    val hs = headerLines(newest.toPath)
-    hs.collectFirst(watermark) match {
-      case Some(w) => w // bwm/rwm already folds the commit's own id
-      // a manifest carrying EITHER watermark header was written by
-      // watermark-era code, which re-states a namespace's watermark on
-      // every commit whenever that namespace has ever committed (and
-      // unconditionally since the headers went mandatory) — so the
-      // absence of THIS namespace's header proves no id here ever
-      // committed. #committs alone proves nothing: it PREDATES the
-      // watermark headers, so a #committs-only manifest may sit on top
-      // of per-commit #batchid history and must take the full walk
-      // below, not read as "nothing committed" (r19 ADVICE — the old
-      // shortcut here silently reset the exactly-once watermark for
-      // lakes from that era).
-      case None if hs.exists(l =>
-          l.startsWith("#batchwm=") || l.startsWith("#retractwm=")) => -1L
-      case None =>
-        // legacy (pre-watermark-header) lake: full walk, header lines
-        // only — never whole manifests
-        val ids = files.flatMap(f =>
-          headerLines(f.toPath).collect(perCommit.orElse(watermark)))
-        if (ids.isEmpty) -1L else ids.max
-    }
-  }
-
-  /** Leading `#` lines of one manifest file — bounded read. */
-  private def headerLines(f: java.nio.file.Path): Array[String] = {
-    val r = Files.newBufferedReader(f, StandardCharsets.UTF_8)
-    try {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var line = r.readLine()
-      while (line != null && line.startsWith("#")) {
-        out += line
-        line = r.readLine()
-      }
-      out.toArray
-    } finally r.close()
+    * none. The max over all versions — not just the current commit's
+    * own id — so the replay guard survives a merge or manual append
+    * landing BETWEEN streaming commits (the interleaved commit carries
+    * no batch id). Every commit re-states this high water as
+    * `#batchwm`, a header distinct from the per-commit `#batchid`, so
+    * expiring history ([[vacuum]] deleting old manifests) can never
+    * regress the guard and the newest manifest alone answers: one
+    * cached parse, not a walk over every version (this runs on every
+    * commit attempt since the claim-point enforcement landed). Batch
+    * ids live in manifest headers, so only committed (visible) batches
+    * count. */
+  def committedBatchId(lakeDir: String): Long = {
+    val v = currentVersion(lakeDir)
+    if (v == 0) -1L else loadManifest(lakeDir, v).batchWm
   }
 
   /** The batch id recorded in one SPECIFIC version's manifest header
@@ -1863,97 +1750,53 @@ object VersionedLake {
   def committedBatchId(lakeDir: String, version: Option[Int]): Long =
     version match {
       case None => committedBatchId(lakeDir)
-      case Some(v) => manifestHeaders(lakeDir, v)
-        .collectFirst { case BatchIdHeader(id) => id.toLong }
-        .getOrElse(-1L)
+      case Some(v) => loadManifest(lakeDir, v).batchId.getOrElse(-1L)
     }
 
-  private val BatchIdHeader = """#batchid=(-?\d+)""".r
-  private val RetractIdHeader = """#retractid=(-?\d+)""".r
-  // High-water WATERMARK headers, distinct from the per-commit facts
-  // above: every commit re-states the highest batch/retract id seen so
-  // far, so expiring history ([[vacuum]] deleting old manifests) can
-  // never regress the replay guards — the newest surviving manifest
-  // always carries them forward. The per-version #batchid stays a fact
-  // about THAT commit (what ties a materialized view to the exact
-  // source version it folded); the watermark is a different question
-  // ("what has ever committed?") and gets its own header.
-  private val BatchWmHeader = """#batchwm=(-?\d+)""".r
-  private val RetractWmHeader = """#retractwm=(-?\d+)""".r
-  private val StatsColHeader = """#statscol=(.+)""".r
-  private val BloomHeader = """#bloom=(.+):(\d+):(\d+)""".r
-  private val MBloomHeader = """#mbloom=(.+):(\d+):(\d+)""".r
-  private val PropsHeader = """#props=(.*)""".r
-  private val SchemaHeader = """#schema=(.+)""".r
-  private val CommitTsHeader = """#committs=(\d+)""".r
-
   /** The highest RETRACTION batch id recorded by any committed version,
-    * -1 when none — a watermark namespace separate from the ingest
-    * batch ids, so a takedown's replay guard never collides with the
-    * append stream's: a retraction sequenced against its own watermark
-    * cannot be silently swallowed by a later INGEST batch id
+    * -1 when none — a watermark namespace (`#retractwm`) separate from
+    * the ingest batch ids, so a takedown's replay guard never collides
+    * with the append stream's: a retraction sequenced against its own
+    * watermark cannot be silently swallowed by a later INGEST batch id
     * ([[mergeUpsert]]'s `retractId` writes it). */
-  def committedRetractId(lakeDir: String): Long =
-    highWater(lakeDir,
-      { case RetractIdHeader(id) => id.toLong },
-      { case RetractWmHeader(id) => id.toLong })
+  def committedRetractId(lakeDir: String): Long = {
+    val v = currentVersion(lakeDir)
+    if (v == 0) -1L else loadManifest(lakeDir, v).retractWm
+  }
 
   /** The column-SET Bloom spec recorded in the current manifest's
-    * headers (the s22 complement of [[tableMeta]]'s single legacy
-    * bloom) — carried forward by every commit like the rest of the
+    * headers — carried forward by every commit like the rest of the
     * metadata spec. */
   def tableBlooms(lakeDir: String): Seq[BloomSpec] = {
     val v = currentVersion(lakeDir)
-    if (v == 0) Seq.empty else tableBloomsAt(lakeDir, v)
+    if (v == 0) Seq.empty else loadManifest(lakeDir, v).blooms
   }
-
-  private def tableBloomsAt(lakeDir: String, version: Int): Seq[BloomSpec] =
-    manifestHeaders(lakeDir, version).toSeq.collect {
-      case MBloomHeader(c, k, m) => BloomSpec(c, k.toInt, m.toInt)
-    }
 
   /** Immutable table properties recorded at create/first-append and
     * carried forward by every commit — construction parameters later
     * writers and readers must agree on ([[requireProps]]). */
   def tableProps(lakeDir: String): Map[String, String] = {
     val v = currentVersion(lakeDir)
-    if (v == 0) Map.empty else tablePropsAt(lakeDir, v)
+    if (v == 0) Map.empty else loadManifest(lakeDir, v).props
   }
-
-  private def tablePropsAt(lakeDir: String, version: Int): Map[String, String] =
-    manifestHeaders(lakeDir, version).collectFirst { case PropsHeader(body) =>
-      if (body.isEmpty) Map.empty[String, String]
-      else body.split("&").iterator.map { kv =>
-        val Array(k, vv) = kv.split("=", 2)
-        java.net.URLDecoder.decode(k, "UTF-8") ->
-          java.net.URLDecoder.decode(vv, "UTF-8")
-      }.toMap
-    }.getOrElse(Map.empty)
 
   /** The commit HISTORY as a table — the `DESCRIBE HISTORY` shape,
     * from the manifests alone (metadata-only, no data scan): one row
     * per surviving version with its commit timestamp, the per-commit
-    * batch/retract ids (-1 = none recorded), file count, and row count
-    * (null when any entry predates row tracking — never a silent
-    * partial sum). Vacuumed versions are absent: their manifests are
-    * gone, which is exactly what vacuum means. */
+    * batch/retract ids (-1 = none recorded), file count, and row count.
+    * Vacuumed versions are absent: their manifests are gone, which is
+    * exactly what vacuum means. */
   def history(spark: SparkSession, lakeDir: String): DataFrame = {
     import spark.implicits._
     val vs = Option(new File(versionsDir(lakeDir)).listFiles())
       .getOrElse(Array.empty[File]).map(_.getName)
       .collect { case ManifestName(v) => v.toInt }.sorted.toSeq
     vs.map { v =>
-      val hs = manifestHeaders(lakeDir, v)
-      val ts = hs.collectFirst { case CommitTsHeader(t) => t.toLong }
-      val bid = hs.collectFirst { case BatchIdHeader(id) => id.toLong }
-        .getOrElse(-1L)
-      val rid = hs.collectFirst { case RetractIdHeader(id) => id.toLong }
-        .getOrElse(-1L)
-      val es = manifestEntries(lakeDir, v)
-      val rows =
-        if (es.forall(_.rows.isDefined)) Some(es.flatMap(_.rows).sum)
-        else None
-      (v, ts, bid, rid, es.size.toLong, rows)
+      val m = loadManifest(lakeDir, v)
+      // Options keep commit_ts and n_rows nullable, the table's
+      // published schema
+      (v, Option(m.commitTs), m.batchId.getOrElse(-1L), m.retractId.getOrElse(-1L),
+        m.entries.size.toLong, Option(m.entries.map(_.rows).sum))
     }.toDF("version", "ts_millis", "batch_id", "retract_id",
       "n_files", "n_rows")
       .withColumn("commit_ts", timestamp_millis(col("ts_millis")))
@@ -1962,39 +1805,26 @@ object VersionedLake {
       .orderBy(col("version"))
   }
 
-  /** Leading `#` header lines only — headers precede every entry line,
-    * so this stops at the first entry instead of reading a possibly
-    * multi-MB manifest for a handful of headers (the planner's Bloom
-    * probe reads these at plan time). */
-  private def manifestHeaders(lakeDir: String, version: Int): Array[String] = {
-    val f = Paths.get(s"${versionsDir(lakeDir)}/v$version.manifest")
-    if (!Files.exists(f)) Array.empty else headerLines(f)
-  }
-
-  /** The schema recorded by a version's commit (None for manifests
-    * predating schema tracking — those reads fall back to footer
-    * inference). With a recorded schema, reads never open parquet
-    * footers for planning: the manifest IS the schema authority, and
-    * evolution is the merged-schema header (old files surface nulls
-    * for later-added columns — merge-on-read from the commit log, the
-    * Delta/Iceberg design). */
-  def recordedSchema(lakeDir: String, version: Int): Option[org.apache.spark.sql.types.StructType] =
-    manifestHeaders(lakeDir, version).collectFirst { case SchemaHeader(json) =>
-      org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
+  /** The schema recorded by a version's commit. Reads never open
+    * parquet footers for planning: the manifest IS the schema
+    * authority, and evolution is the merged-schema header (old files
+    * surface nulls for later-added columns — merge-on-read from the
+    * commit log, the Delta/Iceberg design). */
+  def recordedSchema(lakeDir: String, version: Int): org.apache.spark.sql.types.StructType =
+    loadManifest(lakeDir, version).schema
 
   /** Wall-clock commit instant (epoch millis) recorded in a version's
-    * manifest; None for manifests predating the header. */
-  def commitTimestamp(lakeDir: String, version: Int): Option[Long] =
-    manifestHeaders(lakeDir, version).collectFirst { case CommitTsHeader(ts) => ts.toLong }
+    * manifest. */
+  def commitTimestamp(lakeDir: String, version: Int): Long =
+    loadManifest(lakeDir, version).commitTs
 
-  /** Timestamp time travel: the newest version committed at or before
-    * `tsMillis` — Delta's TIMESTAMP AS OF over the manifest headers.
-    * Versions without a recorded commit time are skipped. */
+  /** Timestamp time travel: the newest surviving version committed at
+    * or before `tsMillis` — Delta's TIMESTAMP AS OF over the manifest
+    * headers. */
   def versionAt(lakeDir: String, tsMillis: Long): Int = {
     val cur = currentVersion(lakeDir)
-    val vs = (1 to cur).filter(v => commitTimestamp(lakeDir, v).exists(_ <= tsMillis))
+    val vs = (1 to cur).filter(v =>
+      manifestExists(lakeDir, v) && commitTimestamp(lakeDir, v) <= tsMillis)
     require(vs.nonEmpty,
       s"no version of $lakeDir was committed at or before $tsMillis")
     vs.max
@@ -2004,27 +1834,6 @@ object VersionedLake {
   def readAsOf(spark: SparkSession, lakeDir: String, tsMillis: Long,
       partitions: Option[Seq[String]] = None): DataFrame =
     read(spark, lakeDir, Some(versionAt(lakeDir, tsMillis)), partitions)
-
-  /** The table's recorded metadata spec — which column carries zone
-    * maps and which a per-file Bloom — read from the CURRENT manifest's
-    * headers. Recorded at [[create]] and carried forward by every
-    * commit, so appends, merges, compactions, and streaming batches
-    * inherit the spec instead of each caller re-stating it (the same
-    * role as a table format's table properties). */
-  def tableMeta(lakeDir: String): (Option[String], Option[BloomSpec]) = {
-    val v = currentVersion(lakeDir)
-    if (v == 0) (None, None) else tableMetaAt(lakeDir, v)
-  }
-
-  private[graft] def tableMetaAt(lakeDir: String,
-      version: Int): (Option[String], Option[BloomSpec]) = {
-    val headers = manifestHeaders(lakeDir, version)
-    val stats = headers.collectFirst { case StatsColHeader(c) => c }
-    val bloom = headers.collectFirst { case BloomHeader(c, k, m) =>
-      BloomSpec(c, k.toInt, m.toInt)
-    }
-    (stats, bloom)
-  }
 
   /** Structured-Streaming sink: every micro-batch commits as a new
     * VERSION of the lake, exactly-once end to end:
@@ -2049,8 +1858,6 @@ object VersionedLake {
   def streamingCommit(stream: DataFrame, lakeDir: String, partitionCol: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
       compactEvery: Int = 0,
       postCommit: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery = {
     require(stream.isStreaming, "streamingCommit expects a streaming DataFrame")
@@ -2060,7 +1867,7 @@ object VersionedLake {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
         if (id > committedBatchId(lakeDir))
-          append(batch.toDF(), lakeDir, partitionCol, Some(id), statsCol, bloom)
+          append(batch.toDF(), lakeDir, partitionCol, Some(id))
         // in-loop maintenance: every compactEvery-th version, fold the
         // accumulated micro-batch files back to one per partition —
         // the bound on one-version-per-batch file growth, scheduled by
@@ -2220,7 +2027,7 @@ object VersionedLake {
       val keptFiles = (keepFrom to cur).flatMap(manifest(lakeDir, _))
         .map(e => canonical(e._2)).toSet
       (1 until keepFrom).foreach { v =>
-        val f = Paths.get(s"${versionsDir(lakeDir)}/v$v.manifest")
+        val f = manifestPath(lakeDir, v)
         if (Files.exists(f)) {
           manifest(lakeDir, v).map(_._2)
             .filterNot(p => keptFiles.contains(canonical(p)))
@@ -2258,7 +2065,7 @@ object VersionedLake {
       force: Boolean = false): Seq[String] = withMaintenanceLock(lakeDir) {
     val cur = currentVersion(lakeDir)
     val referenced = (1 to cur).flatMap { v =>
-      val f = Paths.get(s"${versionsDir(lakeDir)}/v$v.manifest")
+      val f = manifestPath(lakeDir, v)
       if (Files.exists(f)) manifest(lakeDir, v).map(e => canonical(e._2))
       else Seq.empty
     }.toSet
@@ -2319,77 +2126,24 @@ object VersionedLake {
     * ADVISORY hint (racy across writers by design — all readers
     * derive the version from the manifests). */
   private def tryCommitManifest(lakeDir: String, version: Int,
-      entries: Seq[Entry], batchId: Option[Long],
-      statsCol: Option[String] = None,
-      bloom: Option[BloomSpec] = None,
-      schemaJson: Option[String] = None,
-      mblooms: Seq[BloomSpec] = Nil,
-      props: Map[String, String] = Map.empty,
-      retractId: Option[Long] = None): Boolean = {
+      entries: Seq[Entry], batchId: Option[Long], retractId: Option[Long],
+      schemaJson: String, blooms: Seq[BloomSpec],
+      props: Map[String, String]): Boolean = {
     val dir = new File(versionsDir(lakeDir))
     dir.mkdirs()
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     // carry the replay WATERMARKS forward on every commit (see
-    // BatchWmHeader): the max of everything committed so far and this
-    // commit's own ids rides the new manifest, so vacuuming history
-    // past the newest batch/retraction can never regress the guards.
-    // Written UNCONDITIONALLY (as -1 when nothing ever committed) so
-    // the newest manifest always proves which era of code wrote it —
-    // [[highWater]]'s fast path keys on these headers' presence, never
-    // on #committs, which predates them and proves nothing about
-    // watermark discipline (r19 ADVICE).
-    val bwm = math.max(committedBatchId(lakeDir), batchId.getOrElse(-1L))
-    val rwm = math.max(committedRetractId(lakeDir), retractId.getOrElse(-1L))
-    val body = batchId.map(id => s"#batchid=$id\n").getOrElse("") +
-      retractId.map(id => s"#retractid=$id\n").getOrElse("") +
-      s"#batchwm=$bwm\n" +
-      s"#retractwm=$rwm\n" +
-      statsCol.map(c => s"#statscol=$c\n").getOrElse("") +
-      bloom.map(b => s"#bloom=${b.column}:${b.k}:${b.m}\n").getOrElse("") +
-      mblooms.map(b => s"#mbloom=${b.column}:${b.k}:${b.m}\n").mkString +
-      (if (props.isEmpty) "" else "#props=" + props.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&") + "\n") +
-      schemaJson.map(j => s"#schema=$j\n").getOrElse("") +
-      s"#committs=${System.currentTimeMillis()}\n" +
-      entries.map { e =>
-        val mn = e.min.map(_.toString).getOrElse("")
-        val mx = e.max.map(_.toString).getOrElse("")
-        def blw(fb: FileBloom) =
-          s"${fb.k}:${fb.m}:" + fb.words.map(java.lang.Long.toHexString).mkString(",")
-        val bl = e.bloom.map(blw).getOrElse("")
-        val cs = e.colStats.toSeq.sortBy(_._1).map { case (n, (lo, hi)) =>
-          s"${enc(n)}:$lo:$hi"
-        }.mkString(";")
-        val cb = e.colBlooms.toSeq.sortBy(_._1).map { case (n, fb) =>
-          s"${enc(n)}:${blw(fb)}"
-        }.mkString(";")
-        val st = e.strStats.toSeq.sortBy(_._1).map { case (n, (lo, hi)) =>
-          s"${enc(n)}:${enc(lo)}:${enc(hi)}"
-        }.mkString(";")
-        val nl = e.nullCounts.toSeq.sortBy(_._1).map { case (n, c) =>
-          s"${enc(n)}:$c"
-        }.mkString(";")
-        if (nl.nonEmpty)
-          s"${e.partition}\t${e.path}\t$mn\t$mx\t$bl\t${e.rows.fold("")(_.toString)}\t$cs\t$cb\t$st\t$nl"
-        else if (st.nonEmpty)
-          s"${e.partition}\t${e.path}\t$mn\t$mx\t$bl\t${e.rows.fold("")(_.toString)}\t$cs\t$cb\t$st"
-        else if (cb.nonEmpty)
-          s"${e.partition}\t${e.path}\t$mn\t$mx\t$bl\t${e.rows.fold("")(_.toString)}\t$cs\t$cb"
-        else if (cs.nonEmpty)
-          s"${e.partition}\t${e.path}\t$mn\t$mx\t$bl\t${e.rows.fold("")(_.toString)}\t$cs"
-        else e.rows match {
-          case Some(r) => s"${e.partition}\t${e.path}\t$mn\t$mx\t$bl\t$r"
-          case None if e.bloom.isDefined =>
-            s"${e.partition}\t${e.path}\t$mn\t$mx\t$bl"
-          case None if e.min.isDefined =>
-            s"${e.partition}\t${e.path}\t$mn\t$mx"
-          case None => s"${e.partition}\t${e.path}"
-        }
-      }.mkString("\n")
+    // committedBatchId): the max of everything committed so far and
+    // this commit's own ids rides the new manifest, so vacuuming
+    // history past the newest batch/retraction can never regress the
+    // guards.
+    val body = renderManifest(Manifest(batchId, retractId,
+      batchWm = math.max(committedBatchId(lakeDir), batchId.getOrElse(-1L)),
+      retractWm = math.max(committedRetractId(lakeDir), retractId.getOrElse(-1L)),
+      blooms, props, schemaJson, System.currentTimeMillis(), entries))
     val tmp = Paths.get(s"$dir/.staged-${java.util.UUID.randomUUID()}")
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     try {
-      Files.createLink(Paths.get(s"$dir/v$version.manifest"), tmp)
+      Files.createLink(manifestPath(lakeDir, version), tmp)
       val ctmp = Paths.get(s"$dir/.current-${java.util.UUID.randomUUID()}")
       Files.write(ctmp, version.toString.getBytes(StandardCharsets.UTF_8))
       Files.move(ctmp, Paths.get(s"$dir/CURRENT"),

@@ -428,8 +428,10 @@ object Exporter {
   /** One tick of [[continuousExport]] after the batch landed under
     * `b<id>`: assemble the live staged set, export the newly complete
     * windows, rewrite the trimmed pending snapshot, retire superseded
-    * generations. Split out so the tick (including the legacy-layout
-    * bootstrap) is unit-testable without a stream. */
+    * generations. Split out so the tick is unit-testable without a
+    * stream. Older batch prefixes with no pending snapshot can only be
+    * a staging directory from before prefix retirement: refused by
+    * name, never folded in. */
   private[graft] def exportTick(spark: SparkSession, p: GridParams,
       stagingDir: String, outDir: String, stepMicros: Long,
       slackMicros: Long, id: Long): Seq[String] = {
@@ -437,37 +439,31 @@ object Exporter {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prev = stagedGenerations(fs, stagingDir, "p").filter(_ < id)
       .maxOption
-    val older = stagedGenerations(fs, stagingDir, "b").filter(_ < id)
     val batchDf = spark.read.parquet(s"$stagingDir/b$id")
     val staged = prev match {
       case Some(w) => spark.read.parquet(s"$stagingDir/p$w")
         .unionByName(batchDf)
-      // UPGRADE BOOTSTRAP: no pending snapshot but older batch
-      // prefixes exist — a pre-retirement staging layout carried over
-      // a restart (the checkpoint continues batch ids, so legacy
-      // prefixes are always < id). Fold them into this tick's staged
-      // set ONCE; the trimmed pending snapshot then supersedes them
-      // and the retirement below reclaims the history.
-      case None if older.nonEmpty => spark.read.parquet(
-        (older.sorted.map(w => s"$stagingDir/b$w") :+ s"$stagingDir/b$id"): _*)
-      case None => batchDf
+      case None =>
+        val older = stagedGenerations(fs, stagingDir, "b").filter(_ < id)
+        if (older.nonEmpty)
+          throw new IllegalStateException(
+            s"staging directory $stagingDir holds batch prefixes " +
+              s"${older.sorted.map("b" + _).mkString(", ")} older than batch " +
+              s"$id but no pending snapshot: a layout this exporter does " +
+              "not write; start the stream on an empty staging directory")
+        batchDf
     }
     val (keys, floor) = exportCompleteWindows(staged, p, outDir,
       stepMicros, slackMicros)
     staged.filter(unix_micros(col(p.time)) >= lit(floor))
       .write.mode("overwrite").parquet(s"$stagingDir/p$id")
     // retire superseded generations: pendings older than the replay
-    // fallback, and every batch prefix this tick consumed. In the
-    // bootstrap case the legacy prefixes SURVIVE this tick — a crash
-    // here replays with no prior pending (p<id> is not a predecessor
-    // of id), so the legacy prefixes must still be readable; the NEXT
-    // tick sees p<id> as its predecessor and reclaims them.
+    // fallback, and every batch prefix this tick consumed.
     stagedGenerations(fs, stagingDir, "p")
       .filter(w => w < id && !prev.contains(w))
       .foreach(w => fs.delete(new Path(s"$stagingDir/p$w"), true))
-    if (prev.isDefined)
-      stagedGenerations(fs, stagingDir, "b").filter(_ < id)
-        .foreach(w => fs.delete(new Path(s"$stagingDir/b$w"), true))
+    stagedGenerations(fs, stagingDir, "b").filter(_ < id)
+      .foreach(w => fs.delete(new Path(s"$stagingDir/b$w"), true))
     keys
   }
 
@@ -561,9 +557,10 @@ object Exporter {
         key.headOption.exists(_.isDigit) && key < cutoffKey
       }
     dropped.foreach(fs.delete(_, true))
-    // manifest bump for the hive layout only (raw-prefix lakes are read
-    // by a `$outDir/*` glob that must see partition dirs exclusively);
-    // a no-op drop changes nothing, so nothing to signal
+    // manifest bump for lakes the manifest tracks (the hive layout);
+    // raw-prefix lakes carry none and readRawPrefixExport lists their
+    // prefixes, skipping `_`/`.` names. A no-op drop changes nothing,
+    // so nothing to signal
     if (dropped.nonEmpty &&
         (fs.exists(new Path(outDir, ExportManifestName)) ||
           fs.listStatus(new Path(outDir)).exists(

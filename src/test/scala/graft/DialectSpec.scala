@@ -368,7 +368,8 @@ class DialectSpec extends SparkSpec {
     import spark.implicits._
     val v1 = Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0))
       .toDF("id", "part", "v")
-    graft.sources.VersionedLake.create(v1, s"$dir/lake", "part")
+    graft.sources.VersionedLake.create(v1, s"$dir/lake", "part",
+      blooms = Seq(graft.sources.VersionedLake.BloomSpec("id")))
     val changes = Seq((2L, "a", 25.0, false), (4L, "b", 40.0, false))
       .toDF("id", "part", "v", "_deleted")
     graft.sources.VersionedLake.mergeUpsert(
@@ -380,10 +381,10 @@ class DialectSpec extends SparkSpec {
       rows(graft.sources.VersionedLake.read(spark, s"$dir/lake", Some(2))))
     assert(rows(spark.sql(s"SELECT * FROM version_diff('$dir/lake', 1, 2)")) ==
       rows(graft.sources.VersionedLake.diff(spark, s"$dir/lake", 1, 2)))
-    val t1 = graft.sources.VersionedLake.commitTimestamp(s"$dir/lake", 1).get
+    val t1 = graft.sources.VersionedLake.commitTimestamp(s"$dir/lake", 1)
     assert(rows(spark.sql(s"SELECT * FROM time_travel_at('$dir/lake', ${t1}L)")) ==
       rows(graft.sources.VersionedLake.read(spark, s"$dir/lake", Some(1))))
-    assert(rows(spark.sql(s"SELECT * FROM read_point('$dir/lake', '2') WHERE id = 2")) ==
+    assert(rows(spark.sql(s"SELECT * FROM read_point('$dir/lake', 'id', '2') WHERE id = 2")) ==
       rows(graft.sources.VersionedLake.read(spark, s"$dir/lake").filter(col("id") === 2L)))
     // and the change algebra is visible from SQL alone
     val byChange = spark.sql(
@@ -397,27 +398,27 @@ class DialectSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_tvf_maint").toString
     val lake = s"$dir/lake"
     import spark.implicits._
-    // fragmented two-commit lake with zone maps on v
+    // fragmented two-commit lake (every commit records zone maps on
+    // every column)
     graft.sources.VersionedLake.create(
       (1 to 50).map(i => (i.toLong, s"p${i % 2}", i.toDouble)).toDF("id", "part", "v")
         .repartition(3),
-      lake, "part", statsCol = Some("v"))
+      lake, "part")
     graft.sources.VersionedLake.append(
       (51 to 100).map(i => (i.toLong, s"p${i % 2}", i.toDouble)).toDF("id", "part", "v")
         .repartition(3),
-      lake, "part", statsCol = Some("v"))
+      lake, "part")
 
     // read_range from SQL == readRange from Scala, exact-filtered
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rows(spark.sql(
-      s"SELECT * FROM read_range('$lake', 20.0D, 40.0D) WHERE v BETWEEN 20.0 AND 40.0")) ==
-      rows(graft.sources.VersionedLake.readRange(spark, lake, 20.0, 40.0)
+      s"SELECT * FROM read_range('$lake', 'v', 20.0D, 40.0D) WHERE v BETWEEN 20.0 AND 40.0")) ==
+      rows(graft.sources.VersionedLake.readRange(spark, lake, "v", 20.0, 40.0, None)
         .filter(col("v").between(20.0, 40.0))))
     assert(spark.sql(
-      s"SELECT count(*) AS n FROM read_range('$lake', 20.0D, 40.0D) WHERE v BETWEEN 20.0 AND 40.0")
+      s"SELECT count(*) AS n FROM read_range('$lake', 'v', 20.0D, 40.0D) WHERE v BETWEEN 20.0 AND 40.0")
       .head().getLong(0) == 21L)
-    // 4-arg column form: prune on the per-column zone maps of a column
-    // that is NOT the legacy statsCol
+    // any recorded column prunes, not only v
     assert(spark.sql(
       s"SELECT count(*) AS n FROM read_range('$lake', 'id', 20.0D, 40.0D) WHERE id BETWEEN 20 AND 40")
       .head().getLong(0) == 21L)
@@ -428,9 +429,8 @@ class DialectSpec extends SparkSpec {
     assert(committed == 3L)
     val post = graft.sources.VersionedLake.manifestEntries(lake, 3)
     assert(post.groupBy(_.partition).forall(_._2.size == 1))
-    // the table's recorded stats spec was INHERITED through the SQL
-    // path — no third argument needed
-    assert(post.forall(e => e.min.isDefined && e.max.isDefined))
+    // the consolidated files re-record zone maps through the SQL path
+    assert(post.forall(_.colStats.contains("v")))
 
     // lake_vacuum expires history below the compaction point
     val vac = spark.sql(s"SELECT * FROM lake_vacuum('$lake', 3)").head()

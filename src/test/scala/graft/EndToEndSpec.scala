@@ -86,8 +86,7 @@ class EndToEndSpec extends SparkSpec {
     def run(): Unit = {
       val q = graft.sources.VersionedLake.streamingCommit(
         ms.toDS().toDF("sensor_id", "event_time", "temperature", "status"),
-        lakeDir, "sensor_id", s"$root/ckpt",
-        statsCol = Some("temperature"), compactEvery = 2)
+        lakeDir, "sensor_id", s"$root/ckpt", compactEvery = 2)
       q.awaitTermination()
     }
     val batches = fleet.grouped(math.max(1, fleet.length / 3)).toSeq
@@ -116,9 +115,9 @@ class EndToEndSpec extends SparkSpec {
     // time travel: the first committed version still reads exactly batch 1
     assert(graft.sources.VersionedLake.read(spark, lakeDir, Some(1)).count() ==
       batches.head.length)
-    // and zone maps recorded via the table spec survive for range reads
+    // and zone maps recorded by every commit survive for range reads
     val hot = graft.sources.VersionedLake
-      .readRange(spark, lakeDir, 150.0, 200.0)
+      .readRange(spark, lakeDir, "temperature", 150.0, 200.0, None)
       .filter(col("temperature") >= 150.0)
     assert(hot.count() ==
       graft.sources.VersionedLake.read(spark, lakeDir)

@@ -351,53 +351,26 @@ class ExporterSpec extends SparkSpec {
         .collect().map(_.toSeq).toSet)
   }
 
-  test("staging upgrade bootstrap: legacy b* history is folded in once, then retired") {
+  test("staging refusal: older b* prefixes with no pending snapshot fail the tick, naming the directory") {
     val staging = freshDir; val out = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
     val step = 7L * 24 * 3600 * 1000000L
-    // a pre-retirement staging layout: batches 0 and 1 on disk, NO
-    // pending snapshot (what an upgraded deployment's checkpoint
-    // resumes over — batch ids continue, so legacy prefixes are < id)
+    // batch prefixes 0 and 1 on disk and NO pending snapshot: a layout
+    // no tick writes (every tick leaves p<id> behind before its batch
+    // prefixes retire)
     def slice(lo: String, hi: String) = events.filter(
       col("ts") >= lit(lo).cast("timestamp") && col("ts") < lit(hi).cast("timestamp"))
     slice("2024-01-01", "2024-01-06").write.parquet(s"$staging/b0")
     slice("2024-01-06", "2024-01-12").write.parquet(s"$staging/b1")
     slice("2024-01-12", "2024-01-19").write.parquet(s"$staging/b2")
-    val k2 = graft.streaming.Exporter.exportTick(spark, P, staging, out,
-      step, 0L, id = 2)
-    // the legacy batches' complete windows exported (epoch-aligned
-    // weekly windows break on Thursdays: Jan-04 and Jan-11 close)
-    assert(k2.nonEmpty, "bootstrap tick exported nothing")
-    val exported = Exporter.readExport(spark, out)
-    assert(exported.filter(col("time") < lit("2024-01-04").cast("timestamp"))
-      .count() > 0, "legacy rows were not folded into the staged set")
-    // legacy prefixes SURVIVE the bootstrap tick (a crash before the
-    // next tick must be able to replay it)...
-    assert(new java.io.File(s"$staging/b0").exists())
-    assert(new java.io.File(s"$staging/b1").exists())
-    // ...and the next tick, with p2 as its predecessor, reclaims them
-    slice("2024-01-19", "2024-01-26").write.parquet(s"$staging/b3")
-    graft.streaming.Exporter.exportTick(spark, P, staging, out, step, 0L, id = 3)
-    assert(!new java.io.File(s"$staging/b0").exists())
-    assert(!new java.io.File(s"$staging/b1").exists())
-    assert(!new java.io.File(s"$staging/b2").exists())
-    // the lake equals a batch backfill of the same exported windows —
-    // nothing was lost across the layout upgrade. Fresh read: the
-    // pre-tick-3 frame's file index predates the new partition.
-    val keys = Exporter.readExport(spark, out).select("partition_key")
-      .distinct().collect().map(_.getString(0)).toSet
-    val outB = freshDir
-    val f = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
-    Exporter.backfill(events, P, outB, keys.toSeq.sorted.map { k =>
-      val st = java.time.LocalDateTime.parse(k,
-        java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH-mm"))
-      (st.format(f), st.plusDays(7).format(f))
-    })
-    val cols = Seq("partition_key", "user_id", "time", "status", "temperature")
-    assert(Exporter.readExport(spark, out).select(cols.map(col): _*)
-      .collect().map(_.toSeq).toSet ==
-      Exporter.readExport(spark, outB).select(cols.map(col): _*)
-        .collect().map(_.toSeq).toSet)
+    val err = intercept[IllegalStateException](
+      graft.streaming.Exporter.exportTick(spark, P, staging, out, step, 0L, id = 2))
+    assert(err.getMessage.contains(staging) && err.getMessage.contains("b0, b1"),
+      err.getMessage)
+    // nothing was exported, staged or retired
+    assert(new java.io.File(out).listFiles().isEmpty)
+    assert(!new java.io.File(s"$staging/p2").exists())
+    assert(Seq("b0", "b1", "b2").forall(b => new java.io.File(s"$staging/$b").exists()))
   }
 
   test("raw-prefix layout holds the same data as the hive layout, key recovered from the path") {

@@ -581,15 +581,18 @@ class PlanSpec extends SparkSpec {
     assert(!hasScan(nullSensitive),
       nullSensitive.queryExecution.executedPlan.toString)
     assert(nullSensitive.head().getLong(0) == 35L)
-    // ...but a lake without null counts (colstats off) must scan
-    val offDir = java.nio.file.Files.createTempDirectory("graft_cmoff").toString + "/lake"
-    VersionedLake.create((0 until 10).map(i =>
+    // ...but a column added by a later append has no null count in
+    // the files written before it (their rows read it as null), so
+    // count(col) over it must scan
+    val addDir = java.nio.file.Files.createTempDirectory("graft_cmadd").toString + "/lake"
+    VersionedLake.create((0 until 10).map(i => (i.toLong, "p0")).toDF("v", "part"),
+      addDir, "part")
+    VersionedLake.append((10 until 20).map(i =>
       (i.toLong, if (i % 2 == 0) null else s"n$i", "p0"))
-      .toDF("v", "name", "part"), offDir, "part",
-      props = Map("colstats" -> "off"))
-    val offCount = VersionedLake.read(spark, offDir)
+      .toDF("v", "name", "part"), addDir, "part")
+    val addCount = VersionedLake.read(spark, addDir)
       .agg(org.apache.spark.sql.functions.count(col("name")))
-    assert(hasScan(offCount) && offCount.head().getLong(0) == 5L)
+    assert(hasScan(addCount) && addCount.head().getLong(0) == 5L)
     // the off switch restores the scan
     spark.conf.set(graft.plans.LakeCountFromManifest.EnabledKey, "false")
     try assert(hasScan(VersionedLake.read(spark, dir).groupBy().count()))
@@ -744,15 +747,17 @@ class PlanSpec extends SparkSpec {
     assert(!hasScan(ts))
     assert(ts.head() == org.apache.spark.sql.Row(
       "2024-01-03 04:05:06", "2024-02-01 00:00:00"))
-    // a LEGACY manifest carrying NaN colStats (pre-NaN-filter writers;
-    // the parser round-trips them) must keep the scan, not fold NaN
-    // into max or silently drop the file from min
+    // a NaN stat is refused, naming the manifest: the writer records
+    // none, and a NaN bound would poison max (NaN sorts greatest) and
+    // silently drop the file from min
     val mf = java.nio.file.Paths.get(s"$dir/_versions/v1.manifest")
     val doctored = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
       .replaceAll("""v:[-0-9.E]+:[-0-9.E]+""", "v:NaN:NaN")
     java.nio.file.Files.write(mf, doctored.getBytes("UTF-8"))
-    val nanLegacy = VersionedLake.read(spark, dir, Some(1)).agg(fmin(col("v")))
-    assert(hasScan(nanLegacy) && nanLegacy.head().getLong(0) == 0L)
+    val nanErr = intercept[IllegalStateException](
+      VersionedLake.read(spark, dir, Some(1)).agg(fmin(col("v"))).collect())
+    assert(nanErr.getMessage.contains(mf.toString) &&
+      nanErr.getMessage.contains("NaN"), nanErr.getMessage)
     // far-future timestamps (epoch micros beyond 2^53) never fold —
     // the recorded double is already rounded
     val fdir = java.nio.file.Files.createTempDirectory("graft_mmfar").toString + "/lake"

@@ -21,6 +21,11 @@ class VersionedLakeSpec extends SparkSpec {
     p.toString
   }
 
+  /** The mandatory header block of a hand-written manifest. */
+  private val manifestHeader =
+    "#format=1\n#batchwm=-1\n#retractwm=-1\n" +
+      "#schema={\"type\":\"struct\",\"fields\":[]}\n#committs=0\n"
+
   private def buildTwoVersions(root: String): Unit = {
     val df = Seq(
       (1L, "a", 10.0, "p1"), (2L, "b", 20.0, "p1"),
@@ -60,9 +65,9 @@ class VersionedLakeSpec extends SparkSpec {
     val vdir = new java.io.File(s"$root/lake/_versions"); vdir.mkdirs()
     // hand-written manifest long enough that its middle sits outside
     // the head/tail 256-byte probes — the r19-documented blind spot
-    val lines = (0 until 200).map(i => f"qq$i%03d\t$root/lake/data/f$i%03d.bin")
+    val lines = (0 until 200).map(i => f"qq$i%03d\t$root/lake/data/f$i%03d.bin\t1\t\t\t\t")
     val f = new java.io.File(vdir, "v1.manifest").toPath
-    Files.writeString(f, lines.mkString("\n"))
+    Files.writeString(f, manifestHeader + lines.mkString("\n"))
     assert(VersionedLake.manifestEntries(s"$root/lake", 1).size == 200) // prime
     val text = Files.readString(f)
     val mid = text.length / 2
@@ -80,22 +85,6 @@ class VersionedLakeSpec extends SparkSpec {
       "stale cache served a middle-bytes equal-length edit")
   }
 
-  test("watermark era gap: a #committs-only newest manifest (no watermark headers) walks history instead of reading -1") {
-    val root = tmp("vlake_era")
-    val vdir = new java.io.File(s"$root/lake/_versions"); vdir.mkdirs()
-    // simulate the header era BETWEEN #committs and the #batchwm/
-    // #retractwm watermarks: per-commit batch ids exist, #committs is
-    // present, no watermark header anywhere — the r19 fast path read
-    // this as "nothing ever committed" and reset the replay guard
-    Files.writeString(new java.io.File(vdir, "v1.manifest").toPath,
-      s"#batchid=5\n#committs=1700000000000\np1\t$root/lake/data/f1.bin\n")
-    Files.writeString(new java.io.File(vdir, "v2.manifest").toPath,
-      s"#committs=1700000000001\np1\t$root/lake/data/f1.bin\n")
-    assert(VersionedLake.committedBatchId(s"$root/lake") == 5L,
-      "a #committs-only newest manifest must fall back to the header walk")
-    assert(VersionedLake.committedRetractId(s"$root/lake") == -1L)
-  }
-
   test("watermark headers are written unconditionally, -1 when nothing ever committed") {
     val root = tmp("vlake_wm0")
     VersionedLake.create(Seq((1L, "p1")).toDF("id", "part"), s"$root/lake", "part")
@@ -106,16 +95,85 @@ class VersionedLakeSpec extends SparkSpec {
     assert(VersionedLake.committedRetractId(s"$root/lake") == -1L)
   }
 
+  test("manifest format: every version of a lake built by every commit kind re-renders to its own bytes") {
+    val root = tmp("vlake_fmt")
+    val lake = s"$root/lake"
+    val df = Seq(
+      (1L, "a b;c:d", 1.5, "p1"), (2L, null, -2.0, "p1"),
+      (3L, "\u00e9t\u00e9", 3.25, "p2"), (4L, "z", Double.NaN, "p3"))
+      .toDF("id", "name", "score", "part")
+      .withColumn("ts", timestamp_micros(col("id") * 1000000L))
+    VersionedLake.create(df, lake, "part", batchId = Some(0L),
+      blooms = Seq(VersionedLake.BloomSpec("id", m = 128)),
+      props = Map("geometry" -> "g=1&2"))
+    VersionedLake.append(df.withColumn("id", col("id") + 10L)
+      .withColumn("extra", lit(7)), lake, "part", Some(1L)) // v2, evolves
+    VersionedLake.mergeUpsert(spark, lake,
+      Seq((1L, "x", 9.0, "p1", false)).toDF("id", "name", "score", "part", "_deleted")
+        .withColumn("ts", timestamp_micros(lit(5L))).withColumn("extra", lit(1)),
+      Seq("id"), "part", batchId = Some(2L)) // v3
+    VersionedLake.compactPartitions(spark, lake, "part") // v4
+    VersionedLake.dropPartitions(lake, Seq("p3"), batchId = Some(3L)) // v5
+    VersionedLake.mergeUpsert(spark, lake,
+      Seq((2L, "", 0.0, "p1", true)).toDF("id", "name", "score", "part", "_deleted")
+        .withColumn("ts", timestamp_micros(lit(0L))).withColumn("extra", lit(1)),
+      Seq("id"), "part", retractId = Some(0L)) // v6
+    assert(VersionedLake.currentVersion(lake) == 6)
+    (1 to 6).foreach { v =>
+      val f = Paths.get(s"$lake/_versions/v$v.manifest")
+      val text = Files.readString(f)
+      assert(text.startsWith("#format=1\n"), s"v$v: ${text.take(40)}")
+      assert(VersionedLake.renderManifest(VersionedLake.loadManifest(lake, v)) == text,
+        s"v$v does not re-render to its own bytes")
+    }
+    // the NaN-bearing file records no score stats, every other file does
+    val v1 = VersionedLake.manifestEntries(lake, 1)
+    assert(v1.filter(_.partition == "p3").forall(!_.colStats.contains("score")))
+    assert(v1.filter(_.partition != "p3").forall(_.colStats.contains("score")))
+  }
+
+  test("manifest format: a missing or unknown #format, a wrong field count or a missing mandatory header is refused, naming the file") {
+    val root = tmp("vlake_fmtbad")
+    VersionedLake.create(Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "name", "part"),
+      s"$root/good", "part", blooms = Seq(VersionedLake.BloomSpec("id")))
+    val good = Files.readString(Paths.get(s"$root/good/_versions/v1.manifest"))
+    val lines = good.split("\n").toSeq
+    val doctored = Seq(
+      "no format" -> lines.tail.mkString("\n"),
+      "unknown format" -> ("#format=2" +: lines.tail).mkString("\n"),
+      "field count" -> lines.map(l =>
+        if (l.startsWith("#")) l else l.split("\t", -1).dropRight(1).mkString("\t"))
+        .mkString("\n"),
+      "no schema" -> lines.filterNot(_.startsWith("#schema=")).mkString("\n"),
+      "no batchwm" -> lines.filterNot(_.startsWith("#batchwm=")).mkString("\n"),
+      "no committs" -> lines.filterNot(_.startsWith("#committs=")).mkString("\n"),
+      "legacy header" -> (lines.head +: "#statscol=id" +: lines.tail).mkString("\n"))
+    doctored.foreach { case (what, text) =>
+      assert(text != good, what)
+      val lake = s"$root/${what.replace(' ', '_')}"
+      val f = Paths.get(s"$lake/_versions/v1.manifest")
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, text)
+      def refused(read: => Any): Unit = {
+        val e = intercept[IllegalStateException](read)
+        assert(e.getMessage.contains(f.toString), s"$what: ${e.getMessage}")
+      }
+      refused(VersionedLake.manifestEntries(lake, 1))
+      refused(VersionedLake.manifestEntriesForPlanning(lake, 1))
+      refused(VersionedLake.committedBatchId(lake))
+    }
+  }
+
   test("huge manifests: 50k-entry first parse stays bounded; the planner view refuses an uncached oversized parse") {
-    // a synthetic 50k-entry manifest in the on-disk format (partition,
-    // path) — the 100k-file-lake shape the optimizer rules must not
-    // stall on
+    // a synthetic 50k-entry manifest in the on-disk format (one
+    // 7-field line per file, zone map on x) — the 100k-file-lake
+    // shape the optimizer rules must not stall on
     def fakeLake(prefix: String, entries: Int): String = {
       val root = tmp(prefix)
       val vdir = new java.io.File(s"$root/lake/_versions"); vdir.mkdirs()
-      val sb = new StringBuilder
-      (0 until entries).foreach(i =>
-        sb.append(s"p${i % 64}\t$root/lake/data/p${i % 64}/f$i.parquet\t0\t9\n"))
+      val sb = new StringBuilder(manifestHeader)
+      (0 until entries).foreach(i => sb.append(
+        s"p${i % 64}\t$root/lake/data/p${i % 64}/f$i.parquet\t10\tx:0.0:9.0\t\t\tx:0\n"))
       Files.writeString(new java.io.File(vdir, "v1.manifest").toPath, sb.toString)
       s"$root/lake"
     }
@@ -282,11 +340,11 @@ class VersionedLakeSpec extends SparkSpec {
     // purely the manifest zone maps, not partition pruning
     val df = (1 to 400).map(i => (i.toLong, i.toDouble, "all")).toDF("id", "score", "part")
       .repartitionByRange(4, col("score"))
-    VersionedLake.create(df, s"$root/lake", "part", statsCol = Some("score"))
+    VersionedLake.create(df, s"$root/lake", "part")
     val entries = VersionedLake.manifestEntries(s"$root/lake", 1)
-    assert(entries.length == 4 && entries.forall(e => e.min.isDefined && e.max.isDefined))
+    assert(entries.length == 4 && entries.forall(_.colStats.contains("score")))
     // a box inside one file's range opens exactly that file
-    val narrow = VersionedLake.readRange(spark, s"$root/lake", 120.0, 140.0)
+    val narrow = VersionedLake.readRange(spark, s"$root/lake", "score", 120.0, 140.0, None)
     val opened = narrow.select(input_file_name()).distinct().count()
     assert(opened == 1, s"expected 1 file, opened $opened")
     // zone maps bound files, not rows: exact filter on top is correct
@@ -358,29 +416,28 @@ class VersionedLakeSpec extends SparkSpec {
     val df = (1 to 400).map(i => (i.toLong, s"n$i", "all")).toDF("id", "name", "part")
       .repartitionByRange(4, col("id"))
     VersionedLake.create(df, s"$root/lake", "part",
-      bloom = Some(VersionedLake.BloomSpec("id", m = 4096)))
+      blooms = Seq(VersionedLake.BloomSpec("id", m = 4096)))
     val entries = VersionedLake.manifestEntries(s"$root/lake", 1)
-    assert(entries.length == 4 && entries.forall(_.bloom.isDefined))
+    assert(entries.length == 4 && entries.forall(_.colBlooms.contains("id")))
     // a present key: exactly the files whose filter admits it (>= the
     // one real holder; FPs possible but DETERMINISTIC from the
     // manifest, so assert the exact predicted set)
-    val predicted = entries.count(_.bloom.get.mightContain("217"))
-    val read217 = VersionedLake.readPoint(spark, s"$root/lake", "217")
+    val predicted = entries.count(_.colBlooms("id").mightContain("217"))
+    val read217 = VersionedLake.readPoint(spark, s"$root/lake", "id", "217", None)
     assert(read217.inputFiles.length == predicted && predicted >= 1)
     assert(read217.filter(col("id") === 217L).select("name").as[String]
       .collect().toSeq == Seq("n217"))
     // a key no filter admits: zero files opened, empty (schema'd) frame
     val absent = (100000 to 110000).map(_.toString)
-      .find(k => entries.forall(!_.bloom.get.mightContain(k)))
+      .find(k => entries.forall(!_.colBlooms("id").mightContain(k)))
       .getOrElse(fail("no fully-excluded probe in range — filters saturated?"))
-    val none = VersionedLake.readPoint(spark, s"$root/lake", absent)
+    val none = VersionedLake.readPoint(spark, s"$root/lake", "id", absent, None)
     assert(none.inputFiles.isEmpty && none.count() == 0)
     // filters survive the merge path too: upsert one row, re-probe
     val changes = Seq((217L, "renamed", "all", false))
       .toDF("id", "name", "part", "_deleted")
-    VersionedLake.mergeUpsert(spark, s"$root/lake", changes, Seq("id"), "part",
-      bloom = Some(VersionedLake.BloomSpec("id", m = 4096)))
-    val v2 = VersionedLake.readPoint(spark, s"$root/lake", "217")
+    VersionedLake.mergeUpsert(spark, s"$root/lake", changes, Seq("id"), "part")
+    val v2 = VersionedLake.readPoint(spark, s"$root/lake", "id", "217", None)
       .filter(col("id") === 217L).select("name").as[String].collect().toSeq
     assert(v2 == Seq("renamed"))
   }
@@ -614,15 +671,14 @@ class VersionedLakeSpec extends SparkSpec {
     val df = (1 to 200).map(i => (i.toLong, i.toDouble, "all")).toDF("id", "score", "part")
       .repartition(5)
     VersionedLake.create(df, lake, "part",
-      statsCol = Some("score"), bloom = Some(VersionedLake.BloomSpec("id", m = 4096)))
-    VersionedLake.compactPartitions(spark, lake, "part",
-      statsCol = Some("score"), bloom = Some(VersionedLake.BloomSpec("id", m = 4096)))
+      blooms = Seq(VersionedLake.BloomSpec("id", m = 4096)))
+    VersionedLake.compactPartitions(spark, lake, "part")
     val post = VersionedLake.manifestEntries(lake, 2)
     assert(post.size == 1)
-    assert(post.head.min.contains(1.0) && post.head.max.contains(200.0))
-    assert(post.head.bloom.exists(_.mightContain("137")))
+    assert(post.head.colStats.get("score").contains((1.0, 200.0)))
+    assert(post.head.colBlooms.get("id").exists(_.mightContain("137")))
     // point read through the compacted manifest still resolves
-    assert(VersionedLake.readPoint(spark, lake, "137")
+    assert(VersionedLake.readPoint(spark, lake, "id", "137", None)
       .filter(col("id") === 137L).count() == 1)
   }
 
@@ -835,15 +891,14 @@ class VersionedLakeSpec extends SparkSpec {
       (1 to 40).map(i => (i.toLong, i.toDouble, s"p${i % 2}")).toDF("id", "v", "part")
         .repartition(3),
       lake, "part",
-      statsCol = Some("v"), bloom = Some(VersionedLake.BloomSpec("id", m = 4096)))
-    assert(VersionedLake.tableMeta(lake) ==
-      ((Some("v"), Some(VersionedLake.BloomSpec("id", m = 4096)))))
+      blooms = Seq(VersionedLake.BloomSpec("id", m = 4096)))
+    assert(VersionedLake.tableBlooms(lake) == Seq(VersionedLake.BloomSpec("id", m = 4096)))
     def allCarryMeta(v: Int, newOnly: Boolean = false): Unit = {
       val entries = VersionedLake.manifestEntries(lake, v)
         .filter(e => !newOnly || e.path.contains(s"c$v-"))
       assert(entries.nonEmpty)
-      assert(entries.forall(e => e.min.isDefined && e.max.isDefined), s"v$v lost zone maps")
-      assert(entries.forall(_.bloom.isDefined), s"v$v lost blooms")
+      assert(entries.forall(_.colStats.contains("v")), s"v$v lost zone maps")
+      assert(entries.forall(_.colBlooms.contains("id")), s"v$v lost blooms")
     }
     // append WITHOUT re-stating the spec: new files still carry both
     VersionedLake.append(
@@ -860,12 +915,12 @@ class VersionedLakeSpec extends SparkSpec {
     VersionedLake.compactPartitions(spark, lake, "part")
     val cur = VersionedLake.currentVersion(lake)
     allCarryMeta(cur)
-    assert(VersionedLake.readPoint(spark, lake, "17")
+    assert(VersionedLake.readPoint(spark, lake, "id", "17", None)
       .filter(col("id") === 17L).count() == 1)
-    assert(VersionedLake.readRange(spark, lake, 2.0, 3.0)
+    assert(VersionedLake.readRange(spark, lake, "v", 2.0, 3.0, None)
       .filter(col("v").between(2.0, 3.0)).count() == 2) // v=2.5 and v=3.0
     // the spec survives in the newest manifest's headers
-    assert(VersionedLake.tableMeta(lake)._1.contains("v"))
+    assert(VersionedLake.tableBlooms(lake).map(_.column) == Seq("id"))
   }
 
   test("change feed: per-version batches equal batch diffs across interleaved commits, merges, compaction") {
@@ -934,14 +989,14 @@ class VersionedLakeSpec extends SparkSpec {
     assert(replayed == 5)
   }
 
-  test("row counts in the manifest: COUNT(*) from metadata across commit kinds; legacy fallback") {
+  test("row counts in the manifest: COUNT(*) from metadata across commit kinds") {
     import spark.implicits._
     val root = tmp("vlake_rows")
     val lake = s"$root/lake"
     VersionedLake.create(
       (1 to 30).map(i => (i.toLong, s"n$i", s"p${i % 2}")).toDF("id", "name", "part")
         .repartition(3), lake, "part")
-    assert(VersionedLake.manifestEntries(lake, 1).forall(_.rows.isDefined))
+    assert(VersionedLake.manifestEntries(lake, 1).map(_.rows).sum == 30L)
     assert(VersionedLake.rowCount(spark, lake) == 30L)
     // append, merge (update+delete), compact: metadata count tracks reality
     VersionedLake.append(
@@ -959,15 +1014,6 @@ class VersionedLakeSpec extends SparkSpec {
     // per-version counts (time travel)
     assert(VersionedLake.rowCount(spark, lake, Some(1)) == 30L)
     assert(VersionedLake.rowCount(spark, lake, Some(2)) == 40L)
-    // legacy manifest without row fields: strip them, expect fallback
-    val v = VersionedLake.currentVersion(lake)
-    val mf = Paths.get(s"$lake/_versions/v$v.manifest")
-    val stripped = new String(Files.readAllBytes(mf), "UTF-8").split("\n")
-      .map(l => if (l.startsWith("#")) l else l.split("\t", -1).take(5).mkString("\t"))
-      .mkString("\n")
-    Files.write(mf, stripped.getBytes("UTF-8"))
-    assert(VersionedLake.manifestEntries(lake, v).forall(_.rows.isEmpty))
-    assert(VersionedLake.rowCount(spark, lake) == 39L) // scan fallback
   }
 
   test("schema tracked in the commit log: add-column evolution, no footer inference, typed refusal") {
@@ -976,13 +1022,13 @@ class VersionedLakeSpec extends SparkSpec {
     val lake = s"$root/lake"
     VersionedLake.create(
       Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "name", "part"), lake, "part")
-    assert(VersionedLake.recordedSchema(lake, 1).map(_.fieldNames.toSet)
-      .contains(Set("id", "name", "part")))
+    assert(VersionedLake.recordedSchema(lake, 1).fieldNames.toSet ==
+      Set("id", "name", "part"))
     // append a batch CARRYING a new column: the recorded schema evolves
     VersionedLake.append(
       Seq((3L, "c", "p1", 9.5)).toDF("id", "name", "part", "score"), lake, "part")
-    assert(VersionedLake.recordedSchema(lake, 2).map(_.fieldNames.toSet)
-      .contains(Set("id", "name", "part", "score")))
+    assert(VersionedLake.recordedSchema(lake, 2).fieldNames.toSet ==
+      Set("id", "name", "part", "score"))
     // current read: merged schema, pre-evolution rows surface nulls
     val cur = VersionedLake.read(spark, lake)
       .select("id", "score").as[(Long, Option[Double])].collect().toMap
@@ -991,7 +1037,7 @@ class VersionedLakeSpec extends SparkSpec {
     // tuple encoder claimed nullable=false — otherwise NullPropagation
     // folds IsNull(score) to false and this filter silently loses the
     // pre-evolution rows
-    assert(VersionedLake.recordedSchema(lake, 2).exists(_("score").nullable))
+    assert(VersionedLake.recordedSchema(lake, 2)("score").nullable)
     assert(VersionedLake.read(spark, lake)
       .filter(col("score").isNull).count() == 2)
     // time travel reads v1 under ITS schema — no score column at all
@@ -1004,7 +1050,7 @@ class VersionedLakeSpec extends SparkSpec {
       .select("id", "score").as[(Long, Option[Double])].collect().toMap
     assert(post == Map(1L -> None, 2L -> None, 3L -> Some(9.5), 4L -> None))
     assert(VersionedLake.recordedSchema(lake, VersionedLake.currentVersion(lake))
-      .exists(_.fieldNames.contains("score")))
+      .fieldNames.contains("score"))
     // a TYPE change is refused loudly, not silently migrated
     val ex = intercept[IllegalArgumentException] {
       VersionedLake.append(
@@ -1023,18 +1069,18 @@ class VersionedLakeSpec extends SparkSpec {
       Seq((2L, Seq(2.0f), "p1")).toDF("id", "vs", "part"), nlake, "part")
     assert(VersionedLake.read(spark, nlake).count() == 2)
     import org.apache.spark.sql.types.{ArrayType, FloatType}
-    assert(VersionedLake.recordedSchema(nlake, 2)
-      .exists(_("vs").dataType == ArrayType(FloatType, containsNull = true)))
+    assert(VersionedLake.recordedSchema(nlake, 2)("vs").dataType ==
+      ArrayType(FloatType, containsNull = true))
     // TOP-LEVEL field nullability widens too: a tuple-encoder create
     // (id nullable=false) then an append whose id is genuinely
     // nullable must record nullable=true, or codegen would elide null
     // checks over files that carry nulls
     val tlake = s"$root/tlake"
     VersionedLake.create(Seq((1L, "p1")).toDF("id", "part"), tlake, "part")
-    assert(VersionedLake.recordedSchema(tlake, 1).exists(!_("id").nullable))
+    assert(!VersionedLake.recordedSchema(tlake, 1)("id").nullable)
     VersionedLake.append(
       Seq((Some(2L), "p1"), (None, "p1")).toDF("id", "part"), tlake, "part")
-    assert(VersionedLake.recordedSchema(tlake, 2).exists(_("id").nullable))
+    assert(VersionedLake.recordedSchema(tlake, 2)("id").nullable)
     assert(VersionedLake.read(spark, tlake).filter(col("id").isNull).count() == 1)
   }
 
@@ -1045,8 +1091,8 @@ class VersionedLakeSpec extends SparkSpec {
     VersionedLake.create(Seq((1L, "a", "p1")).toDF("id", "name", "part"), lake, "part")
     Thread.sleep(15)
     VersionedLake.append(Seq((2L, "b", "p1")).toDF("id", "name", "part"), lake, "part")
-    val t1 = VersionedLake.commitTimestamp(lake, 1).get
-    val t2 = VersionedLake.commitTimestamp(lake, 2).get
+    val t1 = VersionedLake.commitTimestamp(lake, 1)
+    val t2 = VersionedLake.commitTimestamp(lake, 2)
     assert(t1 < t2)
     assert(VersionedLake.versionAt(lake, t1) == 1)
     assert(VersionedLake.versionAt(lake, t2 - 1) == 1)
@@ -1230,27 +1276,6 @@ class VersionedLakeSpec extends SparkSpec {
     assert(VersionedLake.manifestEntries(lake, 2)
       .filter(_.path.contains("/c2-"))
       .forall(_.colBlooms.contains("id")))
-  }
-
-  test("colstats=off: appends pay no per-column stats job; column range read refuses") {
-    val root = tmp("vlake_nostats")
-    val df = Seq((1L, 10.0, "p1"), (2L, 20.0, "p2")).toDF("id", "score", "part")
-    VersionedLake.create(df, s"$root/lake", "part",
-      statsCol = Some("score"), props = Map("colstats" -> "off"))
-    val entries = VersionedLake.manifestEntries(s"$root/lake", 1)
-    // legacy single-column zone map still recorded; per-column map not
-    assert(entries.forall(_.colStats.isEmpty))
-    assert(entries.forall(e => e.min.isDefined && e.max.isDefined))
-    intercept[IllegalArgumentException](
-      VersionedLake.readRange(spark, s"$root/lake", "id", 0.0, 5.0, None))
-    // the legacy statsCol read still prunes
-    assert(VersionedLake.readRange(spark, s"$root/lake", 0.0, 15.0)
-      .count() == 1)
-    // the metadata-only stats table refuses the same way on a lake
-    // that recorded nothing for the column
-    assert(intercept[IllegalArgumentException](
-      VersionedLake.columnStats(spark, s"$root/lake", "id"))
-      .getMessage.contains("records column stats"))
   }
 
   test("dropPartitions: metadata-only expiry, history readable, vacuum reclaims, replay guarded") {
