@@ -68,6 +68,22 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$|project/'; then
     echo "$regrow" >&2
     exit 1
   fi
+  # One export writer: Exporter.backfillOnePass serves every window
+  # shape and resolveWindows owns the key rule, so the retired
+  # per-window writers and the fixed minute-key constant must not
+  # regrow in src/main.
+  regrow=$(git diff --cached -U0 -- src/main | awk '
+    /^\+\+\+ / { f = substr($0, 7); next }
+    !/^\+/ { next }
+    /def exportWindow\(|def backfill\(|KeyFormat/ { print f ": " substr($0, 2) }')
+  if [ -n "$regrow" ]; then
+    echo "[precommit_guard] REFUSING COMMIT: export through" >&2
+    echo "[precommit_guard] Exporter.backfillOnePass and key windows with" >&2
+    echo "[precommit_guard] resolveWindows; keep exportWindow, backfill(" >&2
+    echo "[precommit_guard] and KeyFormat out of src/main:" >&2
+    echo "$regrow" >&2
+    exit 1
+  fi
   # GATES.md census: regenerate from the registry so the committed
   # census can never lag it. A diff means the registry changed without
   # the census — regenerate, auto-stage when GATES.md itself is part

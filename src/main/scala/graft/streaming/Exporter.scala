@@ -3,16 +3,32 @@ package graft.streaming
 import graft.operators.TimeSeries
 import graft.operators.TimeSeries.GridParams
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.hadoop.fs.Path
 
 /** C6/S6 — the scheduled incremental export of the reference
   * (mwaa/mwaa-cdk/dags/timestream-airflow-demo.py:37-93): every run
-  * computes the flagship query over one idempotent [start, end) window
-  * and lands it in the lake under a time-derived partition key
-  * (P13: yyyy-MM-dd'T'HH-mm, `:41-43,69`). Backfill = iterating
-  * windows (timestream-backfill.py:33-37).
+  * computes the flagship query over idempotent [start, end) windows and
+  * lands each window in the lake under a partition key derived from its
+  * start (P13, `:41-43,69`). Backfill = the same run over many windows
+  * (timestream-backfill.py:33-37).
+  *
+  * One writer, [[backfillOnePass]], serves every shape: a scheduled
+  * window is a call over one window, a backfill a call over many, and a
+  * live tick of [[continuousExport]] a call over the windows it closed.
+  * [[exportWindowRawPrefix]] writes the same windowed frame under a raw
+  * prefix. [[resolveWindows]] is the one window rule: bounds are parsed,
+  * checked and keyed on the driver, so no Spark job names a window.
+  *
+  * Key rule: the window's start as `yyyy-MM-dd'T'HH-mm` (the
+  * reference's layout) when the call's shortest positive window is at
+  * least a minute, as `yyyy-MM-dd'T'HH-mm-ss` otherwise. Non-overlapping
+  * windows at least one key unit wide start a unit apart, so their keys
+  * differ. A minute key sorts before every second key inside its minute,
+  * so cutoffs compare keys lexicographically at either resolution.
   *
   * Spark-native layout decisions:
   *  - `partitionBy(partition_key)` instead of raw prefixes: Catalyst
@@ -25,129 +41,111 @@ import org.apache.hadoop.fs.Path
   */
 object Exporter {
 
-  val KeyFormat = "yyyy-MM-dd'T'HH-mm"
+  private val MicrosPerSecond = 1000000L
 
-  /** One incremental run: flagship over [start, end), written under its
-    * partition key. Idempotent — same window in, same partition out. */
-  def exportWindow(events: DataFrame, p: GridParams, outDir: String,
-      start: String, end: String): Unit = {
-    val windowed = events.filter(
-      col(p.time) >= lit(start).cast("timestamp") &&
-        col(p.time) < lit(end).cast("timestamp"))
-    TimeSeries.flagship(windowed, p)
-      .withColumn("partition_key",
-        date_format(lit(start).cast("timestamp"), KeyFormat))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("partition_key")
-      .parquet(outDir)
-    bumpExportManifest(events.sparkSession, outDir)
+  /** One export window resolved on the driver: [startUs, endUs) in
+    * epoch micros, and its partition key. */
+  private[graft] final case class Window(startUs: Long, endUs: Long, key: String)
+
+  private def sessionZone(spark: SparkSession): java.time.ZoneId =
+    DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+
+  /** `date_format`'s own formatter for `pattern` in `zone`. */
+  private def formatter(pattern: String, zone: java.time.ZoneId): TimestampFormatter =
+    TimestampFormatter(pattern, zone, LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = false)
+
+  /** The key rule (see the object doc), chosen once per call from its
+    * shortest positive window. */
+  private def keyFormatter(zone: java.time.ZoneId, shortestUs: Long): TimestampFormatter =
+    formatter(if (shortestUs >= 60 * MicrosPerSecond) "yyyy-MM-dd'T'HH-mm"
+      else "yyyy-MM-dd'T'HH-mm-ss", zone)
+
+  /** The one window rule. Each bound is parsed by the parser the
+    * timestamp cast uses, in the session time zone. Refused, naming the
+    * window: a bound that parser rejects, an end before the start, a
+    * positive window shorter than one second (no key tells it apart),
+    * and overlapping positive windows (an event belongs to one window).
+    * Zero-width windows are legal and empty. */
+  private[graft] def resolveWindows(spark: SparkSession,
+      windows: Seq[(String, String)]): Seq[Window] = {
+    require(windows.nonEmpty, "an export needs at least one window")
+    val zone = sessionZone(spark)
+    def name(w: (String, String)) = s"export window [${w._1}, ${w._2})"
+    val bounds = windows.map { w =>
+      def parse(b: String): Long =
+        DateTimeUtils.stringToTimestamp(UTF8String.fromString(b), zone).getOrElse(
+          throw new IllegalArgumentException(s"${name(w)}: '$b' is not a timestamp"))
+      val (s, e) = (parse(w._1), parse(w._2))
+      if (e < s) throw new IllegalArgumentException(s"${name(w)} ends before it starts")
+      if (e > s && e - s < MicrosPerSecond) throw new IllegalArgumentException(
+        s"${name(w)} is shorter than one second: no partition key tells it apart")
+      (s, e)
+    }
+    val positive = bounds.zip(windows).filter { case ((s, e), _) => e > s }.sortBy(_._1._1)
+    positive.sliding(2).foreach {
+      case Seq(((_, e1), w1), ((s2, _), w2)) if e1 > s2 =>
+        throw new IllegalArgumentException(s"${name(w1)} overlaps ${name(w2)}")
+      case _ =>
+    }
+    val key = keyFormatter(zone,
+      positive.map { case ((s, e), _) => e - s }.minOption.getOrElse(Long.MaxValue))
+    bounds.map { case (s, e) => Window(s, e, key.format(s)) }
   }
 
-  /** Backfill: run every [start, end) pair — the Airflow catchup loop.
-    * Faithful to the scheduled shape (one job per window); for large
-    * backfills prefer [[backfillOnePass]]. */
-  def backfill(events: DataFrame, p: GridParams, outDir: String,
-      windows: Seq[(String, String)]): Unit =
-    windows.foreach { case (s, e) => exportWindow(events, p, outDir, s, e) }
-
-  /** Backfill as ONE job: tag each event with its window, fold the
-    * window id into the interpolation key, and let a single flagship
-    * pass produce every window's independent grid (per-(sensor, window)
-    * min/max — exactly what N separate filtered runs compute), written
-    * as one dynamic-partition overwrite. N scans + N shuffles + N
-    * writes collapse to 1/1/1 — the difference between re-running a
-    * year of 5-minute windows in one job and 100k jobs.
-    *
-    * Window assignment is a broadcast join against a tiny (id, start,
-    * end, partition_key) windows TABLE — never a per-window expression
-    * chain (a 100k-window backfill would otherwise hand Catalyst a
-    * 100k-node when() tree and die in optimize/codegen). Two shapes:
-    *  - uniform windows (all the same width, starts aligned to it):
-    *    slot = floor((t − origin) / width) computed arithmetically,
-    *    then a broadcast HASH equi-join on slot — O(1) per event
-    *    regardless of N, and gaps fall out via the inner join.
-    *  - arbitrary windows: a BINNED broadcast equi-join (the
-    *    Temporal.rangeJoin shape specialised to long-micros bounds):
-    *    bin width = the smallest window width, each window explodes to
-    *    its covered bins (the exploded table stays driver-tiny — it is
-    *    windows × expansion, not events), each event computes its one
-    *    bin, and the join hash-partitions on the bin with the exact
-    *    containment predicate as a post-filter. O(1) probes per event
-    *    at ANY window count — no BroadcastNestedLoopJoin anywhere.
-    */
-  /** Window-id assignment for [[backfillOnePass]]: events tagged with
-    * `_w` via the broadcast windows-table join (uniform → arithmetic
-    * slot + hash equi-join; arbitrary → range join), plus the windows
-    * table carrying `partition_key`. Exposed for plan audits. */
+  /** Events tagged with their window: `_w` (its index) and its
+    * `partition_key`. A binned broadcast equi-join against a windows
+    * table built on the driver, never a per-window expression chain (a
+    * 100k-window backfill would hand Catalyst a 100k-node tree): the bin
+    * width is the shortest positive window, each window lists the bins it
+    * covers (at most two per window of that width, so the table is
+    * windows-sized), each event computes its one bin, and the hash join
+    * on the bin is followed by the exact containment filter. O(1) probes
+    * per event at any window count, no nested-loop join. Exposed for plan
+    * audits. */
   private[graft] def tagWindows(events: DataFrame, p: GridParams,
-      windows: Seq[(String, String)]): (DataFrame, DataFrame) = {
-    require(windows.nonEmpty, "backfillOnePass requires at least one window")
-    // exactly-one-window assignment: overlapping windows would silently
-    // diverge from the serial loop (which recomputes shared events in
-    // every covering window)
-    require(
-      windows.sortBy(_._1).sliding(2).forall {
-        case Seq((_, e1), (s2, _)) => e1 <= s2
-        case _ => true
-      },
-      s"backfillOnePass requires non-overlapping [start, end) windows; use backfill() for overlaps")
+      windows: Seq[(String, String)]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val winDf = windows.zipWithIndex
-      .map { case ((s, e), i) => (i, s, e) }.toDF("_w", "_ws", "_we")
-      .select(col("_w"),
-        unix_micros(col("_ws").cast("timestamp")).as("_su"),
-        unix_micros(col("_we").cast("timestamp")).as("_eu"),
-        date_format(col("_ws").cast("timestamp"), KeyFormat).as("partition_key"))
-    // window bounds in micros, resolved by the SAME session-timezone
-    // cast the range join uses (driver-side string parsing could skew)
-    val bounds = winDf.select(col("_w"), col("_su"), col("_eu"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._2)
-    val widths = bounds.map { case (_, s, e) => e - s }.distinct
-    val origin = bounds.head._2
-    val uniform = widths.length == 1 && widths.head > 0 &&
-      bounds.forall { case (_, s, _) => (s - origin) % widths.head == 0 }
+    val ws = resolveWindows(spark, windows).zipWithIndex
+      .filter { case (w, _) => w.endUs > w.startUs }
+    // every window zero-width: no event can match and no width to bin by
+    if (ws.isEmpty)
+      return events.filter(lit(false)).withColumn("_w", lit(0))
+        .withColumn("partition_key", lit(""))
+    val binW = ws.map { case (w, _) => w.endUs - w.startUs }.min
+    // `div` and Long `/` both truncate, which is monotone in t: [s, e)
+    // meets exactly the bins s / binW .. (e - 1) / binW
+    val bins = ws.flatMap { case (w, i) =>
+      (w.startUs / binW to (w.endUs - 1) / binW).map(b => (b, i, w.startUs, w.endUs, w.key))
+    }.toDF("_wbin", "_w", "_su", "_eu", "partition_key")
     val tUs = unix_micros(col(p.time))
-    val tagged =
-      if (uniform) {
-        val w = widths.head
-        val slots = winDf.select(((col("_su") - origin) / w).cast("long").as("_slot"), col("_w"))
-        events.withColumn("_slot", floor((tUs - lit(origin)) / lit(w)).cast("long"))
-          .join(broadcast(slots), "_slot").drop("_slot")
-      } else if (!widths.exists(_ > 0)) {
-        // every window is zero-width/empty ([s, e <= s)): no event can
-        // match, and there is no positive width to bin by — return the
-        // empty tagged frame directly instead of tripping on empty.min
-        events.filter(lit(false)).withColumn("_w", lit(0))
-      } else {
-        // `div`, not `/`: exact floor division (micros are non-negative)
-        // so no boundary event can round across a bin edge
-        val binW = widths.filter(_ > 0).min
-        val ivBins = winDf
-          .filter(col("_eu") > col("_su"))
-          .select(col("_w"), col("_su"), col("_eu"),
-            explode(expr(s"sequence(_su div ${binW}L, (_eu - 1) div ${binW}L)")).as("_wbin"))
-        events
-          .withColumn("_wbin", expr(s"unix_micros(${p.time}) div ${binW}L"))
-          .join(broadcast(ivBins), "_wbin")
-          .filter(tUs >= col("_su") && tUs < col("_eu"))
-          .drop("_wbin", "_su", "_eu")
-      }
-    (tagged, winDf)
+    events
+      .withColumn("_wbin", call_function("div", tUs, lit(binW)))
+      .join(broadcast(bins), "_wbin")
+      .filter(tUs >= col("_su") && tUs < col("_eu"))
+      .drop("_wbin", "_su", "_eu")
   }
 
+  /** The flagship over every window with its `partition_key`: the window
+    * folds into the interpolation key, so one pass computes each window's
+    * independent grid (per (key, window) min/max, what a run over the
+    * window alone computes). */
+  private def windowed(events: DataFrame, p: GridParams,
+      windows: Seq[(String, String)]): DataFrame = {
+    val tagged = tagWindows(events, p, windows).withColumn("_ek",
+      struct(col(p.key).as("k"), col("_w").as("w"), col("partition_key").as("pk")))
+    TimeSeries.flagship(tagged, p.copy(key = "_ek"))
+      .select(col("_ek.k").as(p.key), col("time"), col("status"),
+        col("temperature"), col("_ek.pk").as("partition_key"))
+  }
+
+  /** The export writer: the flagship over every [start, end) window (see
+    * [[resolveWindows]]) in one job, written as one dynamic-partition
+    * overwrite under the windows' keys and one manifest bump. Re-running
+    * a window replaces exactly its partition. */
   def backfillOnePass(events: DataFrame, p: GridParams, outDir: String,
       windows: Seq[(String, String)]): Unit = {
-    val (tagged0, winDf) = tagWindows(events, p, windows)
-    val tagged = tagged0.withColumn("_ek", struct(col(p.key).as("k"), col("_w").as("w")))
-    TimeSeries.flagship(tagged, p.copy(key = "_ek"))
-      .select(col("_ek.k").as(p.key), col("_ek.w").as("_w"),
-        col("time"), col("status"), col("temperature"))
-      .join(broadcast(winDf.select(col("_w"), col("partition_key"))), "_w")
-      .drop("_w")
+    windowed(events, p, windows)
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -163,17 +161,17 @@ object Exporter {
 
   /** Cached hot legs, keyed (lake, cutoff) — see [[hotColdRead]]. Each
     * carries the staleness token its plan was built under: a changed
-    * token (re-exported window, continuous appends, new partition)
-    * REPLACES the leg — old blocks unpersisted, fresh plan cached —
-    * instead of serving stale files. Distinct cutoffs coexist (a 24h
-    * dashboard and a 7d verifier on the same lake each keep their leg
-    * cached), bounded at [[MaxHotLegsPerLake]] per lake with
-    * least-recently-used eviction, so a MOVING cutoff (a new key every
-    * day) cannot accumulate overlapping pinned copies without bound.
+    * token (any write or retention drop) REPLACES the leg — old blocks
+    * unpersisted, fresh plan cached — instead of serving stale files.
+    * Distinct cutoffs coexist (a 24h dashboard and a 7d verifier on the
+    * same lake each keep their leg cached), bounded at
+    * [[MaxHotLegsPerLake]] per lake with least-recently-used eviction, so
+    * a MOVING cutoff (a new key every day) cannot accumulate overlapping
+    * pinned copies without bound.
     * The registry's releases (bench/verify clear caches between gates)
     * are honored by re-persisting a leg whose storage level was
     * dropped. */
-  private final class HotLeg(val token: Set[(String, Long)], val df: DataFrame,
+  private final class HotLeg(val token: String, val df: DataFrame,
     var used: Long)
   private val hotLegs = scala.collection.mutable.Map.empty[(String, String), HotLeg]
   private var hotLegClock = 0L
@@ -184,13 +182,13 @@ object Exporter {
 
   /** The export lake's own manifest: a tiny file at the lake root
     * holding "<counter>-<nonce>", rewritten (atomic rename) by every
-    * writer this module owns ([[exportWindow]], [[backfillOnePass]],
-    * [[dropPartitionsOlderThan]]). It exists because directory mtimes
-    * are a LOSSY staleness signal: object stores don't have them, and
-    * two rewrites of one partition within a filesystem clock tick are
-    * indistinguishable — the manifest's counter+nonce changes on EVERY
-    * write regardless of clock or store. The `_` prefix keeps it out
-    * of every parquet directory listing (Spark's hidden-file filter). */
+    * write to a hive-layout lake: [[backfillOnePass]] and
+    * [[dropPartitionsOlderThan]]. Its counter+nonce changes on EVERY
+    * write, whatever the clock or the store, where a directory's
+    * modification time does not: object stores keep none, and two
+    * rewrites of one partition within a filesystem clock tick share one.
+    * The `_` prefix keeps it out of every parquet directory listing
+    * (Spark's hidden-file filter). */
   private val ExportManifestName = "_export_manifest"
 
   private def bumpExportManifest(spark: SparkSession, outDir: String): Unit = {
@@ -209,8 +207,9 @@ object Exporter {
     finally out.close()
     // two concurrent bumps may both write counter+1 — the nonce keeps
     // their contents distinct, so any interleaved reader still sees a
-    // token change; a briefly-missing manifest (delete→rename window)
-    // reads as a change too: over-invalidation, never staleness
+    // token change. A tiered read inside the delete→rename gap finds no
+    // manifest and is refused: reads and writes of one lake do not
+    // overlap anywhere in this repository
     if (fs.exists(dst)) fs.delete(dst, false)
     fs.rename(tmp, dst)
     ()
@@ -229,37 +228,23 @@ object Exporter {
       } finally in.close()
     }.toOption
 
-  /** The staleness token: ONE non-recursive listing of the lake root —
-    * (child name, mtime) per partition directory, O(partitions)
-    * metadata instead of the O(files) leaf listing `inputFiles` costs.
-    * Any partition write (dynamic overwrite, append, new partition,
-    * retention drop) changes its directory's name set or mtime; when
-    * the lake carries an [[ExportManifestName]] (every lake written by
-    * this module does), the manifest's CONTENT rides in the token too,
-    * so same-clock-tick double rewrites and mtime-less object stores
-    * are covered — the manifest entry's identity is its content, not
-    * its mtime. External writers that bypass the manifest still flip
-    * the mtime half. Cold-only changes over-invalidate (the token
-    * spans the whole lake) — correct, just re-caches. */
-  private def lakeToken(spark: SparkSession, outDir: String): Set[(String, Long)] = {
-    val fs = new Path(outDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new Path(outDir)
-    if (!fs.exists(root)) Set.empty
-    else fs.listStatus(root).toSeq.map { st =>
-      val name = st.getPath.getName
-      if (name == ExportManifestName)
-        s"$name:${readExportManifest(fs, st.getPath).getOrElse("")}" -> 0L
-      else name -> st.getModificationTime
-    }.toSet
+  /** The staleness token: the content of the lake's export manifest,
+    * one small file read. A lake with no manifest was not written by
+    * this module, so its writes cannot be seen: refused, naming it. */
+  private def lakeToken(spark: SparkSession, outDir: String): String = {
+    val manifest = new Path(outDir, ExportManifestName)
+    readExportManifest(manifest.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      manifest).getOrElse(throw new IllegalArgumentException(
+        s"export lake $outDir has no $ExportManifestName: only a lake written by " +
+          "Exporter can be read through the hot tier"))
   }
 
   /** §1.6 hot/cold STORAGE TIERS: Timestream serves a recent window
     * from the memory store and ages the rest into magnetic storage
     * (cdk/time_series_and_data_lakes_stack.py:46-49,56-60 sets both
     * retentions). The Spark-native analog over the export lake:
-    * partitions at or above `hotCutoffKey` (KeyFormat sorts
-    * lexicographically by time) are pinned in the executors'
+    * partitions at or above `hotCutoffKey` (keys sort lexicographically
+    * by time, see the key rule) are pinned in the executors'
     * block-manager cache — MEMORY_AND_DISK, so memory pressure
     * degrades to local disk, never to re-reading the object store —
     * and colder partitions stream from the lake like any scan.
@@ -276,8 +261,9 @@ object Exporter {
     def safeUnpersist(l: HotLeg): Unit =
       try { l.df.unpersist(); () }
       catch { case scala.util.control.NonFatal(_) => () }
-    // ONE cheap staleness probe per call, taken OUTSIDE the lock —
-    // metadata latency must not serialize concurrent tiered reads. The
+    // ONE cheap staleness probe per call (one manifest read), taken
+    // OUTSIDE the lock — metadata latency must not serialize concurrent
+    // tiered reads. The
     // expensive work (the leaf-file listing `spark.read.parquet` does
     // at plan time, plus re-caching) happens ONLY when the token
     // changed; a token-hit read reuses the cached leg's plan without
@@ -329,14 +315,8 @@ object Exporter {
     * reference's way. */
   def exportWindowRawPrefix(events: DataFrame, p: GridParams, outDir: String,
       start: String, end: String): Unit = {
-    val windowed = events.filter(
-      col(p.time) >= lit(start).cast("timestamp") &&
-        col(p.time) < lit(end).cast("timestamp"))
-    // resolve the prefix with the same session-timezone cast+format the
-    // hive layout uses, so both layouts name a window identically
-    val key = events.sparkSession.range(1)
-      .select(date_format(lit(start).cast("timestamp"), KeyFormat)).head.getString(0)
-    TimeSeries.flagship(windowed, p)
+    val key = resolveWindows(events.sparkSession, Seq((start, end))).head.key
+    windowed(events, p, Seq((start, end))).drop("partition_key")
       .write.mode("overwrite").parquet(s"$outDir/$key")
   }
 
@@ -374,10 +354,11 @@ object Exporter {
     *     the staged data — a staged event at-or-after the window end
     *     proves it closed; the deterministic, replay-stable analog of
     *     the DAG's wall-clock `now()-5m..now()` — and whose partition
-    *     is not yet in the lake is exported through the same
-    *     idempotent [[exportWindow]] the scheduled and backfill forms
-    *     use. Complete-but-missing is exactly catchup=False: missed
-    *     ticks are picked up once, on the next tick that sees them.
+    *     is not yet in the lake is exported: all of a tick's windows in
+    *     one call of [[backfillOnePass]], the writer the scheduled and
+    *     backfill forms use, so the live lake is keyed by the same rule.
+    *     Complete-but-missing is exactly catchup=False: missed ticks are
+    *     picked up once, on the next tick that sees them.
     *
     * Restart with the same checkpoint resumes source offsets
     * exactly-once; a crash mid-export replays one batch, which
@@ -489,9 +470,10 @@ object Exporter {
     * to exported (or skipped-as-existing) windows, are never read
     * again by contract, and are what the caller trims from the next
     * pending snapshot. Long.MinValue when nothing is complete yet
-    * (everything stays live). Bounds and keys are rendered THROUGH the
-    * session-timezone cast (driver-side string formatting could skew
-    * an hour against [[exportWindow]]'s own casts).
+    * (everything stays live). Bounds are rendered on the driver with
+    * their session-zone offset, so [[resolveWindows]] parses them back to
+    * the same instants; existing keys are matched with the key rule at
+    * the step's width.
     *
     * COMPLETENESS CONTRACT: the max staged event time is a watermark
     * proxy — exported partitions are never revisited, so an event
@@ -521,23 +503,20 @@ object Exporter {
           .filter(_.startsWith("partition_key="))
           .map(_.stripPrefix("partition_key=")).toSet
       else Set.empty
-    val todo = spark.range(first, lastComplete + 1)
-      .select(
-        date_format(timestamp_micros(col("id") * stepMicros),
-          "yyyy-MM-dd HH:mm:ss").as("s"),
-        date_format(timestamp_micros((col("id") + 1) * stepMicros),
-          "yyyy-MM-dd HH:mm:ss").as("e"),
-        date_format(timestamp_micros(col("id") * stepMicros), KeyFormat).as("k"))
-      .collect()
-      .filterNot(r => existing.contains(r.getString(2)))
-    todo.foreach(r => exportWindow(staged, p, outDir, r.getString(0), r.getString(1)))
-    (todo.map(_.getString(2)).toSeq, (lastComplete + 1) * stepMicros)
+    val zone = sessionZone(spark)
+    val key = keyFormatter(zone, stepMicros)
+    val bound = formatter("yyyy-MM-dd HH:mm:ssXXX", zone)
+    val todo = (first to lastComplete).map(_ * stepMicros)
+      .filterNot(s => existing.contains(key.format(s)))
+    if (todo.nonEmpty) backfillOnePass(staged, p, outDir,
+      todo.map(s => (bound.format(s), bound.format(s + stepMicros))))
+    (todo.map(key.format), (lastComplete + 1) * stepMicros)
   }
 
   /** §1.6 retention: drop export partitions whose key sorts strictly
-    * below `cutoffKey` (the KeyFormat is lexicographically ordered by
-    * time, so string comparison IS time comparison). Works on BOTH lake
-    * layouts — hive `partition_key=<key>/` dirs and raw `<key>/`
+    * below `cutoffKey` (keys are lexicographically ordered by time at
+    * either resolution, so string comparison IS time comparison). Works
+    * on BOTH lake layouts — hive `partition_key=<key>/` dirs and raw `<key>/`
     * prefixes (a raw key starts with a year digit, which also keeps
     * non-partition dirs like `_spark_metadata` untouched). The Spark
     * analog of Timestream's magnetic-retention expiry — driver-side
@@ -557,14 +536,8 @@ object Exporter {
         key.headOption.exists(_.isDigit) && key < cutoffKey
       }
     dropped.foreach(fs.delete(_, true))
-    // manifest bump for lakes the manifest tracks (the hive layout);
-    // raw-prefix lakes carry none and readRawPrefixExport lists their
-    // prefixes, skipping `_`/`.` names. A no-op drop changes nothing,
-    // so nothing to signal
-    if (dropped.nonEmpty &&
-        (fs.exists(new Path(outDir, ExportManifestName)) ||
-          fs.listStatus(new Path(outDir)).exists(
-            _.getPath.getName.startsWith("partition_key="))))
+    // raw-prefix lakes carry no manifest; a no-op drop changes nothing
+    if (dropped.nonEmpty && fs.exists(new Path(outDir, ExportManifestName)))
       bumpExportManifest(spark, outDir)
     dropped.map(_.getName.stripPrefix("partition_key="))
   }

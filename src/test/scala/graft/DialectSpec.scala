@@ -609,7 +609,7 @@ class DialectSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("tvf_tier").toString
     val p = GridParams(key = "user_id", time = "ts", value = "value",
       status = "event_type", step = "1 HOUR")
-    Exporter.backfill(Tables.events(spark, sf("sf0.001")), p, out, Seq(
+    Exporter.backfillOnePass(Tables.events(spark, sf("sf0.001")), p, out, Seq(
       ("2024-01-01", "2024-01-08"), ("2024-01-08", "2024-01-15")))
     assert(rows(spark.sql(
       s"SELECT * FROM hot_cold_read('$out', '2024-01-08T00-00')")) ==
@@ -628,7 +628,7 @@ class DialectSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("tvf_defer").toString
     val p = GridParams(key = "user_id", time = "ts", value = "value",
       status = "event_type", step = "1 HOUR")
-    Exporter.backfill(Tables.events(spark, sf("sf0.001")), p, out, Seq(
+    Exporter.backfillOnePass(Tables.events(spark, sf("sf0.001")), p, out, Seq(
       ("2024-01-01", "2024-01-08"), ("2024-01-08", "2024-01-15")))
     def keys = Exporter.readExport(spark, out)
       .select(col("partition_key").cast("string")).distinct()

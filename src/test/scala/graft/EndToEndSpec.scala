@@ -49,7 +49,7 @@ class EndToEndSpec extends SparkSpec {
     assert(flag.count() > 0)
 
     // 4. windowed export of the flagship to the lake
-    Exporter.exportWindow(wide, P, lake.toString, "2024-01-01", "2024-01-02")
+    Exporter.backfillOnePass(wide, P, lake.toString, Seq(("2024-01-01", "2024-01-02")))
     val exported = Exporter.readExport(spark, lake.toString)
     assert(exported.count() == flag.count())
 

@@ -28,9 +28,9 @@ class ExporterSpec extends SparkSpec {
   test("re-running a window is idempotent (dynamic partition overwrite)") {
     val out = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
-    Exporter.backfill(events, P, out, windows)
+    Exporter.backfillOnePass(events, P, out, windows)
     val first = Exporter.readExport(spark, out).collect().map(_.toSeq).toSet
-    Exporter.exportWindow(events, P, out, windows(1)._1, windows(1)._2)
+    Exporter.backfillOnePass(events, P, out, Seq(windows(1)))
     val second = Exporter.readExport(spark, out).collect().map(_.toSeq).toSet
     assert(first == second)
     assert(first.nonEmpty)
@@ -39,7 +39,7 @@ class ExporterSpec extends SparkSpec {
   test("partition layout prunes: a key filter reads only that partition's files") {
     val out = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
-    Exporter.backfill(events, P, out, windows)
+    Exporter.backfillOnePass(events, P, out, windows)
     val all = Exporter.readExport(spark, out)
     val one = all.filter(col("partition_key") === "2024-01-08T00-00")
     // files actually read post-pruning (inputFiles ignores filters)
@@ -52,7 +52,7 @@ class ExporterSpec extends SparkSpec {
   test("retention drops partitions strictly below the cutoff key") {
     val out = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
-    Exporter.backfill(events, P, out, windows)
+    Exporter.backfillOnePass(events, P, out, windows)
     val dropped = Exporter.dropPartitionsOlderThan(spark, out, "2024-01-15T00-00")
     assert(dropped.sorted == Seq("2024-01-01T00-00", "2024-01-08T00-00"))
     val left = Exporter.readExport(spark, out)
@@ -63,7 +63,7 @@ class ExporterSpec extends SparkSpec {
   test("hot/cold tiered read: row-identical to the plain read, hot leg cached, cold leg prunes") {
     val out = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
-    Exporter.backfill(events, P, out, windows)
+    Exporter.backfillOnePass(events, P, out, windows)
     val cutoff = "2024-01-08T00-00"
     val tiered = Exporter.hotColdRead(spark, out, cutoff)
     val plain = Exporter.readExport(spark, out)
@@ -91,7 +91,7 @@ class ExporterSpec extends SparkSpec {
     // invalidates the cached leg: the tiered read serves the new
     // partition instead of a stale frozen file listing — ONE rebuild
     // per invalidation, not one per read
-    Exporter.exportWindow(events, P, out, "2024-01-22", "2024-01-29")
+    Exporter.backfillOnePass(events, P, out, Seq(("2024-01-22", "2024-01-29")))
     val tiered2 = Exporter.hotColdRead(spark, out, cutoff)
     assert(Exporter.hotLegBuilds == buildsAfterFirst + 1,
       "the partition write must invalidate exactly once")
@@ -103,12 +103,12 @@ class ExporterSpec extends SparkSpec {
     assert(Exporter.hotLegBuilds == buildsAfterFirst + 1)
     // SAME-partition rewrites invalidate EVERY time, even back-to-back
     // within one filesystem clock tick: the export manifest's counter
-    // changes per write where the directory mtime alone could not —
-    // the object-store-safe half of the staleness token
+    // changes per write where a directory's modification time could
+    // not — the staleness token is the manifest alone
     val b0 = Exporter.hotLegBuilds
-    Exporter.exportWindow(events, P, out, "2024-01-22", "2024-01-29")
+    Exporter.backfillOnePass(events, P, out, Seq(("2024-01-22", "2024-01-29")))
     Exporter.hotColdRead(spark, out, cutoff)
-    Exporter.exportWindow(events, P, out, "2024-01-22", "2024-01-29")
+    Exporter.backfillOnePass(events, P, out, Seq(("2024-01-22", "2024-01-29")))
     Exporter.hotColdRead(spark, out, cutoff)
     assert(Exporter.hotLegBuilds == b0 + 2,
       "each same-partition rewrite must invalidate the cached leg once")
@@ -118,7 +118,7 @@ class ExporterSpec extends SparkSpec {
   test("one-pass backfill equals the serial per-window loop exactly") {
     val outA = freshDir; val outB = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
-    Exporter.backfill(events, P, outA, windows)
+    SerialExport.write(events, P, outA, windows)
     Exporter.backfillOnePass(events, P, outB, windows)
     val a = Exporter.readExport(spark, outA)
       .select("partition_key", "user_id", "time", "status", "temperature")
@@ -157,11 +157,11 @@ class ExporterSpec extends SparkSpec {
   test("one-pass backfill with non-uniform windows (range-join path) equals the serial loop") {
     val outA = freshDir; val outB = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
-    val mixed = Seq( // different widths => the arithmetic-slot fast path can't apply
+    val mixed = Seq( // different widths: some windows span several bins
       ("2024-01-01", "2024-01-04"),
       ("2024-01-04", "2024-01-11"),
       ("2024-01-11", "2024-01-13"))
-    Exporter.backfill(events, P, outA, mixed)
+    SerialExport.write(events, P, outA, mixed)
     Exporter.backfillOnePass(events, P, outB, mixed)
     val a = Exporter.readExport(spark, outA)
       .select("partition_key", "user_id", "time", "status", "temperature")
@@ -191,16 +191,16 @@ class ExporterSpec extends SparkSpec {
 
   test("window assignment plans a broadcast HASH join for uniform windows") {
     val events = Tables.events(spark, sf("sf0.001"))
-    val uniform = Exporter.tagWindows(events, P, windows)._1
+    val uniform = Exporter.tagWindows(events, P, windows)
       .queryExecution.executedPlan.toString
     // O(1)-per-event slot lookup at any window count — never a
     // nested-loop scan over N windows
     assert(uniform.contains("BroadcastHashJoin"), uniform)
     assert(!uniform.contains("BroadcastNestedLoopJoin"), uniform)
     val mixed = Exporter.tagWindows(events, P, Seq(
-      ("2024-01-01", "2024-01-04"), ("2024-01-04", "2024-01-11")))._1
+      ("2024-01-01", "2024-01-04"), ("2024-01-04", "2024-01-11")))
       .queryExecution.executedPlan.toString
-    // arbitrary widths take the binned equi-join — also a hash join
+    // arbitrary widths take the same binned equi-join — a hash join
     assert(mixed.contains("BroadcastHashJoin"), mixed)
     assert(!mixed.contains("BroadcastNestedLoopJoin"), mixed)
   }
@@ -208,9 +208,9 @@ class ExporterSpec extends SparkSpec {
   test("10,000 non-uniform windows: hash-join plan and the serial-loop answer") {
     val events = Tables.events(spark, sf("sf0.001"))
     // 10k windows alternating 5 and 7 minutes wide, covering Jan 2 on —
-    // widths differ so the arithmetic-slot fast path can't apply; the
-    // binned equi-join must keep this a broadcast HASH join (the BNLJ
-    // this replaced did 10k comparisons per event here)
+    // widths differ, so a 7-minute window spans two or three 5-minute
+    // bins; the binned equi-join must keep this a broadcast HASH join
+    // (the BNLJ this replaced did 10k comparisons per event here)
     val base = java.time.LocalDateTime.of(2024, 1, 2, 0, 0)
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
     var t = base
@@ -219,7 +219,7 @@ class ExporterSpec extends SparkSpec {
       val s = t; t = t.plusMinutes(width)
       (s.format(fmt), t.format(fmt))
     }
-    val (tagged, _) = Exporter.tagWindows(events, P, wins)
+    val tagged = Exporter.tagWindows(events, P, wins)
     val plan = tagged.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
@@ -262,8 +262,8 @@ class ExporterSpec extends SparkSpec {
     run()
     val gotKeys = Exporter.readExport(spark, out)
       .select("partition_key").distinct().collect().map(_.getString(0)).toSet
-    // batch ground truth: backfill exactly the windows the stream saw
-    // as complete (an event at-or-after each window's end exists)
+    // batch ground truth: each window the stream saw as complete (an
+    // event at-or-after its end exists), exported on its own
     val hi = events.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val windows = gotKeys.toSeq.sorted.map { k =>
       val s = java.time.LocalDateTime.parse(k, java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH-mm"))
@@ -274,7 +274,7 @@ class ExporterSpec extends SparkSpec {
     windows.foreach { case (_, e) =>
       assert(java.sql.Timestamp.valueOf(e).getTime * 1000 <= hi, s"incomplete window exported: $e") }
     val outB = freshDir
-    Exporter.backfill(events, P, outB, windows)
+    SerialExport.write(events, P, outB, windows)
     val cols = Seq("partition_key", "user_id", "time", "status", "temperature")
     val a = Exporter.readExport(spark, out).select(cols.map(col): _*)
       .collect().map(_.toSeq).toSet
@@ -335,7 +335,7 @@ class ExporterSpec extends SparkSpec {
     assert(pend.filter(col("ts") <
       lit(lastEnd.toString.replace('T', ' ')).cast("timestamp")).count() == 0,
       "pending snapshot still carries exported-window rows")
-    // and the stream's lake equals the batch backfill of those windows
+    // and the stream's lake equals those windows exported one by one
     val outB = freshDir
     val ws = exportedKeys.toSeq.sorted.map { k =>
       val s = java.time.LocalDateTime.parse(k,
@@ -343,7 +343,7 @@ class ExporterSpec extends SparkSpec {
       val f = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
       (s.format(f), s.plusDays(7).format(f))
     }
-    Exporter.backfill(events, P, outB, ws)
+    SerialExport.write(events, P, outB, ws)
     val cols = Seq("partition_key", "user_id", "time", "status", "temperature")
     assert(Exporter.readExport(spark, out).select(cols.map(col): _*)
       .collect().map(_.toSeq).toSet ==
@@ -376,7 +376,7 @@ class ExporterSpec extends SparkSpec {
   test("raw-prefix layout holds the same data as the hive layout, key recovered from the path") {
     val outHive = freshDir; val outRaw = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
-    Exporter.exportWindow(events, P, outHive, windows(0)._1, windows(0)._2)
+    Exporter.backfillOnePass(events, P, outHive, Seq(windows(0)))
     Exporter.exportWindowRawPrefix(events, P, outRaw, windows(0)._1, windows(0)._2)
     val cols = Seq("partition_key", "user_id", "time", "status", "temperature")
     val hive = Exporter.readExport(spark, outHive)
@@ -393,14 +393,14 @@ class ExporterSpec extends SparkSpec {
     val degenerate = Seq(
       ("2024-01-01", "2024-01-01"),
       ("2024-01-08", "2024-01-08"))
-    val (tagged, _) = graft.streaming.Exporter.tagWindows(events, P, degenerate)
+    val tagged = Exporter.tagWindows(events, P, degenerate)
     assert(tagged.count() == 0)
     // a mix of empty and real windows still tags the real one only
     val mixed = Seq(
       ("2024-01-01", "2024-01-01"),
       ("2024-01-01", "2024-01-04"),
       ("2024-01-04", "2024-01-04"))
-    val (tagged2, _) = graft.streaming.Exporter.tagWindows(events, P, mixed)
+    val tagged2 = Exporter.tagWindows(events, P, mixed)
     val ws = tagged2.select("_w").distinct().collect().map(_.getInt(0)).toSet
     assert(ws == Set(1))
   }
@@ -430,7 +430,7 @@ class ExporterSpec extends SparkSpec {
   test("windowed export equals flagship computed directly on that window") {
     val out = freshDir
     val events = Tables.events(spark, sf("sf0.001"))
-    Exporter.exportWindow(events, P, out, "2024-01-01", "2024-01-08")
+    Exporter.backfillOnePass(events, P, out, Seq(("2024-01-01", "2024-01-08")))
     val exported = Exporter.readExport(spark, out)
       .select("user_id", "time", "status", "temperature")
       .collect().map(_.toSeq).toSet
@@ -439,5 +439,116 @@ class ExporterSpec extends SparkSpec {
         col("ts") < lit("2024-01-08").cast("timestamp")), P)
       .collect().map(_.toSeq).toSet
     assert(exported == direct && direct.nonEmpty)
+  }
+
+  // ---- the window rule: refusals, and the key at the window's resolution
+
+  test("a window bound the timestamp parser rejects is refused, naming the window") {
+    val out = freshDir
+    val events = Tables.events(spark, sf("sf0.001"))
+    val err = intercept[IllegalArgumentException](
+      Exporter.backfillOnePass(events, P, out, Seq(("2024-01-01", "2024-13-45"))))
+    assert(err.getMessage.contains("[2024-01-01, 2024-13-45)"), err.getMessage)
+    assert(new java.io.File(out).listFiles().isEmpty)
+  }
+
+  test("a window that ends before it starts is refused, naming the window") {
+    val out = freshDir
+    val events = Tables.events(spark, sf("sf0.001"))
+    val err = intercept[IllegalArgumentException](Exporter.backfillOnePass(events, P, out,
+      Seq(("2024-01-01", "2024-01-08"), ("2024-01-15", "2024-01-08"))))
+    assert(err.getMessage.contains("[2024-01-15, 2024-01-08)") &&
+      err.getMessage.contains("ends before it starts"), err.getMessage)
+    assert(new java.io.File(out).listFiles().isEmpty)
+  }
+
+  test("a positive window shorter than one second is refused, naming the window") {
+    val out = freshDir
+    val events = Tables.events(spark, sf("sf0.001"))
+    val err = intercept[IllegalArgumentException](Exporter.exportWindowRawPrefix(events, P, out,
+      "2024-01-01 00:00:00", "2024-01-01 00:00:00.5"))
+    assert(err.getMessage.contains("[2024-01-01 00:00:00, 2024-01-01 00:00:00.5)") &&
+      err.getMessage.contains("shorter than one second"), err.getMessage)
+    assert(new java.io.File(out).listFiles().isEmpty)
+  }
+
+  test("hot/cold read refuses a lake with no export manifest, naming it") {
+    val out = freshDir
+    SerialExport.write(Tables.events(spark, sf("sf0.001")), P, out, windows.take(1))
+    val err = intercept[IllegalArgumentException](
+      Exporter.hotColdRead(spark, out, "2024-01-08T00-00"))
+    assert(err.getMessage.contains(out) && err.getMessage.contains("_export_manifest"),
+      err.getMessage)
+  }
+
+  /** Two users, one event each per second for `seconds` seconds from
+    * 2024-03-01 00:00:00: every window of a second or more holds data. */
+  private def perSecond(seconds: Int) =
+    spark.range(2L * seconds).select(
+      concat(lit("u"), (col("id") % 2).cast("string")).as("user_id"),
+      timestamp_seconds(unix_seconds(lit("2024-03-01 00:00:00").cast("timestamp")) +
+        floor(col("id") / 2)).as("ts"),
+      (col("id") % 7).cast("double").as("value"),
+      when(col("id") % 3 === 0, "run").otherwise("idle").as("event_type"))
+
+  private val PerSecondP = P.copy(step = "2 SECONDS")
+
+  private def fmtWindow(from: java.time.LocalDateTime, stepS: Long, k: Long) = {
+    val f = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    (from.plusSeconds(k * stepS).format(f), from.plusSeconds((k + 1) * stepS).format(f))
+  }
+
+  /** Four minutes of per-second events streamed a minute per tick through
+    * `continuousExport` at `stepS`: the lake holds one partition per closed
+    * window and equals [[SerialExport]] over exactly those windows. */
+  private def streamMatchesSerial(stepS: Long): Unit = {
+    val in = freshDir; val staging = freshDir; val out = freshDir; val ckpt = freshDir
+    val events = perSecond(240)
+    val from = java.time.LocalDateTime.of(2024, 3, 1, 0, 0)
+    (0 until 4).foreach { i =>
+      val (lo, hi) = fmtWindow(from, 60, i)
+      events.filter(col("ts") >= lit(lo).cast("timestamp") && col("ts") < lit(hi).cast("timestamp"))
+        .coalesce(1).write.mode("append").parquet(in)
+    }
+    val src = spark.readStream.schema(events.schema)
+      .option("maxFilesPerTrigger", "1").parquet(in)
+    Exporter.continuousExport(src, PerSecondP, staging, out, ckpt, stepS * 1000000L)
+      .awaitTermination()
+    // a window is closed once an event at or after its end exists: the
+    // last event is at 239 s
+    val closed = (0L until 239 / stepS).map(fmtWindow(from, stepS, _))
+    val outB = freshDir
+    SerialExport.write(events, PerSecondP, outB, closed)
+    val cols = Seq("partition_key", "user_id", "time", "status", "temperature")
+    def rows(dir: String) = Exporter.readExport(spark, dir).select(cols.map(col): _*)
+      .collect().map(_.toSeq).toSet
+    val keys = Exporter.readExport(spark, out).select(col("partition_key").cast("string"))
+      .distinct().collect().map(_.getString(0)).toSet
+    assert(keys.size == closed.size,
+      s"${closed.size} closed windows, partitions: ${keys.toSeq.sorted}")
+    val want = rows(outB)
+    assert(rows(out) == want && want.map(_.head).size == closed.size)
+  }
+
+  test("continuous exporter at a 10 s step equals SerialExport: one second-keyed partition per closed window") {
+    streamMatchesSerial(10)
+  }
+
+  test("continuous exporter at a 60 s step equals SerialExport: one minute-keyed partition per closed window") {
+    streamMatchesSerial(60)
+  }
+
+  test("retention with a minute cutoff drops second keys strictly below it") {
+    val out = freshDir
+    val from = java.time.LocalDateTime.of(2024, 3, 1, 0, 0, 50)
+    Exporter.backfillOnePass(perSecond(120), PerSecondP, out,
+      (0L until 3).map(fmtWindow(from, 10, _)))
+    def keys = Exporter.readExport(spark, out).select(col("partition_key").cast("string"))
+      .distinct().collect().map(_.getString(0)).toSet
+    assert(keys == Set("2024-03-01T00-00-50", "2024-03-01T00-01-00", "2024-03-01T00-01-10"))
+    // a minute key sorts before every second key inside its minute
+    assert(Exporter.dropPartitionsOlderThan(spark, out, "2024-03-01T00-01") ==
+      Seq("2024-03-01T00-00-50"))
+    assert(keys == Set("2024-03-01T00-01-00", "2024-03-01T00-01-10"))
   }
 }
