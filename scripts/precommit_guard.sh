@@ -84,6 +84,22 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$|project/'; then
     echo "$regrow" >&2
     exit 1
   fi
+  # One file-skipping path: VersionedLake.admits decides every file
+  # and LakeAggregateFromManifest answers every metadata aggregate, so
+  # the retired count rule and the planner rules' kill switches must
+  # not regrow in src/main.
+  regrow=$(git diff --cached -U0 -- src/main | awk '
+    /^\+\+\+ / { f = substr($0, 7); next }
+    !/^\+/ { next }
+    /zonemap\.prune\.enabled|countmeta\.enabled|minmaxmeta\.enabled|LakeCountFromManifest/ { print f ": " substr($0, 2) }')
+  if [ -n "$regrow" ]; then
+    echo "[precommit_guard] REFUSING COMMIT: lake file skipping has one" >&2
+    echo "[precommit_guard] path and no switches; keep the zonemap.prune," >&2
+    echo "[precommit_guard] countmeta and minmaxmeta confs and" >&2
+    echo "[precommit_guard] LakeCountFromManifest out of src/main:" >&2
+    echo "$regrow" >&2
+    exit 1
+  fi
   # GATES.md census: regenerate from the registry so the committed
   # census can never lag it. A diff means the registry changed without
   # the census — regenerate, auto-stage when GATES.md itself is part

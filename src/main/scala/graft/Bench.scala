@@ -90,8 +90,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(GraftSession.envCpus)
     // SPARK_GRAFT_CONF="k=v;k=v": extra runtime confs for bisects (e.g.
-    // the planner-rule kill-switches spark.graft.zonemap.prune.enabled /
-    // countmeta / minmaxmeta) without editing the bench. Driver-unset.
+    // spark.graft.rangejoin.enabled / spark.graft.rangejoin.bin.micros)
+    // without editing the bench. Driver-unset.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       kv.split("=", 2) match {
         case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)

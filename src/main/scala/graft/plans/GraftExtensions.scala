@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** The engine: everything a session needs for this repo's SQL and plans,
   * in ONE list —
-  *  - the optimizer rules [[RangeJoinBinRewrite]], [[ZoneMapPrune]],
-  *    [[LakeCountFromManifest]] and [[LakeMinMaxFromManifest]];
+  *  - the optimizer rules [[RangeJoinBinRewrite]], [[ZoneMapPrune]]
+  *    (file skipping from manifest metadata) and
+  *    [[LakeAggregateFromManifest]] (counts and extrema from it);
   *  - the [[DeferredEffect]] planner strategy;
   *  - the Timestream dialect's functions ([[graft.functions.Dialect]]);
   *  - the pipeline table functions ([[graft.functions.PipelineSql]]);
@@ -23,8 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(RangeJoinBinRewrite(_))
     ext.injectOptimizerRule(ZoneMapPrune(_))
-    ext.injectOptimizerRule(LakeCountFromManifest(_))
-    ext.injectOptimizerRule(LakeMinMaxFromManifest(_))
+    ext.injectOptimizerRule(_ => LakeAggregateFromManifest)
     ext.injectPlannerStrategy(_ => DeferredEffect.Strategy)
     def info(name: String) = new ExpressionInfo(classOf[GraftExtensions].getName, name)
     graft.functions.Dialect.functions.foreach { case (name, builder) =>

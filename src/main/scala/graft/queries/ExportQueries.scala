@@ -689,12 +689,13 @@ object ExportQueries {
 
     // The same range answered with NO explicit range TVF: a plain
     // WHERE over time_travel(...), file-skipped AUTOMATICALLY by the
-    // ZoneMapPrune optimizer rule (part of the installed engine) —
-    // the planner half of read_range. Hash-equality against the same
-    // oracle is the CORRECTNESS guard an optimizer rule needs: the
-    // rewrite may only move I/O, never rows (planning-time skip sets
-    // are pinned in PlanSpec; this gate proves row exactness at the
-    // driver's scale).
+    // ZoneMapPrune optimizer rule (part of the installed engine, no
+    // off switch) — the planner half of read_range, deciding each
+    // file with the same VersionedLake.admits test. Hash-equality
+    // against the same oracle is the CORRECTNESS guard an optimizer
+    // rule needs: the rewrite may only move I/O, never rows
+    // (planning-time skip sets are pinned in PlanSpec; this gate
+    // proves row exactness at the verified dataset's scale).
     QDef(
       "q_sql_zonemap_auto",
       (s, dir) => {
@@ -718,8 +719,9 @@ object ExportQueries {
           |GROUP BY event_date ORDER BY event_date""".stripMargin)),
 
     // COUNT(*) answered from the MANIFEST's recorded per-file row
-    // counts — the LakeCountFromManifest optimizer rule (the planner
-    // half of lake_row_count, the way ZoneMapPrune is read_range's).
+    // counts — the LakeAggregateFromManifest optimizer rule (the
+    // planner half of lake_row_count, the way ZoneMapPrune is
+    // read_range's).
     // Both versions' bare counts take the metadata path (PlanSpec pins
     // the scan-free plan); the third leg filters, which the rule must
     // NOT touch — its count comes from the real scan, and all three
@@ -791,7 +793,7 @@ object ExportQueries {
           |ORDER BY event_id""".stripMargin)),
 
     // MIN/MAX answered from the MANIFEST's per-file zone maps — the
-    // LakeMinMaxFromManifest rule, completing the metadata family
+    // same LakeAggregateFromManifest rule, completing the metadata family
     // (COUNT from row counts, files from zone maps, now extrema from
     // zone maps). Versions 1 and 2 fold scan-free (PlanSpec pins the
     // plan shape); the third leg filters, which the rule must NOT
@@ -1292,9 +1294,10 @@ object ExportQueries {
             require(receipt.head.getLong(0) == 2L,
               s"zorder must commit v2, got ${receipt.head.getLong(0)}")
             def overlapping(v: Int) = {
-              val es = graft.sources.VersionedLake.manifestEntries(s"$o/lake", v)
-              (es.size, es.count(_.colStats.get("value")
-                .forall { case (mn, mx) => mx >= 10.0 && mn <= 20.0 }))
+              import graft.sources.VersionedLake
+              val es = VersionedLake.manifestEntries(s"$o/lake", v)
+              (es.size, es.count(VersionedLake.admits(_,
+                VersionedLake.FileTest.NumRange("value", 10.0, 20.0))))
             }
             val (n1, o1) = overlapping(1)
             val (n2, o2) = overlapping(2)

@@ -109,6 +109,97 @@ object VersionedLake {
       strStats: Map[String, (String, String)] = Map.empty,
       nullCounts: Map[String, Long] = Map.empty)
 
+  /** Which files a read may skip, as a small test tree over one file's
+    * manifest [[Entry]]: every file-skipping path builds one and asks
+    * [[admits]] — the explicit reads ([[readRange]], [[readPoints]])
+    * one leaf each, the [[graft.plans.ZoneMapPrune]] rule a whole
+    * and/or tree translated once per filter. A leaf admits a file
+    * whenever the file might hold a row satisfying it, and always when
+    * the file records no metadata for the leaf's column (all-null,
+    * not stats-encodable, or written before the column existed). */
+  private[graft] sealed trait FileTest
+  private[graft] object FileTest {
+    /** The column's zone map meets the closed interval [lo, hi] (in the
+      * [[statsEncoding]] of the column). */
+    final case class NumRange(column: String, lo: Double, hi: Double) extends FileTest
+    /** The column's string envelope meets [lo, hi]; a missing bound is
+      * open. */
+    final case class StrRange(column: String, lo: Option[String],
+        hi: Option[String]) extends FileTest
+    /** The column's string envelope holds at least one of the values. */
+    final case class StrIn(column: String, values: Seq[String]) extends FileTest
+    /** The column's string envelope meets the strings starting with
+      * `prefix`: [prefix, [[prefixUpperBound]](prefix)). */
+    final case class StrPrefix(column: String, prefix: String) extends FileTest {
+      val upper: Option[String] = prefixUpperBound(prefix)
+    }
+    /** The column's Bloom might hold at least one key; `hashes` are the
+      * keys' [[FileBloom.keyHashes]] (see [[bloomTest]]). */
+    final case class Bloom(column: String, hashes: Seq[Array[Long]]) extends FileTest
+    /** IS NULL (`wantNull`) needs a recorded null; IS NOT NULL a
+      * recorded non-null. */
+    final case class Nulls(column: String, wantNull: Boolean) extends FileTest
+    final case class And(a: FileTest, b: FileTest) extends FileTest
+    final case class Or(a: FileTest, b: FileTest) extends FileTest
+    /** A predicate no metadata can decide: admits every file. */
+    case object Opaque extends FileTest
+  }
+
+  /** Might file `e` hold a row satisfying `t`? False only when the
+    * manifest proves it cannot, so skipping the file never loses a
+    * row. String bounds compare in [[utf8Compare]] order. */
+  private[graft] def admits(e: Entry, t: FileTest): Boolean = {
+    def envelope(c: String)(meets: (String, String) => Boolean): Boolean =
+      e.strStats.get(c).forall { case (mn, mx) => meets(mn, mx) }
+    def within(mn: String, mx: String, lo: Option[String], hi: Option[String]) =
+      lo.forall(utf8Compare(mx, _) >= 0) && hi.forall(utf8Compare(mn, _) <= 0)
+    t match {
+      case FileTest.NumRange(c, lo, hi) =>
+        e.colStats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+      case FileTest.StrRange(c, lo, hi) => envelope(c)(within(_, _, lo, hi))
+      case FileTest.StrIn(c, vs) =>
+        envelope(c)((mn, mx) => vs.exists(v => within(mn, mx, Some(v), Some(v))))
+      case p @ FileTest.StrPrefix(c, prefix) => envelope(c)((mn, mx) =>
+        utf8Compare(mx, prefix) >= 0 && p.upper.forall(utf8Compare(mn, _) < 0))
+      case FileTest.Bloom(c, hs) =>
+        e.colBlooms.get(c).forall(fb => hs.exists(fb.mightContainHashes))
+      case FileTest.Nulls(c, wantNull) =>
+        e.nullCounts.get(c).forall(n => if (wantNull) n > 0 else n < e.rows)
+      case FileTest.And(a, b) => admits(e, a) && admits(e, b)
+      case FileTest.Or(a, b) => admits(e, a) || admits(e, b)
+      case FileTest.Opaque => true
+    }
+  }
+
+  /** A [[FileTest.Bloom]] probing `keys` (compared as strings — the
+    * build-side cast): one digest pass per key at the largest k any of
+    * `entries` records for the column, after which each file tests
+    * bits only. [[FileTest.Opaque]] when no entry records a Bloom for
+    * the column. */
+  private[graft] def bloomTest(column: String, keys: Seq[String],
+      entries: Seq[Entry]): FileTest = {
+    val maxK = entries.flatMap(_.colBlooms.get(column)).map(_.k).foldLeft(0)(math.max)
+    if (maxK == 0) FileTest.Opaque
+    else {
+      val digester = FileBloom(maxK, 64, Array(0L))
+      FileTest.Bloom(column, keys.map(digester.keyHashes))
+    }
+  }
+
+  /** The one refusal of the explicit reads: a column that no entry
+    * records `what` for (read through `recorded`) cannot prune, and a
+    * read on it would silently scan every file — a lie at 100 TB. The
+    * error names the columns that can prune. */
+  private def requireRecorded(lakeDir: String, v: Int, entries: Seq[Entry],
+      column: String, what: String)(recorded: Entry => collection.Set[String]): Unit =
+    if (entries.nonEmpty && !entries.exists(recorded(_).contains(column))) {
+      val available = entries.flatMap(recorded).distinct.sorted
+      throw new IllegalArgumentException(
+        s"no $what recorded for column '$column' in $lakeDir@v$v — a read " +
+          s"pruned on it would silently scan every file; columns with " +
+          s"$what: [${available.mkString(", ")}]")
+    }
+
   /** Per-file Bloom filter of a key column, recorded in the manifest:
     * the point-lookup complement of the min/max zone maps. Same hash
     * family as [[graft.operators.Sketch.bloomBuckets]], so the filter
@@ -288,31 +379,32 @@ object VersionedLake {
   private val warnedHugeManifests =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** The largest manifest a planner rule parses itself: 16 MiB, about
+    * a 100k-file lake with Blooms. */
+  private val MaxPlanManifestBytes = 16L << 20
+
   /** Planner-rule view of [[manifestEntries]]: serves the cached parse
     * when present, but REFUSES (None) a FIRST parse of a manifest
-    * larger than `-Dgraft.manifest.maxPlanBytes` (default 16 MiB ≈ a
-    * 100k-file lake with Blooms) — that parse is a driver stall inside
-    * the optimizer, paid by whatever query happens to plan first, and
-    * a planner rule must degrade to "no pruning" rather than stall
+    * larger than `maxBytes` — that parse is a driver stall inside the
+    * optimizer, paid by whatever query happens to plan first, and a
+    * planner rule must degrade to "no pruning" rather than stall
     * planning. Data-path reads (read/readRange/readPoint) still parse
     * unconditionally: they need the file list to run at all, and their
     * callers asked for that work — after any of them touches the lake
     * the cached parse serves the planner too. Warns once per lake. */
   private[graft] def manifestEntriesForPlanning(lakeDir: String,
-      version: Int): Option[Seq[Entry]] = {
+      version: Int, maxBytes: Long = MaxPlanManifestBytes): Option[Seq[Entry]] = {
     val f = manifestPath(lakeDir, version)
     if (!Files.exists(f)) return None
     val stamp = manifestStamp(f)
     val k = (lakeDir, version)
     cachedManifest(k, stamp).orElse {
-      val maxBytes = java.lang.Long.getLong("graft.manifest.maxPlanBytes",
-        16L << 20)
       if (stamp._2 > maxBytes) {
         if (warnedHugeManifests.add(lakeDir))
           System.err.println(s"[graft] $lakeDir v$version manifest is " +
-            s"${stamp._2} bytes (> $maxBytes): planner-rule pruning skipped " +
-            "until a data read caches the parse; compact the lake or raise " +
-            "-Dgraft.manifest.maxPlanBytes")
+            s"${stamp._2} bytes (> $maxBytes): planner rules skip its " +
+            "file pruning and metadata answers until a data read of the " +
+            "lake caches the parse; compacting the lake shrinks it")
         None
       } else Some(parseAndCache(f, k, stamp))
     }.map(_.entries)
@@ -542,21 +634,19 @@ object VersionedLake {
     * names the columns that can prune. The caller still applies the
     * exact row filter (zone maps bound files, not rows). */
   def readRange(spark: SparkSession, lakeDir: String, column: String,
-      lo: Double, hi: Double, version: Option[Int]): DataFrame = {
+      lo: Double, hi: Double, version: Option[Int]): DataFrame =
+    readAdmitted(spark, lakeDir, version, column, "zone-map stats",
+      _.colStats.keySet, FileTest.NumRange(column, lo, hi))
+
+  /** The explicit range reads' one path: refuse a column no entry
+    * records, then hand the scan the files `leaf` admits. */
+  private def readAdmitted(spark: SparkSession, lakeDir: String,
+      version: Option[Int], column: String, what: String,
+      recorded: Entry => collection.Set[String], leaf: FileTest): DataFrame = {
     val v = version.getOrElse(currentVersion(lakeDir))
     val entries = manifestEntries(lakeDir, v)
-    if (entries.nonEmpty && !entries.exists(_.colStats.contains(column))) {
-      val available = entries.flatMap(_.colStats.keys).distinct.sorted
-      throw new IllegalArgumentException(
-        s"no zone-map stats recorded for column '$column' in $lakeDir@v$v — " +
-          s"a range read on it would silently scan every file; " +
-          s"stats exist for [${available.mkString(", ")}]")
-    }
-    val wanted = entries.filter(_.colStats.get(column) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true // no stats for this file: conservatively kept
-    })
-    readFiles(spark, lakeDir, v, wanted.map(_.path))
+    requireRecorded(lakeDir, v, entries, column, what)(recorded)
+    readFiles(spark, lakeDir, v, entries.filter(admits(_, leaf)).map(_.path))
   }
 
   /** How many CODEPOINTS of a string column land in the per-file zone
@@ -636,22 +726,9 @@ object VersionedLake {
     * curation filters (`lang = 'en'`) get the same automatic planner
     * form via [[graft.plans.ZoneMapPrune]]. */
   def readRange(spark: SparkSession, lakeDir: String, column: String,
-      lo: String, hi: String, version: Option[Int]): DataFrame = {
-    val v = version.getOrElse(currentVersion(lakeDir))
-    val entries = manifestEntries(lakeDir, v)
-    if (entries.nonEmpty && !entries.exists(_.strStats.contains(column))) {
-      val available = entries.flatMap(_.strStats.keys).distinct.sorted
-      throw new IllegalArgumentException(
-        s"no string zone-map stats recorded for column '$column' in " +
-          s"$lakeDir@v$v — a range read on it would silently scan every " +
-          s"file; string stats exist for [${available.mkString(", ")}]")
-    }
-    val wanted = entries.filter(_.strStats.get(column) match {
-      case Some((mn, mx)) => utf8Compare(mx, lo) >= 0 && utf8Compare(mn, hi) <= 0
-      case None => true // no stats for this file: conservatively kept
-    })
-    readFiles(spark, lakeDir, v, wanted.map(_.path))
-  }
+      lo: String, hi: String, version: Option[Int]): DataFrame =
+    readAdmitted(spark, lakeDir, version, column, "string zone-map stats",
+      _.strStats.keySet, FileTest.StrRange(column, Some(lo), Some(hi)))
 
   /** Point-lookup read: only the files whose recorded Bloom for the
     * NAMED column might contain `key` (compared as string — the
@@ -768,13 +845,7 @@ object VersionedLake {
       keys: Seq[String], maxKeys: Int,
       partitions: Option[Seq[String]]): Seq[String] = {
     val all = manifestEntries(lakeDir, v)
-    if (all.nonEmpty && !all.exists(_.colBlooms.contains(column))) {
-      val available = all.flatMap(_.colBlooms.keys).distinct.sorted
-      throw new IllegalArgumentException(
-        s"no Bloom filter recorded for column '$column' in $lakeDir@v$v — " +
-          s"a point read on it would silently scan every file; " +
-          s"filters exist for [${available.mkString(", ")}]")
-    }
+    requireRecorded(lakeDir, v, all, column, "Bloom filter")(_.colBlooms.keySet)
     val entries = partitions match {
       case Some(ps) =>
         val esc = ps.map(escapedPartition).toSet
@@ -786,16 +857,8 @@ object VersionedLake {
     // anyway — fall back to the (partition-narrowed) full list rather
     // than pay |files|·|keys| driver-side bit tests for nothing
     if (distinctKeys.size > maxKeys) return entries.map(_.path)
-    // one digest pass per key at the max k any file uses; each file
-    // then tests bits only (mod by its own m)
-    val maxK = entries.flatMap(_.colBlooms.get(column)).map(_.k)
-      .foldLeft(0)(math.max)
-    val digester = FileBloom(math.max(maxK, 1), 64, Array(0L))
-    val hashes = distinctKeys.map(k => digester.keyHashes(k))
-    entries.filter(_.colBlooms.get(column) match {
-      case None => true // no filter recorded for this file: keep
-      case Some(fb) => hashes.exists(fb.mightContainHashes)
-    }).map(_.path)
+    val leaf = bloomTest(column, distinctKeys, entries)
+    entries.filter(admits(_, leaf)).map(_.path)
   }
 
   /** The files a [[readPoints]] would hand the scan — for I/O
@@ -1611,51 +1674,54 @@ object VersionedLake {
     if (p.startsWith("file:")) java.net.URI.create(p).getPath else p
 
   /** Zone-info registry: BaseRelation identity → (lakeDir, version)
-    * for every relation [[readFiles]] hands out, so the
-    * [[graft.plans.ZoneMapPrune]] optimizer rule can recognize a lake
-    * scan inside an arbitrary SQL plan and re-derive its manifest zone
-    * maps — what makes `WHERE col BETWEEN lo AND hi` over a
-    * `time_travel(...)`/lake read skip files AUTOMATICALLY instead of
-    * only through the opt-in `read_range` TVF. Weak keys: a dropped
-    * DataFrame releases its entry with its relation. Keys compare by
-    * IDENTITY: relations over the same files are equal, and an equal
-    * key would keep the first relation's weak reference, so the entry
-    * would vanish when that relation is collected while a later equal
-    * one is still being planned. */
+    * for every relation [[readFiles]] hands out, so [[lakeScan]] can
+    * recognize a lake scan inside an arbitrary SQL plan — what makes
+    * `WHERE col BETWEEN lo AND hi` over a `time_travel(...)`/lake read
+    * skip files AUTOMATICALLY instead of only through the opt-in
+    * `read_range` TVF. Weak keys: a dropped DataFrame releases its
+    * entry with its relation. Keys compare by IDENTITY: relations over
+    * the same files are equal, and an equal key would keep the first
+    * relation's weak reference, so the entry would vanish when that
+    * relation is collected while a later equal one is still being
+    * planned. */
   private val zoneInfo: java.util.concurrent.ConcurrentMap[AnyRef, (String, Int)] =
     new com.google.common.collect.MapMaker().weakKeys().makeMap()
 
-  private[graft] def zoneInfoFor(relation: AnyRef): Option[(String, Int)] =
-    Option(zoneInfo.get(relation))
-
-  /** [[zoneInfoFor]] with a PATH-DERIVED fallback for the planner
-    * rules: a registry miss (a weak entry the GC collected, or a plan
-    * whose relation was recreated outside [[readFiles]]) must degrade
-    * to the same answer, not to a silent no-prune. The lake root is
-    * recovered from the scan's own file layout
-    * (`<root>/data/<col>=<v>/c<k>-…parquet`) and the CURRENT version's
-    * manifest is used — sound because per-file stats ride manifests
-    * VERBATIM (files are immutable and entries are carried forward),
-    * so any manifest covering all scanned files records identical
-    * stats for them; every caller already refuses when the manifest
-    * does not cover the exact scanned file set. */
-  private[graft] def zoneInfoForScan(relation: AnyRef,
-      files: => Seq[String]): Option[(String, Int)] =
-    zoneInfoFor(relation).orElse {
-      files.headOption.flatMap { f =>
+  /** The planner rules' one scan recognizer: for a lake file scan,
+    * (lake root, version, the manifest entries of exactly the files
+    * the scan reads — it may already be partition- or point-pruned).
+    * None when the relation is no lake scan, when a huge manifest's
+    * first parse is refused ([[manifestEntriesForPlanning]]), or when
+    * the entries do not cover exactly the scanned files.
+    *
+    * A registry miss (a weak entry the GC collected, or a plan whose
+    * relation was recreated outside [[readFiles]]) falls back to the
+    * scan's own file layout (`<root>/data/<col>=<v>/c<k>-…parquet`) and
+    * the CURRENT version's manifest — sound because per-file metadata
+    * rides manifests VERBATIM (files are immutable and entries are
+    * carried forward), so any manifest covering all scanned files
+    * records the same metadata for them. */
+  private[graft] def lakeScan(
+      lr: org.apache.spark.sql.execution.datasources.LogicalRelation)
+      : Option[(String, Int, Seq[Entry])] = lr.relation match {
+    case hfs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+      lazy val files = hfs.location.inputFiles
+      def byPath = files.headOption.flatMap { f =>
         val p = normalizePath(f)
         val i = p.lastIndexOf("/data/")
-        if (i <= 0) None
-        else {
-          val root = p.substring(0, i)
-          if (!new File(versionsDir(root)).isDirectory) None
-          else {
-            val v = currentVersion(root)
-            if (v >= 1) Some((root, v)) else None
-          }
-        }
+        val root = if (i <= 0) "" else p.substring(0, i)
+        if (i <= 0 || !new File(versionsDir(root)).isDirectory) None
+        else Some(currentVersion(root)).filter(_ >= 1).map(v => (root, v))
       }
-    }
+      for {
+        (lakeDir, v) <- Option(zoneInfo.get(hfs)).orElse(byPath)
+        all <- manifestEntriesForPlanning(lakeDir, v)
+        scanned = files.map(normalizePath).toSet
+        entries = all.filter(e => scanned.contains(normalizePath(e.path)))
+        if entries.size == scanned.size
+      } yield (lakeDir, v, entries)
+    case _ => None
+  }
 
   /** Append `df` as a new version: the new manifest is the old one
     * plus this batch's files — the insert-only commit a streaming

@@ -156,7 +156,7 @@ class PlanSpec extends SparkSpec {
     val live = { val s = spark.newSession(); GraftSession.install(s); sessionEngine(s) }
     assert(cluster == live)
     val (rules, strategies, fns, tvfs) = live
-    assert(rules.size == 4 && strategies.size == 1, live)
+    assert(rules.size == 3 && strategies.size == 1, live)
     assert(Set("ago", "ts_now", "create_time_series", "vec_dot").subsetOf(fns))
     assert(Set("ann_recall", "time_travel", "lake_compact").subsetOf(tvfs))
   }
@@ -518,13 +518,6 @@ class PlanSpec extends SparkSpec {
       s"SELECT * FROM time_travel('$dir', $v) WHERE v BETWEEN 12 AND 17")
     assert(qSql.collect().map(_.getLong(0)).toSet == (12L to 17L).toSet)
     assert(scannedFiles(qSql).length < all, "SQL range must prune too")
-    // the off switch restores the full scan
-    spark.conf.set(graft.plans.ZoneMapPrune.EnabledKey, "false")
-    try {
-      val qOff = VersionedLake.read(spark, dir)
-        .filter(col("v") >= 12 && col("v") <= 17)
-      assert(scannedFiles(qOff).length == all)
-    } finally spark.conf.unset(graft.plans.ZoneMapPrune.EnabledKey)
     // TIMESTAMP predicates fold through the manifest's epoch-micros
     // encoding — the time-keyed-lake shape this rule exists for
     val tdir = java.nio.file.Files.createTempDirectory("graft_zmpts").toString + "/lake"
@@ -593,10 +586,6 @@ class PlanSpec extends SparkSpec {
     val addCount = VersionedLake.read(spark, addDir)
       .agg(org.apache.spark.sql.functions.count(col("name")))
     assert(hasScan(addCount) && addCount.head().getLong(0) == 5L)
-    // the off switch restores the scan
-    spark.conf.set(graft.plans.LakeCountFromManifest.EnabledKey, "false")
-    try assert(hasScan(VersionedLake.read(spark, dir).groupBy().count()))
-    finally spark.conf.unset(graft.plans.LakeCountFromManifest.EnabledKey)
     // SQL text through time_travel takes the same metadata path
     val sqlCount = spark.sql(s"SELECT count(*) AS n FROM time_travel('$dir', 2)")
     assert(!hasScan(sqlCount) && sqlCount.head().getLong(0) == 40L)
@@ -637,11 +626,6 @@ class PlanSpec extends SparkSpec {
     // the strictly-shrinking guard still allows the empty file set
     val miss = VersionedLake.read(spark, dir).filter(col("id") === 999999L)
     assert(miss.count() == 0 && scannedFiles(miss).isEmpty)
-    // the off switch restores the full scan
-    spark.conf.set(graft.plans.ZoneMapPrune.EnabledKey, "false")
-    try assert(scannedFiles(VersionedLake.read(spark, dir)
-      .filter(col("id") === 31L)).length == all)
-    finally spark.conf.unset(graft.plans.ZoneMapPrune.EnabledKey)
     // NULL-count pruning: an all-null file and a no-null file — the
     // recorded per-file null counts decide IS [NOT] NULL exactly
     val ndir = java.nio.file.Files.createTempDirectory("graft_zmnull").toString + "/lake"
@@ -728,10 +712,6 @@ class PlanSpec extends SparkSpec {
       ndir, "part")
     val nan = VersionedLake.read(spark, ndir).agg(fmax(col("d")))
     assert(hasScan(nan) && nan.head().getDouble(0).isNaN)
-    // the off switch restores the scan
-    spark.conf.set(graft.plans.LakeMinMaxFromManifest.EnabledKey, "false")
-    try assert(hasScan(VersionedLake.read(spark, dir).agg(fmin(col("v")))))
-    finally spark.conf.unset(graft.plans.LakeMinMaxFromManifest.EnabledKey)
     // SQL text through time_travel takes the same metadata path,
     // timestamps decode back through the epoch-micros encoding
     val sqlMm = spark.sql(
@@ -786,6 +766,14 @@ class PlanSpec extends SparkSpec {
       else VersionedLake.append(rows, dir, "part")
     }
     (0 until 3).foreach(commit)
+    // the reference: the same filter applied in Scala to the lake's
+    // unfiltered rows, which no planner rule can prune
+    val allRows = VersionedLake.read(spark, dir).select("v", "part").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    def reference(keep: Long => Boolean): Set[Seq[Any]] =
+      allRows.filter(r => keep(r._1)).groupBy(_._2).map { case (part, rs) =>
+        Seq[Any](part, rs.size.toLong, rs.map(_._1).sum)
+      }.toSet
     def run(lo: Long, hi: Long): Set[Seq[Any]] =
       VersionedLake.read(spark, dir)
         .filter(col("v") >= lo && col("v") <= hi)
@@ -796,11 +784,8 @@ class PlanSpec extends SparkSpec {
     for (_ <- 0 until 12) {
       val a = rnd.nextLong(1100L) - 50L
       val b = a + rnd.nextLong(400L)
-      val withRule = run(a, b)
-      spark.conf.set(graft.plans.ZoneMapPrune.EnabledKey, "false")
-      val without = try run(a, b)
-        finally spark.conf.unset(graft.plans.ZoneMapPrune.EnabledKey)
-      assert(withRule == without, s"rows diverged for [$a, $b]")
+      assert(run(a, b) == reference(v => v >= a && v <= b),
+        s"rows diverged for [$a, $b]")
     }
     // OR of two random intervals: the tree evaluation must keep rows
     // identical under any branch combination
@@ -815,11 +800,9 @@ class PlanSpec extends SparkSpec {
     for (_ <- 0 until 8) {
       val a1 = rnd.nextLong(1000L); val b1 = a1 + rnd.nextLong(200L)
       val a2 = rnd.nextLong(1000L); val b2 = a2 + rnd.nextLong(200L)
-      val withRule = runOr(a1, b1, a2, b2)
-      spark.conf.set(graft.plans.ZoneMapPrune.EnabledKey, "false")
-      val without = try runOr(a1, b1, a2, b2)
-        finally spark.conf.unset(graft.plans.ZoneMapPrune.EnabledKey)
-      assert(withRule == without, s"rows diverged for [$a1,$b1] OR [$a2,$b2]")
+      assert(runOr(a1, b1, a2, b2) ==
+        reference(v => (v >= a1 && v <= b1) || (v >= a2 && v <= b2)),
+        s"rows diverged for [$a1,$b1] OR [$a2,$b2]")
     }
   }
 
@@ -881,11 +864,6 @@ class PlanSpec extends SparkSpec {
     assert(not.count() == 60)
     assert(scannedFiles(not).length == 2,
       "the >= 'es' conjunct prunes; the NOT contributes nothing")
-    // the off switch restores the full scan
-    spark.conf.set(graft.plans.ZoneMapPrune.EnabledKey, "false")
-    try assert(scannedFiles(VersionedLake.read(spark, dir)
-      .filter(col("lang") === "en")).length == all)
-    finally spark.conf.unset(graft.plans.ZoneMapPrune.EnabledKey)
     // the explicit string read_range surface: loud refusal for a
     // column with no STRING stats (v is numeric), pruning for lang
     intercept[IllegalArgumentException] {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Property-based invariants (SURVEY §5.2.3) over randomized inputs:
@@ -329,5 +330,74 @@ class PropertySpec extends SparkSpec {
           ((r.getLong(1), r.getLong(2), r.getString(4)))).toMap
       assert(fp == out)
     }
+  }
+
+  test("lake file skipping: explicit reads and the planner rule admit the same files and never drop a match") {
+    import graft.sources.VersionedLake
+    val dir = Files.createTempDirectory("graft_skipprop").toString + "/lake"
+    val rnd = new scala.util.Random(7)
+    // five commits x two partitions = ten files; each commit draws ids
+    // and names from its own window, and the windows overlap, so the
+    // zone maps and envelopes neither prune everything nor nothing
+    (0 until 5).foreach { c =>
+      val rows = (0 until 60).map { _ =>
+        (c * 60L - 40 + rnd.nextInt(100), f"n${c * 150 + rnd.nextInt(300)}%04d",
+          s"p${rnd.nextInt(2)}")
+      }.toDF("id", "name", "part").coalesce(1)
+      if (c == 0) VersionedLake.create(rows, dir, "part",
+        blooms = Seq(VersionedLake.BloomSpec("id"), VersionedLake.BloomSpec("name")))
+      else VersionedLake.append(rows, dir, "part")
+    }
+    def files(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.inputFiles.map(VersionedLake.normalizePath).toSet
+    def scanned(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.location.inputFiles.toSeq
+      }.flatten.map(VersionedLake.normalizePath).toSet
+    val lake = VersionedLake.read(spark, dir)
+    val all = files(lake)
+    assert(all.size == 10)
+    // (file, id, name) of every row, read without any filter
+    val rows = lake.select(input_file_name(), col("id"), col("name")).collect()
+      .map(r => (VersionedLake.normalizePath(r.getString(0)), r.getLong(1), r.getString(2)))
+    // 1. a random [lo, hi]: readRange opens exactly the files the rule
+    //    scans for the equivalent BETWEEN, numeric and string alike
+    var narrowed = 0
+    (0 until 20).foreach { _ =>
+      val lo = rnd.nextInt(340) - 60L
+      val hi = lo + 1 + rnd.nextInt(80)
+      val explicit = files(VersionedLake.readRange(spark, dir, "id", lo.toDouble, hi.toDouble, None))
+      assert(explicit == scanned(lake.filter(col("id").between(lo, hi))), s"id in [$lo, $hi]")
+      val slo = f"n${rnd.nextInt(900)}%04d"
+      val shi = f"n${slo.drop(1).toInt + 1 + rnd.nextInt(200)}%04d"
+      val sExplicit = files(VersionedLake.readRange(spark, dir, "name", slo, shi, None))
+      assert(sExplicit == scanned(lake.filter(col("name").between(slo, shi))),
+        s"name in [$slo, $shi]")
+      if (explicit.size < all.size || sExplicit.size < all.size) narrowed += 1
+    }
+    assert(narrowed > 0, "no sampled range skipped a file: the lake shape is too weak")
+    // 2. a random key set: every file readPoints or the rule drops
+    //    holds none of the keys
+    var dropped = 0
+    def holdsNone(kept: Set[String], holds: ((String, Long, String)) => Boolean,
+        what: String): Unit = {
+      val missed = rows.filter(r => !kept.contains(r._1) && holds(r))
+      assert(missed.isEmpty, s"$what dropped files holding ${missed.take(3).mkString(", ")}")
+      dropped += (all -- kept).size
+    }
+    (0 until 15).foreach { _ =>
+      val ids = Seq.fill(1 + rnd.nextInt(4))(rnd.nextInt(340) - 60L).distinct
+      val names = Seq.fill(1 + rnd.nextInt(4))(f"n${rnd.nextInt(1000)}%04d").distinct
+      holdsNone(files(VersionedLake.readPoints(spark, dir, "id", ids.map(_.toString))),
+        r => ids.contains(r._2), s"readPoints(id, $ids)")
+      holdsNone(scanned(lake.filter(col("id").isin(ids: _*))),
+        r => ids.contains(r._2), s"id IN $ids")
+      holdsNone(files(VersionedLake.readPoints(spark, dir, "name", names)),
+        r => names.contains(r._3), s"readPoints(name, $names)")
+      holdsNone(scanned(lake.filter(col("name").isin(names: _*))),
+        r => names.contains(r._3), s"name IN $names")
+    }
+    assert(dropped > 0, "no sampled key set skipped a file: the lake shape is too weak")
   }
 }

@@ -189,18 +189,11 @@ class VersionedLakeSpec extends SparkSpec {
     // an UNCACHED manifest beyond the plan-bytes cap is refused for
     // planning (rule degrades to no pruning) but still parses for data
     // reads — after which the cache serves the planner too
-    val prev = System.getProperty("graft.manifest.maxPlanBytes")
-    System.setProperty("graft.manifest.maxPlanBytes", "1024")
-    try {
-      val big2 = fakeLake("vlake_big2", 5000)
-      assert(VersionedLake.manifestEntriesForPlanning(big2, 1).isEmpty)
-      assert(VersionedLake.manifestEntries(big2, 1).size == 5000)
-      assert(VersionedLake.manifestEntriesForPlanning(big2, 1)
-        .exists(_.size == 5000))
-    } finally {
-      if (prev == null) System.clearProperty("graft.manifest.maxPlanBytes")
-      else System.setProperty("graft.manifest.maxPlanBytes", prev)
-    }
+    val big2 = fakeLake("vlake_big2", 5000)
+    assert(VersionedLake.manifestEntriesForPlanning(big2, 1, maxBytes = 1024).isEmpty)
+    assert(VersionedLake.manifestEntries(big2, 1).size == 5000)
+    assert(VersionedLake.manifestEntriesForPlanning(big2, 1, maxBytes = 1024)
+      .exists(_.size == 5000))
   }
 
   test("commit-time exactly-once: two staged appends with one batch id land once (check-then-act race closed)") {
