@@ -100,6 +100,21 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$|project/'; then
     echo "$regrow" >&2
     exit 1
   fi
+  # One-job lake commits: every new file's row count, zone maps and
+  # Blooms come from the write job's stats tracker, so VersionedLake
+  # must not regrow a read-back of its own files (an input_file_name()
+  # aggregate or a parquet footer read).
+  regrow=$(git diff --cached -U0 -- src/main/scala/graft/sources/VersionedLake.scala | awk '
+    /^\+\+\+ / { f = substr($0, 7); next }
+    !/^\+/ { next }
+    /input_file_name\(|ParquetFileReader/ { print f ": " substr($0, 2) }')
+  if [ -n "$regrow" ]; then
+    echo "[precommit_guard] REFUSING COMMIT: per-file lake stats come from" >&2
+    echo "[precommit_guard] the write job only; keep input_file_name( and" >&2
+    echo "[precommit_guard] ParquetFileReader out of VersionedLake.scala:" >&2
+    echo "$regrow" >&2
+    exit 1
+  fi
   # GATES.md census: regenerate from the registry so the committed
   # census can never lag it. A diff means the registry changed without
   # the census — regenerate, auto-stage when GATES.md itself is part

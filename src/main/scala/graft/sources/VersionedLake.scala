@@ -98,9 +98,9 @@ object VersionedLake {
   /** One manifest line: a data file, its partition value (in the
     * Hive-ESCAPED directory form Spark writes — %-encoded special
     * chars, `__HIVE_DEFAULT_PARTITION__` for null; raw caller values
-    * go through [[escapedPartition]] before comparing), its row count
-    * from the parquet footer, and the per-column zone maps, Blooms and
-    * null counts its commit recorded — the planning-time file-skipping
+    * go through [[escapedPartition]] before comparing), its row count,
+    * and the per-column zone maps, Blooms and null counts its commit's
+    * write job recorded — the planning-time file-skipping
     * metadata. A column missing from a map has no stats in that file
     * (all-null, not stats-encodable, or added by a later commit). */
   final case class Entry(partition: String, path: String, rows: Long,
@@ -210,11 +210,8 @@ object VersionedLake {
       * each key once and tests it against every file's bitset. */
     def keyHashes(key: String): Array[Long] = {
       val md = java.security.MessageDigest.getInstance("MD5")
-      Array.tabulate(k) { j =>
-        val hex = md.digest(s"bloom:$j:$key".getBytes(StandardCharsets.UTF_8))
-          .map(b => f"$b%02x").mkString.take(8)
-        java.lang.Long.parseLong(hex, 16)
-      }
+      val bytes = key.getBytes(StandardCharsets.UTF_8)
+      Array.tabulate(k)(j => bloomHash(md, bloomPrefix(j), bytes))
     }
 
     /** Membership from precomputed [[keyHashes]] (geometry-compatible:
@@ -229,6 +226,21 @@ object VersionedLake {
     /** Driver-side membership: false = the key is definitely not in
       * the file (skip it); true = it might be. */
     def mightContain(key: String): Boolean = mightContainHashes(keyHashes(key))
+  }
+
+  /** The salt of a key's j-th Bloom hash. */
+  private[graft] def bloomPrefix(j: Int): Array[Byte] =
+    s"bloom:$j:".getBytes(StandardCharsets.UTF_8)
+
+  /** One Bloom hash of a key's UTF-8 bytes: the first 32 bits of
+    * md5(prefix ++ key), unsigned — the number
+    * [[graft.operators.Sketch.bloomBuckets]] reads from the first 8 hex
+    * digits of the same digest before its `pmod m`. */
+  private[graft] def bloomHash(md: java.security.MessageDigest,
+      prefix: Array[Byte], key: Array[Byte]): Long = {
+    md.update(prefix)
+    val d = md.digest(key)
+    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
 
   /** What to record per file for point-lookup skipping: the key
@@ -1413,19 +1425,41 @@ object VersionedLake {
   }
 
   /** Write `df`'s files into the shared `data/<partitionCol>=<v>/`
-    * tree under commit-prefixed names (stage with partitionBy, then
-    * per-file rename — metadata ops on new files only) and return their
-    * manifest entries, row counts, zone maps, null counts and the
-    * `blooms` columns' filters included. One uniform directory depth
-    * keeps a single basePath scan valid across any mix of commits. */
+    * tree under commit-prefixed names (stage with one partitioned
+    * write, then per-file rename — metadata ops on new files only) and
+    * return their manifest entries. One uniform directory depth keeps
+    * a single basePath scan valid across any mix of commits.
+    *
+    * Every entry's metadata comes from the write job itself: a
+    * [[CommitStatsTracker]] rides the write (through
+    * `GraftShim.writeParquet`) and folds each file's rows, as the task
+    * writes them, into its row count, its zone map of every
+    * stats-encodable column ([[statsEncoding]]: numeric; date as epoch
+    * days; timestamp as epoch micros; a NaN anywhere in a column
+    * records no bounds for it), its (StrStatsLen + 1)-codepoint string
+    * prefixes, its per-column null counts and the `blooms` columns'
+    * filters — no footer, read-back or aggregate job afterwards. The
+    * partition column's value comes from the task's partition, recorded
+    * under its type in `df.schema` (the schema reads trust), never
+    * inferred from the directory name. The driver then truncates each
+    * string column's min DOWN and max UP ([[strTruncUp]]; an
+    * un-incrementable max records no envelope), so the recorded
+    * 32-codepoint envelope provably contains every value in the file.
+    * An empty file records its row count only, and a column with no
+    * non-null value in a file records no zone map and no Bloom there. */
   private def writeCommitFiles(df: DataFrame, lakeDir: String, commitId: Int,
       partitionCol: String, blooms: Seq[BloomSpec]): Seq[Entry] = {
+    blooms.foreach(b => require(df.columns.contains(b.column),
+      s"bloom column '${b.column}' is not in [${df.columns.mkString(", ")}]"))
     // unique per write: concurrent writers may plan the same commitId
     // before the CAS resolves the race — staging must never collide
     val staging = s"$lakeDir/_staging_c$commitId-${java.util.UUID.randomUUID()}"
-    df.write.partitionBy(partitionCol).parquet(staging)
+    val tracker = new CommitStatsTracker(df.schema, partitionCol, blooms,
+      df.sparkSession.sessionState.conf.sessionLocalTimeZone)
+    org.apache.spark.sql.GraftShim.writeParquet(df, staging, partitionCol, tracker)
+    val stats = tracker.files
     val prefix = partitionCol + "="
-    val bare = Option(new File(staging).listFiles())
+    val entries = Option(new File(staging).listFiles())
       .getOrElse(Array.empty[File])
       .filter(d => d.isDirectory && d.getName.startsWith(prefix))
       .flatMap { d =>
@@ -1433,131 +1467,24 @@ object VersionedLake {
         val destDir = new File(s"$lakeDir/data/${d.getName}")
         destDir.mkdirs()
         d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
+          val s = stats.getOrElse(s"${d.getName}/${f.getName}",
+            throw new IllegalStateException(s"the write job reported no stats for $f"))
           val dest = new File(destDir, s"c$commitId-${f.getName}")
           Files.move(f.toPath, dest.toPath)
-          // per-file row count straight from the parquet footer —
-          // metadata-only (no data read), file-count-sized driver
-          // work, and it makes COUNT(*) answerable from the manifest
-          Entry(value, dest.getAbsolutePath, footerRowCount(dest.getAbsolutePath))
+          Entry(value, dest.getAbsolutePath, s.rows,
+            colStats = s.colStats,
+            colBlooms = s.blooms,
+            strStats = s.strPrefixes.flatMap { case (c, (mn, mx)) =>
+              strTruncUp(mx).map(up => c -> ((strTruncDown(mn), up)))
+            },
+            nullCounts = s.nullCounts)
         }
       }.toSeq.sortBy(_.path)
     def rm(f: File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
     rm(new File(staging))
-    if (bare.isEmpty) return bare
-    val src = df.sparkSession.read.option("basePath", s"$lakeDir/data")
-      .parquet(bare.map(_.path): _*)
-    // ONE job over ONLY the new files: per-file min/max for EVERY
-    // stats-encodable column (numeric; date as epoch days; timestamp
-    // as epoch micros) — the Iceberg/Delta-class per-column metadata
-    // that lets a range read prune on any recorded column.
-    val encoded: Seq[(String, org.apache.spark.sql.Column)] =
-      src.schema.fields.toSeq.flatMap(f => statsEncoding(f).map(f.name -> _))
-    // string zone maps: min/max over a (StrStatsLen+1)-codepoint
-    // PREFIX of each value — prefix truncation is monotone under the
-    // binary string order Spark's min/max use, so
-    // min(prefix) = prefix(min) and max(prefix) = prefix(max); the
-    // aggregate never shuffles more than 33 codepoints per value no
-    // matter how long the documents are. The driver then truncates
-    // the min DOWN (a prefix is <= the value) and the max UP
-    // ([[strTruncUp]] increments the last codepoint, the
-    // Delta/Iceberg trick) so the recorded 32-codepoint envelope
-    // provably contains every value in the file.
-    val strCols: Seq[String] = src.schema.fields.toSeq.collect {
-      case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
-    }
-    // per-column NULL counts (every column, any type) — the
-    // Iceberg-class stat that makes IS NULL / IS NOT NULL prunable
-    // and null-sensitive count(col) answerable from the manifest
-    val allCols: Seq[String] = src.schema.fields.toSeq.map(_.name)
-    val aggs: Seq[org.apache.spark.sql.Column] =
-      encoded.zipWithIndex.flatMap { case ((_, e), i) =>
-        Seq(min(e).as(s"_n$i"), max(e).as(s"_x$i"))
-      } ++
-        strCols.zipWithIndex.flatMap { case (n, i) =>
-          Seq(min(substring(col(n), 1, StrStatsLen + 1)).as(s"_smn$i"),
-            max(substring(col(n), 1, StrStatsLen + 1)).as(s"_smx$i"))
-        } ++
-        allCols.zipWithIndex.map { case (n, i) =>
-          sum(when(col(n).isNull, 1L).otherwise(0L)).as(s"_nc$i")
-        }
-    val byPath = src.groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*).collect().map { r =>
-        def d(n: String): Option[Double] = {
-          val i = r.fieldIndex(n)
-          if (r.isNullAt(i)) None
-          // a NaN min/max (NaN-bearing double column) records no stats
-          // for the column: every NaN comparison is false, so a NaN
-          // bound would prune wrongly — parseManifest refuses one
-          else { val x = r.getDouble(i); if (x.isNaN) None else Some(x) }
-        }
-        def st(nm: String): Option[String] = {
-          val i = r.fieldIndex(nm)
-          if (r.isNullAt(i)) None else Some(r.getString(i))
-        }
-        val per = encoded.zipWithIndex.flatMap { case ((n, _), i) =>
-          for { mn <- d(s"_n$i"); mx <- d(s"_x$i") } yield n -> ((mn, mx))
-        }.toMap
-        val strs = strCols.zipWithIndex.flatMap { case (n, i) =>
-          for {
-            mnRaw <- st(s"_smn$i"); mxRaw <- st(s"_smx$i")
-            mx <- strTruncUp(mxRaw) // un-incrementable max: no stats
-          } yield n -> ((strTruncDown(mnRaw), mx))
-        }.toMap
-        val nulls = allCols.zipWithIndex.flatMap { case (n, i) =>
-          val j = r.fieldIndex(s"_nc$i")
-          if (r.isNullAt(j)) None else Some(n -> r.getLong(j))
-        }.toMap
-        normalizePath(r.getString(r.fieldIndex("f"))) -> ((per, strs, nulls))
-      }.toMap
-    val withStats = bare.map { e =>
-      byPath.get(normalizePath(e.path)) match {
-        case Some((per, strs, nulls)) =>
-          e.copy(colStats = per, strStats = strs, nullCounts = nulls)
-        case None => e // an empty file: no zone maps
-      }
-    }
-    // per-file packed Bloom words of each declared column: one job
-    // over ONLY the new files per spec — the same distributive
-    // (file, word) bit_or aggregate as Sketch.bloomBuild, shuffle
-    // bounded by files × m/64 — so point reads prune on ANY of them
-    blooms.foldLeft(withStats) { (es, spec) =>
-      val words = src
-        // NULL keys can never match a string probe, and un-filtered
-        // they surface as a (file, null, null) aggregate row that
-        // NPEs the collect below — drop them before the explode
-        .filter(col(spec.column).isNotNull)
-        .select(input_file_name().as("f"),
-          explode(graft.operators.Sketch.bloomBuckets(
-            col(spec.column).cast("string"), spec.k, spec.m)).as("bucket"))
-        .groupBy(col("f"), shiftright(col("bucket"), 6).as("word"))
-        .agg(expr("bit_or(shiftleft(1L, int(bucket % 64)))").as("bits"))
-        .collect()
-        .groupBy(r => normalizePath(r.getString(0)))
-        .map { case (f, rows) =>
-          val w = new Array[Long](spec.m / 64)
-          rows.foreach(r => w(r.getLong(1).toInt) = r.getLong(2))
-          f -> w
-        }
-      es.map { e =>
-        words.get(normalizePath(e.path)) match {
-          case Some(w) => e.copy(colBlooms =
-            e.colBlooms + (spec.column -> FileBloom(spec.k, spec.m, w)))
-          case None => e // empty/all-null file: no filter, kept
-        }
-      }
-    }
-  }
-
-  /** Record count from a parquet file's footer — the metadata parquet
-    * already maintains per row group; no data pages are read. */
-  private def footerRowCount(path: String): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+    entries
   }
 
   /** COUNT(*) of a version from manifest metadata alone: every entry
@@ -1618,7 +1545,7 @@ object VersionedLake {
   /** Per-PARTITION column statistics from manifest metadata alone — no
     * data scan: (partition, n_files, n_rows, min, max), the aggregate
     * the zone maps already paid for at commit time. Per-file min/max
-    * are exact (computed from the data by the commit's stats job), so
+    * are exact (computed from the data by the commit's write job), so
     * their fold is the exact partition min/max. STRING columns fold
     * their truncated envelopes instead — per-partition BOUNDS (min
     * truncated down, max up), not attained values, which is what a

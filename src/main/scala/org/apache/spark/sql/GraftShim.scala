@@ -3,13 +3,15 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistryBase, SimpleFunctionRegistry, SimpleTableFunctionRegistry}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, WriteJobStatsTracker}
 
 /** Minimal bridge to Spark internals that are `private[sql]` in Spark 4:
   * Column ↔ catalyst Expression conversion
   * (org.apache.spark.sql.classic.ExpressionUtils), the extension
-  * builders, and session cloning. This is the standard third-party-
-  * library pattern for registering custom native expressions and
-  * rules from outside Spark.
+  * builders, session cloning, and the file writer's stats-tracker
+  * hook. This is the standard third-party-library pattern for
+  * registering custom native expressions and rules from outside Spark.
   */
 object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -74,4 +76,41 @@ object GraftShim {
     * builder returns so the composed outer query analyzes against the
     * operator's real output schema. */
   def analyzedPlan(df: Dataset[Row]): LogicalPlan = df.queryExecution.analyzed
+
+  /** Write `df` as parquet under `path`, partitioned by
+    * `partitionColumn`, the way `InsertIntoHadoopFsRelationCommand`
+    * runs `df.write.partitionBy(partitionColumn).parquet(path)`: one
+    * `FileFormatWriter.write` inside a new SQL execution, with Spark's
+    * `BasicWriteJobStatsTracker` and `tracker` beside it. Every task
+    * feeds `tracker` its partitions, files and rows as it writes them,
+    * and the tracker's `processStats` has run on the driver when this
+    * returns. */
+  def writeParquet(df: DataFrame, path: String, partitionColumn: String,
+      tracker: WriteJobStatsTracker): Unit = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.queryExecution
+    val conf = spark.sessionState.conf
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      val output = plan.output
+      util.SchemaUtils.checkColumnNameDuplication(output.map(_.name),
+        conf.caseSensitiveAnalysis)
+      val partitionColumns = output.filter(_.name == partitionColumn)
+      require(partitionColumns.size == 1,
+        s"partition column '$partitionColumn' not found in [${output.map(_.name).mkString(", ")}]")
+      val hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
+      val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+        conf.fileCommitProtocolClass, jobId = java.util.UUID.randomUUID().toString,
+        outputPath = path)
+      FileFormatWriter.write(spark, plan,
+        new execution.datasources.parquet.ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, output), hadoopConf,
+        partitionColumns, bucketSpec = None,
+        statsTrackers = Seq(new BasicWriteJobStatsTracker(
+          new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+          BasicWriteJobStatsTracker.metrics), tracker),
+        options = Map.empty)
+    }
+    ()
+  }
 }

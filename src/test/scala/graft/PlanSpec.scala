@@ -65,6 +65,20 @@ class PlanSpec extends SparkSpec {
     assert("\\bWindow\\b".r.findFirstIn(p).isEmpty, s"flagship plans a Window node:\n$p")
   }
 
+  test("the metadata-aggregate gates scan only their filtered leg") {
+    // every bare count / min / max leg folds from the manifest; only
+    // the leg with a WHERE clause must read files
+    Seq("q_sql_count_meta", "q_sql_minmax_meta").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
+      val scans = df.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      assert(scans.size == 1, s"$name plans ${scans.size} scans:\n${df.queryExecution.sparkPlan}")
+      assert(scans.head.dataFilters.nonEmpty, s"$name scans an unfiltered leg:\n${scans.head}")
+    }
+    CacheRegistry.clearAll()
+  }
+
   /** What one build of a gate yields for the whole-registry audits. */
   private final case class Audit(cartesian: Boolean, embeddedSorts: Seq[String],
       optimized: String, canon: String)

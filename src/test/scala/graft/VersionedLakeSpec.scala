@@ -1501,4 +1501,179 @@ class VersionedLakeSpec extends SparkSpec {
     assert(rr.inputFiles.length == 1)
     assert(rr.filter(col("body") === probe).count() == 1)
   }
+
+  /** Commit `v`'s own entries (its `c<v>-` files) equal the read-back
+    * reference's, field by field and Bloom word by Bloom word. The
+    * partition column is compared too whenever the reference infers
+    * the type the lake declares for it. Returns the compared entries. */
+  private def assertMatchesReadBack(lake: String, v: Int,
+      partitionCol: String): Seq[VersionedLake.Entry] = {
+    val m = VersionedLake.loadManifest(lake, v)
+    val fresh = m.entries.filter(_.path.contains(s"/c$v-")).sortBy(_.path)
+    val (ref, inferred) = ReadBackStats.entries(spark, lake, partitionCol,
+      fresh.map(_.path), m.blooms)
+    val sameType = inferred.forall(_ == m.schema(partitionCol).dataType)
+    def comparable(e: VersionedLake.Entry) =
+      if (sameType) e
+      else e.copy(colStats = e.colStats - partitionCol,
+        strStats = e.strStats - partitionCol,
+        nullCounts = e.nullCounts - partitionCol,
+        colBlooms = e.colBlooms - partitionCol)
+    def words(e: VersionedLake.Entry) =
+      e.colBlooms.map { case (c, b) => c -> ((b.k, b.m, b.words.toSeq)) }
+    fresh.zip(ref).foreach { case (got0, want0) =>
+      val (got, want) = (comparable(got0), comparable(want0))
+      val at = s"v$v ${got.path}"
+      assert(got.partition == want.partition && got.rows == want.rows, at)
+      assert(got.colStats == want.colStats, s"$at colStats")
+      assert(got.strStats == want.strStats, s"$at strStats")
+      assert(got.nullCounts == want.nullCounts, s"$at nullCounts")
+      assert(words(got) == words(want), s"$at colBlooms")
+    }
+    fresh
+  }
+
+  test("in-write file stats equal the read-back reference for every commit kind") {
+    val root = tmp("vlake_instats")
+    val lake = s"$root/lake"
+    def cp(c: Int) = new String(Character.toChars(c))
+    val top = cp(0x10FFFF) * 34 // no finite 32-codepoint upper bound
+    def rows(ids: Range) = ids.map { i =>
+      val part = s"p${i % 3}"
+      (i.toLong, i, i * 1.5 + (if (i == 7) Double.NaN else 0.0),
+        if (i % 2 == 0) -0.0 else 0.0,
+        if (i == 5) top
+        else if (i % 3 == 1) cp(0x1F600) + ("é" * 35) + i
+        else s"doc-$i-" + ("x" * 40),
+        if (i % 4 == 0) null else s"k$i", part)
+    }.toDF("id", "n", "x", "z", "s", "key", "part")
+      .withColumn("d", date_add(lit("2021-11-01").cast("date"), col("n")))
+      .withColumn("ts", timestamp_micros(col("id") * 1000003L))
+      .withColumn("nul", lit(null).cast("string"))
+    val blooms = Seq(VersionedLake.BloomSpec("id", m = 256),
+      VersionedLake.BloomSpec("key", m = 256))
+    // create: round-robin tasks write several files per partition value
+    VersionedLake.create(rows(0 until 60).repartition(3), lake, "part", blooms = blooms)
+    val v1 = assertMatchesReadBack(lake, 1, "part")
+    assert(v1.groupBy(_.partition).values.forall(_.size == 3), v1.map(_.path))
+    // the NaN, all-NULL and un-incrementable cases really occur
+    assert(v1.exists(e => e.rows > 0 && !e.colStats.contains("x")))
+    assert(v1.forall(e => !e.strStats.contains("nul") && !e.colStats.contains("nul") &&
+      e.nullCounts("nul") == e.rows))
+    assert(v1.exists(e => !e.strStats.contains("s")) && v1.exists(_.strStats.contains("s")))
+    assert(v1.forall(e => e.colBlooms.contains("id") && e.colBlooms.contains("key")))
+    Seq("n", "d", "ts", "z", "id").foreach(c => assert(v1.forall(_.colStats.contains(c)), c))
+    VersionedLake.append(rows(60 until 90), lake, "part")
+    assertMatchesReadBack(lake, 2, "part")
+    val changes = rows(0 until 12).filter(col("part") === "p1")
+      .withColumn("x", col("x") + 1.0).withColumn("_deleted", col("id") === 4L)
+    VersionedLake.mergeUpsert(spark, lake, changes, Seq("id"), "part")
+    assertMatchesReadBack(lake, 3, "part")
+    assert(VersionedLake.compactPartitions(spark, lake, "part") == 4)
+    assertMatchesReadBack(lake, 4, "part")
+    assert(VersionedLake.rewritePartitions(spark, lake, "part",
+      _.filter(col("id") =!= 10L), Some(Seq("p1"))) == 5)
+    assertMatchesReadBack(lake, 5, "part")
+    assert(VersionedLake.zorderPartitions(spark, lake, "part", Seq("id", "s"),
+      filesPerPartition = 2) == 6)
+    assert(assertMatchesReadBack(lake, 6, "part").nonEmpty)
+    // an empty input commits a version with no new file
+    VersionedLake.append(rows(0 until 0), lake, "part")
+    assert(VersionedLake.currentVersion(lake) == 7)
+    assert(assertMatchesReadBack(lake, 7, "part").isEmpty)
+    assert(VersionedLake.manifestEntries(lake, 7).map(_.path) ==
+      VersionedLake.manifestEntries(lake, 6).map(_.path))
+    assert(VersionedLake.rowCount(spark, lake) == VersionedLake.read(spark, lake).count())
+  }
+
+  test("the partition column's zone map is recorded under its declared type") {
+    val root = tmp("vlake_parttype")
+    Seq("2021-11-01", "42", "2021-11-01T07", "p1").zipWithIndex.foreach { case (pv, i) =>
+      val lake = s"$root/s$i"
+      VersionedLake.create(Seq((1L, pv), (2L, pv)).toDF("id", "part").coalesce(1), lake, "part")
+      val Seq(e) = VersionedLake.manifestEntries(lake, 1)
+      assert(VersionedLake.loadManifest(lake, 1).schema("part").dataType ==
+        org.apache.spark.sql.types.StringType)
+      assert(!e.colStats.contains("part"), s"$pv: ${e.colStats}")
+      assert(e.strStats.get("part").contains((pv, pv)), s"$pv: ${e.strStats}")
+      assert(e.nullCounts.get("part").contains(0L))
+      // a string range on the partition column prunes on the envelope
+      assert(VersionedLake.readRange(spark, lake, "part", pv, pv, None).count() == 2)
+      assert(VersionedLake.readRange(spark, lake, "part", pv + "~", pv + "~", None)
+        .inputFiles.isEmpty)
+    }
+    // a DATE partition column still records epoch days
+    val lake = s"$root/date"
+    VersionedLake.create(Seq((1L, "2021-11-01")).toDF("id", "p")
+      .select(col("id"), col("p").cast("date").as("part")), lake, "part")
+    val Seq(e) = VersionedLake.manifestEntries(lake, 1)
+    assert(e.colStats.get("part").contains((18932.0, 18932.0)), e.colStats)
+    assert(!e.strStats.contains("part"))
+  }
+
+  test("a failed write commits nothing; cleanOrphans clears its leftovers; a clean retry equals a run that never failed") {
+    val root = tmp("vlake_failwrite")
+    val base = (0 until 10).map(i => (i.toLong, s"p${i % 2}")).toDF("id", "part")
+    val boom = udf { (i: Long) =>
+      if (i == 13L) throw new IllegalStateException("write boom on 13"); i
+    }
+    // the batch comes from a range so the UDF runs in the job's tasks,
+    // not folded into a local relation on the driver
+    def batch = spark.range(10, 20).select(col("id"),
+      concat(lit("p"), (col("id") % 2).cast("string")).as("part"))
+    def failsLoudly(body: => Unit): Unit = {
+      val e = intercept[Exception](body)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("write boom on 13")), e)
+    }
+    def staged(lake: String) = Option(new java.io.File(lake).listFiles())
+      .getOrElse(Array.empty[java.io.File]).filter(_.getName.startsWith("_staging_"))
+    def dataFiles(lake: String): Set[String] = {
+      val out = Set.newBuilder[String]
+      def walk(f: java.io.File): Unit =
+        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(walk))
+        else if (f.getName.endsWith(".parquet")) out += f.getCanonicalPath
+      walk(new java.io.File(s"$lake/data"))
+      out.result()
+    }
+    def canonical(lake: String, v: Int) =
+      VersionedLake.manifestEntries(lake, v).map(e => new java.io.File(e.path).getCanonicalPath).toSet
+    // an append whose frame fails on one row, and a create whose write
+    // task itself throws (no exchange between the UDF and the writer)
+    val lake = s"$root/lake"
+    VersionedLake.create(base, lake, "part", blooms = Seq(VersionedLake.BloomSpec("id")))
+    val manifestBefore = Files.readString(Paths.get(s"$lake/_versions/v1.manifest"))
+    failsLoudly(VersionedLake.append(batch.withColumn("id", boom(col("id"))), lake, "part"))
+    assert(VersionedLake.currentVersion(lake) == 1)
+    assert(Files.readString(Paths.get(s"$lake/_versions/v1.manifest")) == manifestBefore)
+    assert(dataFiles(lake) == canonical(lake, 1), "a failed append left a data file")
+    val created = s"$root/created"
+    failsLoudly(VersionedLake.create(batch.withColumn("id", boom(col("id"))), created, "part"))
+    assert(VersionedLake.currentVersion(created) == 0)
+    assert(dataFiles(created).isEmpty)
+    // the failed create set up its staging directory before its task threw
+    assert(staged(created).nonEmpty)
+    // past the grace period the staged leftovers go, and nothing else
+    Thread.sleep(5)
+    Seq(lake, created).foreach { l =>
+      VersionedLake.cleanOrphans(l, graceMs = 1)
+      assert(staged(l).isEmpty, staged(l).map(_.getName).toSeq)
+    }
+    assert(dataFiles(lake) == canonical(lake, 1))
+    // a clean retry lands exactly what a run that never failed lands
+    VersionedLake.append(batch, lake, "part")
+    val never = s"$root/never"
+    VersionedLake.create(base, never, "part", blooms = Seq(VersionedLake.BloomSpec("id")))
+    VersionedLake.append(batch, never, "part")
+    def shape(l: String) = {
+      val m = VersionedLake.loadManifest(l, 2)
+      (m.schemaJson, m.blooms, m.entries.map(e => (e.partition, e.rows, e.colStats,
+        e.strStats, e.nullCounts,
+        e.colBlooms.map { case (c, b) => c -> b.words.toSeq })).sortBy(_.toString))
+    }
+    assert(shape(lake) == shape(never))
+    assert(VersionedLake.read(spark, lake).collect().map(_.toString).sorted.toSeq ==
+      VersionedLake.read(spark, never).collect().map(_.toString).sorted.toSeq)
+  }
 }
+
